@@ -207,6 +207,10 @@ def main() -> None:
         "canary_numpy_matmul_sec": canary_numpy,
         "canary_spark_warmup_sec": canary_warmup,
         "canary_text_shuffle_sec": canary_text_shuffle,
+        # the parallelism the timings ran at, so a core-count change is
+        # visible in the line itself
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     line = json.dumps({"queries": timings, **scalars}, separators=(",", ":"))
     print(line)

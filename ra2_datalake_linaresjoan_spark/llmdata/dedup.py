@@ -437,11 +437,19 @@ def incremental_dedup(
     other consumers) name its column here and the per-row
     ``doc_fingerprint`` regex chain is skipped — same anti-join/window
     semantics on identical values (the fingerprint is a deterministic
-    function of the text)."""
+    function of the text).  On this path ``text_col`` is unused, and the
+    result's ``fingerprint`` column is ``fingerprint_col``, so a batch
+    that already has a different ``fingerprint`` column raises
+    ``ValueError`` instead of having it silently overwritten."""
     from pyspark.sql import Window
 
     from ra2_datalake_linaresjoan_spark.llmdata.text_analysis import doc_fingerprint
 
+    if fingerprint_col not in (None, "fingerprint") and "fingerprint" in new_batch.columns:
+        raise ValueError(
+            f"new_batch already has a 'fingerprint' column; "
+            f"fingerprint_col={fingerprint_col!r} would overwrite it"
+        )
     if fingerprint_col is None:
         nb = new_batch.withColumn(
             "fingerprint", doc_fingerprint(F.col(text_col))

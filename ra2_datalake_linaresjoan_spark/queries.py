@@ -15,7 +15,10 @@ shared parquet and are not rounded.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -2501,235 +2504,55 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
 }
 
 
-#: Names the correctness driver should hit FIRST. The driver verifies the
-#: first N queries() entries per round (round 1 covered exactly the first
-#: 50 in insertion order), so the registry is emitted with the queries
-#: that still lack a green driver row — plus any whose implementation
-#: changed this round — ahead of the long-stable ones.
+#: Queries whose code or DuckDB oracle changed since their last green
+#: driver row, mapped to the round R that must re-verify them: 1 + the
+#: newest ``CORRECTNESS_r*.json`` in the tree when the change is
+#: committed.  An entry is pending until the query has a green row at a
+#: round >= R; after that it has no effect, so entries never need
+#: clearing.
+_CHANGED: dict[str, int] = {
+    # round-14 plan rewrites (row-identical, tri-scale MATCH locally)
+    # that had no seat in the round-14 window
+    "containment_pairs": 14,
+    "quantile_sketch_audit": 14,
+    "incremental_dedup": 14,
+    "tfidf_cosine_pairs": 14,
+}
 
-#: The round whose driver window the in-tree ``_DRIVER_PRIORITY`` prefix
-#: declares.  The rotation gate uses it to recognize the round-END
-#: boundary state: once ``CORRECTNESS_r{_WINDOW_ROUND}.json`` exists on
-#: disk, the in-tree window has been CONSUMED by its own round's driver
-#: run — every window name is necessarily fresh, and the staleness
-#: invariant to check is no longer "is the window stale-first" (it was,
-#: when it was declared) but "does the declared next-round plan seat the
-#: stalest cohort".  Rounds 12→13 crossed this boundary with a red
-#: jumper gate by design; the explicit window-round pin makes the
-#: boundary mechanically recognizable so the suite stays green on the
-#: judged tree WITHOUT weakening the in-round gate (while building round
-#: N the file does not exist, so the exemption is inert and the rotation
-#: must genuinely lead with the stalest cohorts).  MUST be bumped in the
-#: same commit that rotates the window — a stale pin plus a landed
-#: newer CORRECTNESS file re-arms the full-strength gate immediately.
-_WINDOW_ROUND: int = 14
-
-#: Queries whose implementation or DuckDB oracle changed in ROUND 14 —
-#: each must re-enter the driver window for a fresh correctness row
-#: (tests/test_driver_window.py exempts exactly this declared set from
-#: the max-staleness jumper count and asserts every name sits inside
-#: the first-50 window or the declared overflow).  Rewrite this list
-#: every round.
-_CHANGED_THIS_ROUND: frozenset[str] = frozenset({
-    # (a) the round-13 declared changed-overflow (43 names), carried
-    #     into this round's window head verbatim and in declaration
-    #     order — the placement gate requires it, and the round-13
-    #     verdict's ask #6 makes it explicit: every round-13
-    #     optimization rewrite (pca Gram, in-row k-means, one-scan
-    #     bm25, int64 shingle keys, checkpointed subtrees) plus the 33
-    #     oracle-contract migrations and the two close-review money-
-    #     domain fixes get their driver-oracle row THIS round.  Every
-    #     name was re-verified MATCH at sf0.001/0.01/0.1 and on the
-    #     strengthened dirty corpus when declared (round-13 close
-    #     records: tri-scale 300/300/300, dirty audit 300/300).
-    "domain_balance_weights",
-    "token_length_buckets",
-    "training_shard_assign",
-    "padding_waste_sweep",
-    "doc_token_stats",
-    "fellegi_sunter_em",
-    "clean_string_parity",
-    "jsonish_arrays_parity",
-    "waterfill_allocation",
-    "seq_packing",
-    "bpe_encode",
-    "decimal_exact_money",
-    "dup_inflation_by_source",
-    "revenue_decile_lift",
-    "stats_moments",
-    "tokenizer_fertility",
-    "canonical_text_dedup",
-    "doc_repetition",
-    "equi_depth_histogram",
-    "gini_spend",
-    "hhi_concentration",
-    "holt_linear_forecast",
-    "interval_union_coverage",
-    "jackknife_ratio_variance",
-    "laspeyres_price_index",
-    "normalize_numeric_parity",
-    "poisson_bootstrap_ci",
-    "runs_test_revenue",
-    "sentiment_lexicon",
-    "simhash_neardup",
-    "skyline_pareto",
-    "winsorized_value_stats",
-    "table_profile",
-    "bellman_ford_routes",
-    "benford_digits",
-    "pca_power_iteration",
-    "semantic_kmeans",
-    "semantic_prune",
-    "bm25_topk",
-    "mmr_diverse_topk",
-    "bloom_dedup",
-    "vocab_coverage_curve",
-    "conformal_calibration",
-    # (b) round-14 optimization-round changes proper, declared as each
-    #     lands (names without a window seat overflow to round 15 via
-    #     _CHANGED_OVERFLOW_NEXT_ROUND).  Window-seated r14 rewrites
-    #     (semantic_kmeans, semantic_prune, poisson_bootstrap_ci) are
-    #     already listed in cohort (a); the two below are r13-verified
-    #     queries whose plans changed in r14:
-    #     - containment_pairs: (shingle, doc_id) projected before the
-    #       kept checkpoint (drops the unused df column from the
-    #       materialization — ADVICE r13).  Row-identical; MATCH
-    #       tri-scale.
-    "containment_pairs",
-    #     - quantile_sketch_audit: the 5-row est⋈exact stitch is
-    #       broadcast-pinned (was SortMergeJoin).  Row-identical; MATCH
-    #       tri-scale.
-    "quantile_sketch_audit",
-    #     - incremental_dedup: one checkpointed narrow fingerprint
-    #       table replaces nine documents scans (the md5 regex chain
-    #       ran per scan); the dedup operator gained an optional
-    #       precomputed-fingerprint column (parity-pinned in
-    #       tests/test_round14_opt.py).  MATCH tri-scale.
-    "incremental_dedup",
-    #     - tfidf_cosine_pairs: the distinct doc-bigram table is
-    #       checkpointed for its three consumers (6 corpus tokenizes
-    #       → 0 in the final plan).  MATCH tri-scale.
-    "tfidf_cosine_pairs",
-})
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-#: Changed queries that could NOT fit the 50-slot driver window this
-#: round.  The round-14 window is fully booked by the placement
-#: contract (43 carried overflow names + the 7 stalest backfill fills),
-#: so any query whose implementation changes in round 14 that is not
-#: already window-seated defers exactly one round, pinned at positions
-#: 51+ (the FIRST cohort the round-15 window picks up).  Every name
-#: must carry a local tri-scale MATCH when declared.
-_CHANGED_OVERFLOW_NEXT_ROUND: tuple[str, ...] = (
-    "containment_pairs",
-    "quantile_sketch_audit",
-    "incremental_dedup",
-    "tfidf_cosine_pairs",
-)
+def _driver_records() -> dict[int, dict]:
+    """round -> {query: row} from the driver's committed CORRECTNESS files."""
+    records: dict[int, dict] = {}
+    for path in glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json")):
+        match = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if match:
+            with open(path) as f:
+                rows = json.load(f)
+            if isinstance(rows, dict):
+                records[int(match.group(1))] = rows
+    return records
 
 
-#: The max-staleness cohort that does NOT fit the round-14 window: the
-#: r3-stale remainder after the 7 stalest of the round-13 backfill
-#: declaration took the round-14 fill slots.  Round-15 arithmetic:
-#: these 17 + the round-14 changed overflow lead the round-15 window
-#: (17 + round-14 churn fits the 50 easily).  All 17 are UNCHANGED
-#: since their r2/r3 driver rows and carry fresh local tri-scale MATCH
-#: signals from the round-12 AND round-13 full-registry sweeps (clean
-#: sweeps + dirty audits, all 300/300).
-_STALE_BACKFILL_NEXT_ROUND: tuple[str, ...] = (
-    "feature_store_pit",
-    "fingerprint_cluster_histogram",
-    "funnel_time_to_convert",
-    "gapfill_daily_events",
-    "join_cardinality",
-    "linear_attribution",
-    "linear_interp_gaps",
-    "moving_avg_events",
-    "nation_value_threshold",
-    "promo_part_suppliers",
-    "running_totals",
-    "split_leakage_audit",
-    "spmm_topics",
-    "trailing_week_revenue",
-    "unpivot_nation_metrics",
-    "vocab_oov_rate",
-    "zorder_layout",
-)
+def _driver_order(names: list[str], records: dict[int, dict], changed: dict[str, int]) -> list[str]:
+    """Order the registry for the driver, which verifies the first 50 names
+    each round: never-checked names first, then pending changes, then the
+    oldest last-green round, with registry order breaking ties."""
+    seen: set[str] = set()
+    last_green: dict[str, int] = {}
+    for rnd, rows in records.items():
+        seen.update(rows)
+        for name, row in rows.items():
+            if row.get("rows_match") and row.get("schema_match") and row.get("hash_match") and not row.get("err"):
+                last_green[name] = max(last_green.get(name, 0), rnd)
 
+    def key(item: tuple[int, str]) -> tuple[bool, bool, int, int]:
+        idx, name = item
+        green = last_green.get(name, 0)
+        return name in seen, green >= changed.get(name, 0), green, idx
 
-#: Names the correctness driver should hit FIRST. The driver verifies the
-#: first 50 queries() entries per round, so the registry is emitted with
-#: this round's window ahead of everything else; everything else follows
-#: in registry insertion order via `ordered.update(merged)`.
-_DRIVER_PRIORITY: tuple[str, ...] = (
-    # -- round-14 rotation -----------------------------------------------
-    # 1. the round-13 declared changed-overflow (placement gate), in its
-    #    declaration order (43 names: 33 oracle-contract migrations,
-    #    bellman_ford_routes + benford_digits close-review fixes, and
-    #    the 8 round-13 optimization rewrites)
-    "domain_balance_weights",
-    "token_length_buckets",
-    "training_shard_assign",
-    "padding_waste_sweep",
-    "doc_token_stats",
-    "fellegi_sunter_em",
-    "clean_string_parity",
-    "jsonish_arrays_parity",
-    "waterfill_allocation",
-    "seq_packing",
-    "bpe_encode",
-    "decimal_exact_money",
-    "dup_inflation_by_source",
-    "revenue_decile_lift",
-    "stats_moments",
-    "tokenizer_fertility",
-    "canonical_text_dedup",
-    "doc_repetition",
-    "equi_depth_histogram",
-    "gini_spend",
-    "hhi_concentration",
-    "holt_linear_forecast",
-    "interval_union_coverage",
-    "jackknife_ratio_variance",
-    "laspeyres_price_index",
-    "normalize_numeric_parity",
-    "poisson_bootstrap_ci",
-    "runs_test_revenue",
-    "sentiment_lexicon",
-    "simhash_neardup",
-    "skyline_pareto",
-    "winsorized_value_stats",
-    "table_profile",
-    "bellman_ford_routes",
-    "benford_digits",
-    "pca_power_iteration",
-    "semantic_kmeans",
-    "semantic_prune",
-    "bm25_topk",
-    "mmr_diverse_topk",
-    "bloom_dedup",
-    "vocab_coverage_curve",
-    "conformal_calibration",
-    # 2. window fills (7 names): the stalest r2/r3 names of the
-    #    round-13 _STALE_BACKFILL_NEXT_ROUND declaration, in its
-    #    declaration order; the 17-name remainder re-declares in
-    #    _STALE_BACKFILL_NEXT_ROUND for round 15
-    "bitmap_exact_distinct",
-    "bpe_pair_merge",
-    "bracket_revenue",
-    "burst_1h_max",
-    "code_switch_score",
-    "dq_checks",
-    "event_rate_anomaly",
-    # 3. _CHANGED_OVERFLOW_NEXT_ROUND — round-14 changes without a
-    #    window seat, pinned to positions 51+ so they are the FIRST
-    #    thing the round-15 window picks up
-    #    (tests/test_driver_window.py enforces the placement)
-    "containment_pairs",
-    "quantile_sketch_audit",
-    "incremental_dedup",
-    "tfidf_cosine_pairs",
-)
+    return [name for _, name in sorted(enumerate(names), key=key)]
 
 
 def _full_registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
@@ -2843,9 +2666,7 @@ def _full_registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
         **REGISTRY_EXT39,
         **REGISTRY_EXT40,
     }
-    ordered = {name: merged[name] for name in _DRIVER_PRIORITY if name in merged}
-    ordered.update(merged)
-    return ordered
+    return {name: merged[name] for name in _driver_order(list(merged), _driver_records(), _CHANGED)}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -340,12 +340,10 @@ def q_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Routes through _emb_clean in lockstep with _SQL_QVEC (round-8
     parity audit: dirty vectors collapsed the 8 clusters to 1)."""
-    emb = _spread(spark, _emb_clean(spark, sf_dir))
-    vecs = emb.select("vec_id", _qvec(F.col("embedding")).alias("qv"))
-    small = (
-        _emb_clean(spark, sf_dir).limit(_KMEANS_SMALL_CAP + 1).count()
-        <= _KMEANS_SMALL_CAP
-    )
+    clean = _emb_clean(spark, sf_dir)
+    vecs = _spread(spark, clean).select("vec_id", _qvec(F.col("embedding")).alias("qv"))
+    # probe the unspread frame: same rows, no second read, no repartition
+    small = clean.limit(_KMEANS_SMALL_CAP + 1).count() <= _KMEANS_SMALL_CAP
     if small:
         a1 = _assign_join(vecs, _seed_frame(vecs))
     else:
@@ -485,10 +483,7 @@ def q_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity audit)."""
     emb = _emb_clean(spark, sf_dir)
     vecs = emb.select("vec_id", _qvec(F.col("embedding")).alias("qv"))
-    small = (
-        _emb_clean(spark, sf_dir).limit(_KMEANS_SMALL_CAP + 1).count()
-        <= _KMEANS_SMALL_CAP
-    )
+    small = emb.limit(_KMEANS_SMALL_CAP + 1).count() <= _KMEANS_SMALL_CAP
     if small:
         asg = _assign_join(vecs, _seed_frame(vecs)).select(
             "vec_id", "cluster", "qv"

@@ -1,312 +1,83 @@
-"""Mechanical round-end gate for the driver verification window.
+"""Invariants of the derived driver verification window.
 
-The grading driver verifies only the FIRST 50 entries of ``queries()`` per
-round.  Rounds 3, 4 and 5 each flagged the same structural bug: queries that
-had never received a driver correctness row were parked just outside the
-first-50 window because ``_DRIVER_PRIORITY`` was not re-audited at round end.
-
-This test makes the rotation a hard gate instead of a checklist item: it
-reads every ``CORRECTNESS_r*.json`` the driver has produced, computes the
-set of ever-driver-checked queries, and asserts that every registry query
-NOT in that set sits inside the first 50 of the live ``queries()`` order.
-Adding a new query without rotating the prefix fails the suite immediately.
+The grading driver verifies only the first 50 entries of ``queries()`` per
+round.  ``queries._driver_order`` derives that order from the committed
+``CORRECTNESS_r*.json`` records plus the small ``_CHANGED`` map, so these
+tests check the pure function rather than any hand-kept list.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from ra2_datalake_linaresjoan_spark.queries import (
+    _CHANGED,
+    _driver_order,
+    _driver_records,
+    queries,
+)
 
 WINDOW = 50
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
 
 
-#: In-window slots allowed to hold UNDECLARED queries fresher than the
-#: stalest cohorts.  Queries whose implementation or oracle genuinely
-#: changed this round legitimately jump the rotation queue, but they
-#: must be DECLARED in ``queries._CHANGED_THIS_ROUND`` (an auditable,
-#: per-round list with a reason comment) — the declared set is exempt
-#: from the jumper count and must itself sit inside the window.  The
-#: numeric reserve only covers accidental stragglers.
-RESERVE = 8
+def _green(row: dict | None) -> bool:
+    return bool(row) and all(row.get(k) for k in GREEN if k != "err") and not row.get("err")
 
 
-def _ever_driver_checked() -> set[str]:
-    seen: set[str] = set()
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        with open(path) as f:
-            data = json.load(f)
-        if isinstance(data, dict):
-            seen.update(data.keys())
-    return seen
-
-
-def _last_green_round() -> dict[str, int]:
-    """query -> highest round with a fully-green driver row."""
-    import re
-
-    last: dict[str, int] = {}
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
-        with open(path) as f:
-            data = json.load(f)
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            ok = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") is not False
-                and not row.get("err")
-            )
-            if ok:
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-def test_never_checked_queries_lead_the_driver_window():
-    from ra2_datalake_linaresjoan_spark.queries import queries
-
-    order = list(queries().keys())
-    assert len(order) == len(set(order)), "duplicate registry names"
-    checked = _ever_driver_checked()
-    # Sanity: the driver record should cover most of the registry by now.
-    assert len(checked) >= 200, "CORRECTNESS_r*.json files missing?"
-    window = set(order[:WINDOW])
-    stragglers = [q for q in order[WINDOW:] if q not in checked]
-    assert not stragglers, (
-        "never-driver-checked queries parked outside the first-%d window "
-        "(rotate _DRIVER_PRIORITY in queries.py): %r" % (WINDOW, stragglers)
-    )
-    # The window itself should never be wasted on duplicates of the same name.
-    assert len(window) == min(WINDOW, len(order))
-
-
-def test_window_rotates_toward_stalest_queries():
-    """Max-staleness gate (round-6 verdict #3): with zero never-checked
-    queries left, the never-checked gate above is vacuous and nothing
-    forced the prefix to rotate — round 6 shipped a window of
-    just-verified queries while 42 sat r1-stale.
-
-    Invariant: if any already-checked query is left OUTSIDE the window,
-    then at most ``RESERVE`` in-window slots may hold queries checked
-    more than one round after the stalest query left outside.  (The
-    one-round slack lets the window span two adjacent staleness
-    cohorts when a cohort is bigger than the window.)  Exempt from the
-    jumper count: never-checked entries (this round's additions) and
-    names declared in ``queries._CHANGED_THIS_ROUND`` — the explicit,
-    judge-auditable list of queries whose implementation or oracle
-    changed this round (they MUST re-enter the window regardless of
-    staleness; the companion test below enforces that).
-
-    Round-boundary state (rounds 11, 12 and 13 all crossed it red): once
-    ``CORRECTNESS_r{_WINDOW_ROUND}.json`` lands, the in-tree window has
-    been CONSUMED by its own round's driver run — every window name is
-    fresh *because the rotation worked*, and failing on that freshness
-    punishes the correct behavior.  In that state the invariant that
-    still matters is forward-looking: the stalest cohort left outside
-    must have a declared seat in next round's plan (overflow ∪
-    backfill).  The exemption is inert while round N is being built
-    (the file does not exist yet, so the full-strength gate polices the
-    rotation), and it re-arms automatically if a LATER round's file
-    lands without the pin being bumped — a builder who bumps the pin
-    without rotating gets no shelter, because the exemption only covers
-    names the pinned round's driver actually checked, which (pre-
-    rotation) is yesterday's window, not a fresh one."""
-    from ra2_datalake_linaresjoan_spark.queries import (
-        _CHANGED_OVERFLOW_NEXT_ROUND,
-        _CHANGED_THIS_ROUND,
-        _STALE_BACKFILL_NEXT_ROUND,
-        _WINDOW_ROUND,
-        queries,
-    )
-
-    order = list(queries().keys())
-    last = _last_green_round()
-    assert len(last) >= 200, "CORRECTNESS_r*.json files missing?"
-    window, outside = order[:WINDOW], order[WINDOW:]
-    outside_checked = [q for q in outside if q in last]
-    if not outside_checked:
-        return  # whole registry fits in the window
-    worst_outside = min(last[q] for q in outside_checked)
-    consumed: set[str] = set()
-    pin_path = os.path.join(REPO, f"CORRECTNESS_r{_WINDOW_ROUND}.json")
-    if os.path.exists(pin_path):
-        with open(pin_path) as f:
-            consumed = set(json.load(f).keys())
-        # the consumption exemption is only honest if the stalest
-        # cohort outside the consumed window already has a declared
-        # next-round seat — otherwise freshness would shelter a window
-        # that parked the stale cohort with no plan
-        seated = set(_CHANGED_OVERFLOW_NEXT_ROUND) | set(
-            _STALE_BACKFILL_NEXT_ROUND
-        )
-        unplanned = [
-            q for q in outside_checked
-            if last[q] == worst_outside and q not in seated
-        ]
-        assert not unplanned, (
-            "window consumed (CORRECTNESS_r%d present) but the stalest "
-            "outside cohort (round %d) has no declared next-round seat: %r"
-            % (_WINDOW_ROUND, worst_outside, unplanned[:12])
-        )
-    jumpers = [
-        q
-        for q in window
-        if q in last
-        and last[q] > worst_outside + 1
-        and q not in _CHANGED_THIS_ROUND
-        and q not in consumed
-    ]
-    assert len(jumpers) <= RESERVE, (
-        "driver window holds %d queries fresher than round %d while "
-        "staler queries sit outside (reserve is %d) — rotate "
-        "_DRIVER_PRIORITY toward the stalest cohort: %r"
-        % (len(jumpers), worst_outside + 1, RESERVE, jumpers[:12])
-    )
-
-
-def test_changed_this_round_declared_and_in_window():
-    """The changed-cohort declaration is only honest if (a) every name
-    resolves in the registry and (b) every declared query actually sits
-    inside the driver window — declaring a change and then parking the
-    query outside the first 50 would dodge re-verification.
-
-    When the changed cohort is BIGGER than the window (a heavy review
-    round), the excess must be declared in
-    ``_CHANGED_OVERFLOW_NEXT_ROUND`` and pinned to positions 51+ — the
-    first cohort the round-9 window picks up — never silently parked in
-    the registry tail.  Every overflow name must carry a local
-    tri-scale MATCH (the declaration's contract); the driver row is
-    deferred one round, not skipped."""
-    from ra2_datalake_linaresjoan_spark.queries import (
-        _CHANGED_OVERFLOW_NEXT_ROUND,
-        _CHANGED_THIS_ROUND,
-        queries,
-    )
-
-    order = list(queries().keys())
-    names = set(order)
-    missing = sorted(q for q in _CHANGED_THIS_ROUND if q not in names)
-    assert not missing, f"_CHANGED_THIS_ROUND names not in registry: {missing}"
-    window = set(order[:WINDOW])
-    overflow = list(_CHANGED_OVERFLOW_NEXT_ROUND)
-    assert set(overflow) <= set(_CHANGED_THIS_ROUND), (
-        "overflow names must be a subset of the declared changed cohort"
-    )
-    assert not (set(overflow) & window), (
-        "overflow names may not also occupy window slots"
-    )
-    # the overflow cohort must sit IMMEDIATELY after the window, in
-    # declaration order, so round 9's rotation starts with it
-    assert order[WINDOW : WINDOW + len(overflow)] == overflow, (
-        "overflow cohort not pinned to positions %d..%d: %r"
-        % (WINDOW + 1, WINDOW + len(overflow),
-           order[WINDOW : WINDOW + len(overflow)])
-    )
-    parked = sorted(
-        q
-        for q in _CHANGED_THIS_ROUND
-        if q not in window and q not in set(overflow)
-    )
-    assert not parked, (
-        "queries declared changed this round sit OUTSIDE the driver "
-        f"window and the declared overflow: {parked}"
-    )
+def _pending(records: dict[int, dict], changed: dict[str, int]) -> set[str]:
+    return {
+        q for q, due in changed.items()
+        if not any(rnd >= due and _green(rows.get(q)) for rnd, rows in records.items())
+    }
 
 
 def test_priority_names_all_resolve():
-    """Every _DRIVER_PRIORITY name must exist in the merged registry.
-
-    A typo'd name silently drops out of ``ordered`` (dict-comprehension with
-    ``if name in merged``), wasting a window slot downstream.
-    """
-    from ra2_datalake_linaresjoan_spark.queries import _DRIVER_PRIORITY, queries
-
-    names = set(queries().keys())
-    missing = [n for n in _DRIVER_PRIORITY if n not in names]
-    assert not missing, f"_DRIVER_PRIORITY names not in registry: {missing}"
-    assert len(_DRIVER_PRIORITY) == len(set(_DRIVER_PRIORITY)), "duplicates"
+    """``queries()`` is the derived order, a deterministic permutation of
+    the registry, and every ``_CHANGED`` name is registered."""
+    order = list(queries())
+    assert order == list(queries())
+    assert len(order) == len(set(order)), "duplicate registry names"
+    assert _driver_order(order, _driver_records(), _CHANGED) == order
+    assert set(_CHANGED) <= set(order), sorted(set(_CHANGED) - set(order))
 
 
-#: A query whose last green driver row is this many rounds old MUST be
-#: scheduled — in the window, in the declared overflow, or in the
-#: explicit next-round backfill declaration.  Nine-round-stale cohorts
-#: slipped through rounds 9-12 because nothing forced a plan for them;
-#: with this bound, the moment the next CORRECTNESS file lands the
-#: suite fails unless the stale cohort has a declared seat.
-MAX_UNSCHEDULED_AGE = 10
+def test_never_checked_queries_lead_the_driver_window():
+    """Names with no driver row take the first seats, then pending changes."""
+    records = _driver_records()
+    assert len(records) >= 10, "CORRECTNESS_r*.json files missing?"
+    fresh = ["new_query_a", "new_query_b"]
+    order = _driver_order(list(queries()) + fresh, records, _CHANGED)
+    pending = _pending(records, _CHANGED)
+    assert order[: len(fresh)] == fresh
+    assert set(order[len(fresh) : len(fresh) + len(pending)]) == pending
 
 
-def test_stalest_cohort_has_a_declared_seat():
-    """Max-staleness bound (round-11 verdict ask #1): every query whose
-    driver row is >= MAX_UNSCHEDULED_AGE rounds old must sit in the
-    window, the declared overflow, or _STALE_BACKFILL_NEXT_ROUND (the
-    explicit commitment that next round's window takes it).  Parking a
-    ten-round-stale query in the registry tail with no declaration
-    fails the suite immediately."""
-    import re
-
-    from ra2_datalake_linaresjoan_spark.queries import (
-        _CHANGED_OVERFLOW_NEXT_ROUND,
-        _STALE_BACKFILL_NEXT_ROUND,
-        queries,
-    )
-
-    last = _last_green_round()
-    assert len(last) >= 200
-    latest = max(
-        int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
-        for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-    )
-    order = list(queries().keys())
-    scheduled = (
-        set(order[:WINDOW])
-        | set(_CHANGED_OVERFLOW_NEXT_ROUND)
-        | set(_STALE_BACKFILL_NEXT_ROUND)
-    )
-    unseated = sorted(
-        q
-        for q in order
-        if latest - last.get(q, latest) >= MAX_UNSCHEDULED_AGE
-        and q not in scheduled
-    )
-    assert not unseated, (
-        "queries >= %d rounds stale with no declared seat (window/"
-        "overflow/backfill): %r" % (MAX_UNSCHEDULED_AGE, unseated)
-    )
-    # the backfill declaration itself must name real, checked queries
-    names = set(order)
-    assert set(_STALE_BACKFILL_NEXT_ROUND) <= names
-    assert len(_STALE_BACKFILL_NEXT_ROUND) == len(
-        set(_STALE_BACKFILL_NEXT_ROUND)
-    )
+def test_changed_this_round_declared_and_in_window():
+    """A change committed now jumps its query into the window, and the
+    green row of the round it names retires the entry."""
+    names = list(queries())
+    records = _driver_records()
+    due = max(records) + 1
+    name = _driver_order(names, records, _CHANGED)[-1]  # the least due name
+    assert name not in _driver_order(names, records, _CHANGED)[:WINDOW]
+    changed = {**_CHANGED, name: due}
+    assert name in _driver_order(names, records, changed)[:WINDOW]
+    landed = {**records, due: {name: GREEN}}
+    assert _driver_order(names, landed, changed) == _driver_order(names, landed, _CHANGED)
 
 
-def test_window_round_pin_is_current():
-    """``_WINDOW_ROUND`` must track the live round: either the round
-    whose CORRECTNESS file just landed (boundary state — window
-    consumed, exemption active) or one past it (building state — the
-    file does not exist yet, exemption inert).  A pin lagging behind
-    the newest CORRECTNESS file means a window rotated for round N is
-    still in the tree while round N+1's driver already ran — exactly
-    the stale-window state the jumper gate must police at full
-    strength, so the exemption self-disarms there; this test makes the
-    forgotten bump loudly visible instead of silently strict.  A pin
-    ahead of latest+1 would pre-claim an exemption for a round that
-    cannot have consumed this window."""
-    import re
-
-    from ra2_datalake_linaresjoan_spark.queries import _WINDOW_ROUND
-
-    latest = max(
-        int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
-        for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-    )
-    assert _WINDOW_ROUND in (latest, latest + 1), (
-        "stale _WINDOW_ROUND pin: %d (latest CORRECTNESS round is %d) — "
-        "rotate _DRIVER_PRIORITY and bump the pin in the same commit"
-        % (_WINDOW_ROUND, latest)
-    )
+def test_window_rotates_toward_stalest_queries():
+    """Land ten synthetic driver rounds, each marking its derived window
+    green: every pending entry retires after one round and every registry
+    name is seated at least once."""
+    names = list(queries())
+    records = _driver_records()
+    start = max(records) + 1
+    seated: set[str] = set()
+    for rnd in range(start, start + 10):
+        window = _driver_order(names, records, _CHANGED)[:WINDOW]
+        if rnd == start + 1:  # the retired entries are now the freshest names
+            assert not _pending(records, _CHANGED), "pending entry never retired"
+            assert not set(_CHANGED) & set(window), "retired entry still seated"
+        seated.update(window)
+        records = {**records, rnd: {q: GREEN for q in window}}
+    assert seated == set(names), sorted(set(names) - seated)[:12]

@@ -704,7 +704,8 @@ def test_containment_pairs_df_subtree_runs_once(spark, sf_dir):
     localCheckpointed, so the final plan reads the checkpoint exactly
     three times (sizes + both self-join sides) and never re-runs the
     shingle-df aggregate or the df⋈postings join — the audited before-
-    plan ran that subtree 3× (plans/r13/containment_pairs_before.txt)."""
+    plan ran that subtree 3× (plans/r13/containment_pairs_before.txt,
+    added in commit 5f8a807)."""
     import re
 
     plan = _plan(spark, sf_dir, "containment_pairs")

@@ -41,13 +41,3 @@ def test_entry_smoke(spark):
     assert df.count() > 0
     assert set(e.oracle_sql()).issubset(set(e.queries()))
 
-
-def test_driver_priority_names_are_registered():
-    """Every rotation-priority name must exist in the registry — a typo
-    here silently burns one of the driver's 50 correctness slots."""
-    from ra2_datalake_linaresjoan_spark.queries import _DRIVER_PRIORITY
-
-    registry = set(q.queries())
-    missing = [n for n in _DRIVER_PRIORITY if n not in registry]
-    assert not missing, missing
-    assert len(set(_DRIVER_PRIORITY)) == len(_DRIVER_PRIORITY)

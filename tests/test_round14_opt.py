@@ -15,13 +15,15 @@ them.
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark import queries as q
 
 
-def _plan(spark, sf_dir, name: str) -> str:
-    df = q.queries()[name](spark, sf_dir)
+def _explain(spark, df) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -29,22 +31,43 @@ def _plan(spark, sf_dir, name: str) -> str:
     )
 
 
+def _plan(spark, sf_dir, name: str) -> str:
+    return _explain(spark, q.queries()[name](spark, sf_dir))
+
+
+def _logical_nodes(plan):
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _logical_nodes(children.apply(i))
+
+
 def test_poisson_fanout_is_flat_codegen_explode(spark, sf_dir):
     """The replicate fan-out explodes a plain sequence and computes the
     weight in flat projections: no `transform(` higher-order call may
     appear in the plan (interpreted per element), and the u16 uniform
-    must be materialized once — the LCG multiplier constant appears in
+    must be materialized once — the stage-1 LCG expression appears in
     ONE projection, not seven comparison branches."""
-    plan = _plan(spark, sf_dir, "poisson_bootstrap_ci")
+    from ra2_datalake_linaresjoan_spark.queries_ext27 import _PB_A, _PB_C, _PB_M32
+
+    df = q.queries()["poisson_bootstrap_ci"](spark, sf_dir)
+    plan = _explain(spark, df)
     assert "transform(" not in plan
     # the sequence literal constant-folds, so the Generate explodes a
-    # literal UnsafeArrayData — never a transform-built struct array
-    assert "Arguments: explode(org.apache.spark.sql.catalyst" in plan
-    # the two-step LCG runs twice per (row, replicate) — once per state
-    # step — never 7x: count occurrences of the stage-1 additive
-    # constant 12345 in the whole plan (tree + detail = 2 mentions of
-    # the one projection that computes it)
-    assert plan.count("12345") <= 4
+    # literal array — never a transform-built struct array
+    explodes = [
+        node.generator().child()
+        for node in _logical_nodes(df._jdf.queryExecution().optimizedPlan())
+        if node.nodeName() == "Generate" and node.generator().prettyName() == "explode"
+    ]
+    assert [(c.nodeName(), c.dataType().typeName()) for c in explodes] == [("Literal", "array")]
+    # the two-step LCG runs once per (row, replicate): the full stage-1
+    # expression is computed by exactly one projection
+    stage1 = re.compile(
+        rf"\(\(pmod\(o_orderkey#\d+L?, {_PB_M32}\) \* {_PB_A}\) "
+        rf"\+ \(cast\(b#\d+ as bigint\) \* {_PB_C}\)\) \+ 12345\)"
+    )
+    assert len(stage1.findall(plan)) == 1
 
 
 def test_incremental_dedup_fingerprint_col_parity(spark):
@@ -97,6 +120,11 @@ def test_incremental_dedup_fingerprint_col_parity(spark):
     assert a == b
     ids = {r[0] for r in a}
     assert ids == {1, 4, None, 5, 6}
+    # a batch whose own 'fingerprint' column differs from fingerprint_col
+    # is rejected rather than silently overwritten
+    stale = fb.withColumn("fingerprint", F.lit("stale"))
+    with pytest.raises(ValueError, match="fingerprint"):
+        incremental_dedup(stale, fc, "doc_id", "text", fingerprint_col="fp")
 
 
 def test_incremental_dedup_query_reads_fingerprint_checkpoint(
