@@ -41,3 +41,16 @@ def test_entry_smoke(spark):
     assert df.count() > 0
     assert set(e.oracle_sql()).issubset(set(e.queries()))
 
+
+
+def test_driver_priority_names_are_registered():
+    """Every hand-declared re-verification name must exist in the registry,
+    and the derived driver order must seat each name once — a typo here
+    silently burns one of the driver's 50 correctness slots."""
+    from ra2_datalake_linaresjoan_spark.queries import _CHANGED
+
+    order = list(q.queries())
+    registry = set(order)
+    missing = [n for n in _CHANGED if n not in registry]
+    assert not missing, missing
+    assert len(registry) == len(order)
