@@ -25,12 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark.llmdata.text_analysis import ascii_lower
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        return _events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from ra2_datalake_linaresjoan_spark.sources.readers import read_testdata as _t
 
 
 #: Lockstep WHERE fragment for the embeddings table, mirrored by
@@ -72,35 +67,6 @@ def _emb_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
             > 0
         )
     )
-
-
-def normalize_events_ts(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Normalize the events ``ts`` column to TIMESTAMP_LTZ whose
-    epoch-micros equal the stored wall-clock value interpreted as UTC —
-    the representation every downstream ``unix_micros``/window query
-    assumes, and the one DuckDB's naive-timestamp oracle reads. The
-    parquet physical type has varied across testdata generations (nanos
-    in early rounds, micros-NTZ now); this ONE function is the entire
-    variant dispatch, shared by the batch reader below AND the stream
-    reader (``streaming.windows.read_events_stream``) so a future format
-    change cannot make batch and stream silently diverge. Session tz is
-    pinned to UTC so the NTZ→LTZ cast is a bit-exact reinterpretation,
-    not a zone shift."""
-    ts_type = dict(df.dtypes).get("ts")
-    if ts_type == "bigint":  # nanos read as long
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif ts_type == "timestamp_ntz":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch events reader: nanosAsLong probe + the shared ts
-    normalization (see ``normalize_events_ts``)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return normalize_events_ts(spark, df)
 
 
 def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -2517,6 +2483,12 @@ _CHANGED: dict[str, int] = {
     "quantile_sketch_audit": 14,
     "incremental_dedup": 14,
     "tfidf_cosine_pairs": 14,
+    # declared-catalog change: oracle rewritten (row-identical at
+    # sf0.001/0.01) and the shared broadcast guard
+    "semantic_prune": 15,
+    "ngram_contamination": 15,
+    "bloom_join_prefilter": 15,
+    "join_reorder_advisor": 15,
 }
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

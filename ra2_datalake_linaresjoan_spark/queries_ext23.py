@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark.llmdata.text_analysis import ascii_words
-
+from ra2_datalake_linaresjoan_spark.operators.joins import maybe_broadcast
 from ra2_datalake_linaresjoan_spark.queries import _t
 
 
@@ -98,12 +98,7 @@ def q_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_eval = F.col("doc_id") % _NC_EVAL_MOD == 0
     eval_grams = grams.filter(is_eval).select("gram").distinct()
     train_grams = grams.filter(~is_eval)
-    # Size guard: capped count — the probe job stops at CAP+1 rows, it
-    # never pays for an exact count of a huge gram set.
-    small = (
-        eval_grams.limit(_NC_BROADCAST_CAP + 1).count() <= _NC_BROADCAST_CAP
-    )
-    eval_side = F.broadcast(eval_grams) if small else eval_grams
+    eval_side = maybe_broadcast(eval_grams, _NC_BROADCAST_CAP)
     # leftsemi keeps (doc_id, gram) of train grams present in the eval
     # set; both counts collapse from it in one aggregate.
     hits = train_grams.join(eval_side, "gram", "leftsemi")

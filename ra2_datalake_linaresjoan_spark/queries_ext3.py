@@ -547,9 +547,8 @@ def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's lead(ts) IS NULL would conflate a NULL-ts successor with
     end-of-history."""
     from ra2_datalake_linaresjoan_spark.operators.scd2 import scd2_history
-    from ra2_datalake_linaresjoan_spark.queries import _events
 
-    ev = _events(spark, sf_dir).where(
+    ev = _t(spark, sf_dir, "events").where(
         F.col("ts").isNotNull()
         & F.col("event_type").isNotNull()
         & F.col("event_id").isNotNull()

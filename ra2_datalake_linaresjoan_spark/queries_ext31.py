@@ -36,7 +36,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ra2_datalake_linaresjoan_spark.queries import _t, _events
+from ra2_datalake_linaresjoan_spark.queries import _t
 
 _SJ_SALTS = 16
 
@@ -58,7 +58,7 @@ def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of raising on the BIGINT cast (round-11 value-fuzz)
     from ra2_datalake_linaresjoan_spark.operators.filters import exact_cents
 
-    ev = _events(spark, sf_dir).select(
+    ev = _t(spark, sf_dir, "events").select(
         "user_id",
         F.coalesce(
             F.pmod(F.col("event_id"), F.lit(_SJ_SALTS)), F.lit(0)

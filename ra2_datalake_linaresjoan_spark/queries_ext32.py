@@ -32,27 +32,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ra2_datalake_linaresjoan_spark.queries import _t, _events
+from ra2_datalake_linaresjoan_spark.operators.joins import maybe_broadcast
+from ra2_datalake_linaresjoan_spark.queries import _t
 
 _IVM_DELTA_DAYS = 7
-
-#: Corpus-proportional side tables (customer key sets, segment slices)
-#: may only be broadcast when a capped-count probe proves them small —
-#: the ``queries_ext23._NC_BROADCAST_CAP`` convention.  Above the cap
-#: the join is left unhinted and AQE picks the strategy at runtime.
-_EXT32_BROADCAST_CAP = 1_000_000
-
-
-def _maybe_broadcast(df: DataFrame) -> DataFrame:
-    """Capped-count broadcast guard (round-6 verdict fix): stop the
-    probe job at CAP+1 rows — never pay an exact count of a huge side —
-    and only attach the broadcast hint when the side is provably
-    bounded.  The large path falls through unhinted so AQE/shuffle
-    handles linear-growth sides without executor OOM at 100x scale."""
-    small = (
-        df.limit(_EXT32_BROADCAST_CAP + 1).count() <= _EXT32_BROADCAST_CAP
-    )
-    return F.broadcast(df) if small else df
 
 
 def q_ivm_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -71,7 +54,7 @@ def q_ivm_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-11 value-fuzz)."""
     from ra2_datalake_linaresjoan_spark.operators.filters import exact_cents
 
-    ev = _events(spark, sf_dir).select(
+    ev = _t(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"),
         exact_cents("value").alias("cents"),
     )
@@ -277,7 +260,7 @@ def q_bloom_join_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join shuffles — which is the whole point of the Bloom prefilter:
     # the shuffle moves candidates, not the full fact table.
     matched = cands.join(
-        _maybe_broadcast(build.select("k", F.lit(1).alias("hit"))),
+        maybe_broadcast(build.select("k", F.lit(1).alias("hit"))),
         "k",
         "left",
     )
@@ -534,7 +517,7 @@ def q_join_reorder_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The customer key set grows linearly with the corpus — broadcast
     # only under the capped-count guard; nation is a fixed 25-row
     # dimension and stays an unconditional broadcast.
-    cust_keys = _maybe_broadcast(
+    cust_keys = maybe_broadcast(
         cust.select(F.col("c_custkey").alias("o_custkey"))
     )
     o_in_c = orders.join(cust_keys, "o_custkey", "left_semi").count()

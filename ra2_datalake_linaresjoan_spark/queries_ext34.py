@@ -46,7 +46,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ra2_datalake_linaresjoan_spark.queries import _events, _t
+from ra2_datalake_linaresjoan_spark.queries import _t
 
 # ---------------------------------------------------------------------------
 # schema_evolution_union — dynamic-schema batches re-unioned by name
@@ -64,7 +64,7 @@ def q_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     raising on the BIGINT cast (round-11 value-fuzz)."""
     from ra2_datalake_linaresjoan_spark.operators.filters import exact_cents
 
-    ev = _events(spark, sf_dir).select(
+    ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "event_type",

@@ -36,7 +36,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ra2_datalake_linaresjoan_spark.queries import _events, _t
+from ra2_datalake_linaresjoan_spark.queries import _t
 
 # ---------------------------------------------------------------------------
 # bucket_pruning_audit — 64-way hash-bucket point-lookup cost
@@ -275,7 +275,7 @@ def q_shuffle_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
     )
     events = profile(
-        _events(spark, sf_dir),
+        _t(spark, sf_dir, "events"),
         "events",
         8 * 4,  # event_id, ts, user_id, value
         "event_type",

@@ -31,7 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ra2_datalake_linaresjoan_spark.queries import _events
+from ra2_datalake_linaresjoan_spark.queries import _t
 
 # ---------------------------------------------------------------------------
 # content_fingerprint_audit — XOR-combinable table digests
@@ -64,7 +64,7 @@ def q_content_fingerprint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact_cents: a non-finite value digests as the NULL token 'n' in
     # both engines instead of raising on the BIGINT cast (round-11
     # value-fuzz)
-    ev = _events(spark, sf_dir).select(
+    ev = _t(spark, sf_dir, "events").select(
         row_digest_col(
             F.col("event_id"),
             F.col("event_type"),
@@ -159,7 +159,7 @@ def q_two_phase_agg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the ext37 discipline; 3 scans -> 2)."""
     from ra2_datalake_linaresjoan_spark.operators.filters import exact_cents
 
-    ev = _events(spark, sf_dir).select(
+    ev = _t(spark, sf_dir, "events").select(
         "user_id",
         (F.col("event_id") % _TP_SALTS).alias("salt"),
         exact_cents("value").alias("cents"),

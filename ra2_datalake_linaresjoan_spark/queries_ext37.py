@@ -32,7 +32,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ra2_datalake_linaresjoan_spark.queries import _events
+from ra2_datalake_linaresjoan_spark.queries import _t
 
 _QS_LO = 0.0
 _QS_HI = 500.0
@@ -58,7 +58,7 @@ def q_quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shared finite-population contract (round-11 value-fuzz)
     from ra2_datalake_linaresjoan_spark.operators.filters import finite_case
 
-    vals = finite_case(_events(spark, sf_dir), "value").select(
+    vals = finite_case(_t(spark, sf_dir, "events"), "value").select(
         F.col("value").alias("v")
     )
     # distinct-value rank table (value-domain-bounded, cents-grained);

@@ -36,7 +36,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ra2_datalake_linaresjoan_spark.queries import _events, _t
+from ra2_datalake_linaresjoan_spark.queries import _t
 
 # ---------------------------------------------------------------------------
 # ivfpq_ann_recall — full IVF-PQ retrieval vs the exact top-k
@@ -702,7 +702,7 @@ def q_quantile_drift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     vals = (
-        _events(spark, sf_dir)
+        _t(spark, sf_dir, "events")
         .where(F.col("value").isNotNull() & F.col("ts").isNotNull())
         .select(F.unix_micros("ts").alias("us"), "value")
     )

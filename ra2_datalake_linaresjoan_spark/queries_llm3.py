@@ -25,8 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark.llmdata.text_analysis import ascii_words
-
-# shared reader: routes `events` through the nanos-timestamp-safe helper
 from ra2_datalake_linaresjoan_spark.queries import EMB_CLEAN_SQL, _emb_clean, _t
 
 

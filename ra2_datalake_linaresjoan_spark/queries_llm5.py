@@ -564,15 +564,20 @@ WITH q AS ({_SQL_QVEC}
                               ORDER BY cos DESC, cluster ASC) AS rn
     FROM score
   ) WHERE rn = 1
+), cand AS MATERIALIZED (
+  -- same-cluster pairs first: left to the planner, the per-element
+  -- joins ran before the cluster filter and blew up at sf0.1
+  SELECT a.cluster, a.vec_id AS id_a, b.vec_id AS id_b
+  FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
 ), pairs AS (
-  SELECT a.cluster, b.vec_id AS id_b,
+  SELECT c.cluster, c.id_b,
          CAST(sum(ea.v * eb.v) AS DOUBLE)
            / (sqrt(CAST(sum(ea.v * ea.v) AS BIGINT))
               * sqrt(CAST(sum(eb.v * eb.v) AS BIGINT))) AS cos
-  FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-  JOIN qe ea ON ea.vec_id = a.vec_id
-  JOIN qe eb ON eb.vec_id = b.vec_id AND ea.pos = eb.pos
-  GROUP BY a.cluster, a.vec_id, b.vec_id
+  FROM cand c
+  JOIN qe ea ON ea.vec_id = c.id_a
+  JOIN qe eb ON eb.vec_id = c.id_b AND ea.pos = eb.pos
+  GROUP BY c.cluster, c.id_a, c.id_b
 ), pruned AS (
   SELECT cluster, CAST(count(DISTINCT id_b) AS BIGINT) AS n_pruned
   FROM pairs WHERE cos > {_PRUNE_TAU} GROUP BY cluster

@@ -13,19 +13,56 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: The driver's synthetic star-schema tables (TESTDATA.md).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+#: The driver's synthetic star-schema tables (TESTDATA.md), declared the
+#: way a Delta log carries a table's schema: reads skip the per-read
+#: footer-inference job and an off-contract file fails instead of drifting.
+#: Every type is the one footer inference gives, except ``events.ts``: its
+#: parquet column is timezone-naive micros, declared TIMESTAMP so Spark
+#: reads it directly as the UTC instant every window query works on.
+TESTDATA_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE,"
+        " c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING,"
+        " p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,"
+        " o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT,"
+        " l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE,"
+        " l_tax DOUBLE, l_returnflag STRING, l_linestatus STRING,"
+        " l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING,"
+        " value DOUBLE, props STRING"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+TESTDATA_TABLES = tuple(TESTDATA_SCHEMAS)
+
+
+def pin_utc(spark: SparkSession) -> None:
+    """Pin the session timezone to UTC: date math on ``events.ts`` must be
+    UTC wall-clock like the DuckDB oracle's, and a plain session may not be."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read testdata table ``name`` from ``sf_dir`` with its declared schema."""
+    pin_utc(spark)
+    return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(
+        os.path.join(sf_dir, f"{name}.parquet")
+    )
 
 
 def _delta_available(spark: SparkSession) -> bool:
@@ -76,7 +113,6 @@ def load_tables(
     tables)."""
     out: dict[str, DataFrame] = {}
     for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            out[t] = spark.read.parquet(p)
+        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
+            out[t] = read_testdata(spark, sf_dir, t)
     return out

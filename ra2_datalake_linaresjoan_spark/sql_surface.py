@@ -10,11 +10,9 @@ validation SQL re-pointed at gold views (``validate_gold_sql``).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ra2_datalake_linaresjoan_spark.sources.readers import TESTDATA_TABLES
+from ra2_datalake_linaresjoan_spark.sources.readers import TESTDATA_TABLES, load_tables
 
 
 def register_views(
@@ -22,19 +20,10 @@ def register_views(
 ) -> list[str]:
     """Register the sf directory's parquet tables as temp views so users
     can ``spark.sql('SELECT ... FROM lineitem ...')`` directly."""
-    registered = []
-    for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            if t == "events":
-                from ra2_datalake_linaresjoan_spark.queries import _events
-
-                df = _events(spark, sf_dir)
-            else:
-                df = spark.read.parquet(p)
-            df.createOrReplaceTempView(t)
-            registered.append(t)
-    return registered
+    frames = load_tables(spark, sf_dir, tables)
+    for t, df in frames.items():
+        df.createOrReplaceTempView(t)
+    return list(frames)
 
 
 def register_gold_views(spark: SparkSession, gold: dict[str, DataFrame]) -> None:

@@ -17,45 +17,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-def _events_raw_schema(spark: SparkSession, path: str) -> T.StructType:
-    """A stream needs its schema up front; derive it from a one-off batch
-    scan of the same path so the stream tracks whatever physical timestamp
-    type the current testdata generation writes (nanos-as-long in early
-    rounds, micros-NTZ now). Forcing a LongType over a micros column would
-    silently read micros as if they were nanos — a 1000× precision loss.
-
-    DELIBERATE session-wide conf: ``nanosAsLong`` (and the UTC session
-    timezone set by the NTZ branch downstream) must stay active for the
-    stream's whole lifetime — a save/restore around this probe would
-    break the running stream's micro-batch reads. The engine convention
-    (verify SKILL.md, ``queries._events``) is that every reader goes
-    through these helpers, so the session-wide setting is the contract,
-    not a leak; a session mixing this engine with OTHER nano-timestamp
-    parquet readers must partition the work across sessions."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path).schema
+from ra2_datalake_linaresjoan_spark.sources.readers import TESTDATA_SCHEMAS, pin_utc
 
 
 def read_events_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """File-source stream over the events parquet directory/file, with
-    ``ts`` normalized to a UTC microsecond TIMESTAMP exactly like the batch
-    reader (``queries._events``) so stream and batch plans agree bit-for-bit."""
-    schema = _events_raw_schema(spark, path)
-    reader = spark.readStream.schema(schema).format("parquet")
+    """File-source stream over the events parquet directory/file, read with
+    the declared events schema (``sources.readers.TESTDATA_SCHEMAS``) like
+    the batch reader, so stream and batch plans agree bit-for-bit."""
+    pin_utc(spark)
+    reader = spark.readStream.schema(TESTDATA_SCHEMAS["events"]).format("parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.load(path)
-    # the SHARED variant dispatch (queries.normalize_events_ts): batch
-    # and stream normalize identically by construction — the two readers
-    # previously duplicated this branch and a format migration had to be
-    # fixed twice or the documented bit-for-bit parity silently broke
-    from ra2_datalake_linaresjoan_spark.queries import normalize_events_ts
-
-    return normalize_events_ts(spark, df)
+    return reader.load(path)
 
 
 def tumbling_agg(

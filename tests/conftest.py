@@ -24,3 +24,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def empty_sf(spark, tmp_path_factory):
+    """The sf0.001 tables with every row dropped: same files and schemas,
+    zero rows — the degenerate partition every 100-TB job eventually meets."""
+    d = tmp_path_factory.mktemp("empty_sf")
+    for f in os.listdir(SF_SMOKE):
+        if f.endswith(".parquet"):
+            df = spark.read.parquet(os.path.join(SF_SMOKE, f))
+            df.limit(0).write.mode("overwrite").parquet(str(d / f))
+    return str(d)

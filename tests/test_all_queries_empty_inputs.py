@@ -16,16 +16,6 @@ from ra2_datalake_linaresjoan_spark import queries as q
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def empty_sf(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("empty_sf_universal")
-    for f in os.listdir(SF):
-        if f.endswith(".parquet"):
-            df = spark.read.parquet(os.path.join(SF, f))
-            df.limit(0).write.mode("overwrite").parquet(str(d / f))
-    return str(d)
-
-
 def _force_evaluate(df) -> int:
     """collect(), NOT count(): Catalyst prunes every column under a
     count, so a count-based sweep never evaluates pure projections —

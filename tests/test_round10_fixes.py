@@ -179,7 +179,7 @@ def test_scd2_stream_sink_equals_batch_rebuild(spark, tmp_path):
     import time
 
     from ra2_datalake_linaresjoan_spark.operators.scd2 import scd2_history
-    from ra2_datalake_linaresjoan_spark.queries import _events
+    from ra2_datalake_linaresjoan_spark.sources.readers import read_testdata
     from ra2_datalake_linaresjoan_spark.streaming.scd2_sink import (
         scd2_stream_sink,
     )
@@ -190,7 +190,7 @@ def test_scd2_stream_sink_equals_batch_rebuild(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     cols = ["user_id", "event_type", "ts", "event_id"]
     ev = (
-        _events(spark, sf)
+        read_testdata(spark, sf, "events")
         .where(
             F.col("user_id").isNotNull()
             & F.col("event_type").isNotNull()

@@ -259,7 +259,7 @@ def test_scd2_two_interleaved_writers(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from ra2_datalake_linaresjoan_spark.operators.scd2 import scd2_history
-    from ra2_datalake_linaresjoan_spark.queries import _events
+    from ra2_datalake_linaresjoan_spark.sources.readers import read_testdata
     from ra2_datalake_linaresjoan_spark.streaming.scd2_sink import (
         scd2_stream_sink,
     )
@@ -270,7 +270,7 @@ def test_scd2_two_interleaved_writers(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     cols = ["user_id", "event_type", "ts", "event_id"]
     ev = (
-        _events(spark, sf)
+        read_testdata(spark, sf, "events")
         .where(
             F.col("user_id").isNotNull()
             & F.col("event_type").isNotNull()

@@ -247,10 +247,10 @@ def test_bellman_ford_survives_poisoned_price_lockstep(spark, tmp_path):
         [(1, 1), (2, 2)], "o_orderkey long, o_custkey long"
     ).write.parquet(os.path.join(sf, "orders.parquet"))
     spark.createDataFrame(
-        [(1, 0), (2, 1)], "s_suppkey long, s_nationkey long"
+        [(1, 0), (2, 1)], "s_suppkey long, s_nationkey int"
     ).write.parquet(os.path.join(sf, "supplier.parquet"))
     spark.createDataFrame(
-        [(1, 1), (2, 2)], "c_custkey long, c_nationkey long"
+        [(1, 1), (2, 2)], "c_custkey long, c_nationkey int"
     ).write.parquet(os.path.join(sf, "customer.parquet"))
 
     got = [
@@ -328,10 +328,10 @@ def test_hhi_excludes_zero_total_nations_lockstep(spark, tmp_path):
         "l_orderkey long, l_suppkey long, l_extendedprice double, l_discount double",
     ).write.parquet(os.path.join(sf, "lineitem.parquet"))
     spark.createDataFrame(
-        [(1, 10), (2, 20)], "s_suppkey long, s_nationkey long"
+        [(1, 10), (2, 20)], "s_suppkey long, s_nationkey int"
     ).write.parquet(os.path.join(sf, "supplier.parquet"))
     spark.createDataFrame(
-        [(10, "ALPHA"), (20, "BETA")], "n_nationkey long, n_name string"
+        [(10, "ALPHA"), (20, "BETA")], "n_nationkey int, n_name string"
     ).write.parquet(os.path.join(sf, "nation.parquet"))
 
     got = [tuple(r) for r in q_hhi_concentration(spark, sf).collect()]

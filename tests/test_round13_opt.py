@@ -55,7 +55,7 @@ def test_pca_irregular_corpus_routes_to_join_aggregate(spark, tmp_path):
         (3, None),
     ]
     spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
+        rows, "vec_id long, embedding array<float>"
     ).write.parquet(f"{d}/embeddings.parquet")
     from ra2_datalake_linaresjoan_spark.queries_llm6 import (
         q_pca_power_iteration,
@@ -79,7 +79,7 @@ def test_pca_regular_corpus_gram_path_excludes_null_ids(spark, tmp_path):
         (None, [9.0, 9.0] + [9.0] * 62),  # must contribute nothing
     ]
     spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
+        rows, "vec_id long, embedding array<float>"
     ).write.parquet(f"{d}/embeddings.parquet")
     from ra2_datalake_linaresjoan_spark.queries_llm6 import (
         q_pca_power_iteration,

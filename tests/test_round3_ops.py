@@ -43,9 +43,9 @@ def test_psi_zero_on_reference_day(spark):
 def test_ewma_bounded_by_daily_series(spark):
     """EWMA is a convex combination of daily means — it must lie within
     [min(v), max(v)] of its type's daily series."""
-    from ra2_datalake_linaresjoan_spark.queries import _events
+    from ra2_datalake_linaresjoan_spark.sources.readers import read_testdata
 
-    ev = _events(spark, SF)
+    ev = read_testdata(spark, SF, "events")
     daily = (
         ev.groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(F.avg("value").alias("v"))
@@ -61,9 +61,9 @@ def test_ewma_bounded_by_daily_series(spark):
 def test_attribution_totals_match_purchase_count(spark):
     """Every purchase is attributed exactly once (touch or
     'unattributed') — the as-of left join must be 1:1 on purchases."""
-    from ra2_datalake_linaresjoan_spark.queries import _events
+    from ra2_datalake_linaresjoan_spark.sources.readers import read_testdata
 
-    n_purchases = _events(spark, SF).filter(F.col("event_type") == "purchase").count()
+    n_purchases = read_testdata(spark, SF, "events").filter(F.col("event_type") == "purchase").count()
     rows = q.queries()["purchase_attribution"](spark, SF).collect()
     assert sum(r["n_purchases"] for r in rows) == n_purchases
 

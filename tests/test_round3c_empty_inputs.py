@@ -6,13 +6,9 @@ branch)."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from ra2_datalake_linaresjoan_spark import queries as q
-
-SF = "/root/testdata/sf0.001"
 
 NEW_QUERIES = [
     "ohlc_bars",
@@ -62,16 +58,6 @@ def test_contamination_empty_train_rate_is_zero(spark, empty_sf):
     row = q.queries()["contamination"](spark, empty_sf).collect()[0]
     assert row["n_train"] == 0
     assert row["contamination_rate"] == 0.0
-
-
-@pytest.fixture(scope="module")
-def empty_sf(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("empty_sf")
-    for f in os.listdir(SF):
-        if f.endswith(".parquet"):
-            df = spark.read.parquet(os.path.join(SF, f))
-            df.limit(0).write.mode("overwrite").parquet(str(d / f))
-    return str(d)
 
 
 @pytest.mark.parametrize("name", NEW_QUERIES)

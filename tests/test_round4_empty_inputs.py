@@ -5,13 +5,9 @@ structurally-identical EMPTY tables — the degenerate partition every
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from ra2_datalake_linaresjoan_spark import queries as q
-
-SF = "/root/testdata/sf0.001"
 
 ROUND4_QUERIES = [
     "bm25_topk",
@@ -51,16 +47,6 @@ ROUND4_QUERIES = [
     "ngram_entropy_rate",
     "inter_event_time_dist",
 ]
-
-
-@pytest.fixture(scope="module")
-def empty_sf(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("empty_sf_r4")
-    for f in os.listdir(SF):
-        if f.endswith(".parquet"):
-            df = spark.read.parquet(os.path.join(SF, f))
-            df.limit(0).write.mode("overwrite").parquet(str(d / f))
-    return str(d)
 
 
 @pytest.mark.parametrize("name", ROUND4_QUERIES)

@@ -2,14 +2,10 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark import queries as q
-
-SF = "/root/testdata/sf0.001"
 
 ROUND5_QUERIES = [
     "benford_digits",
@@ -56,16 +52,6 @@ ROUND5_QUERIES = [
     "hll_register_estimate",
     "bloom_membership_audit",
 ]
-
-
-@pytest.fixture(scope="module")
-def empty_sf(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("empty_sf_r5")
-    for f in os.listdir(SF):
-        if f.endswith(".parquet"):
-            df = spark.read.parquet(os.path.join(SF, f))
-            df.limit(0).write.mode("overwrite").parquet(str(d / f))
-    return str(d)
 
 
 @pytest.mark.parametrize("name", ROUND5_QUERIES)

@@ -49,15 +49,22 @@ def _logical(df) -> str:
 # ---------------------------------------------------------------------------
 
 
-def test_maybe_broadcast_cap_guard(spark, monkeypatch):
+def test_maybe_broadcast_cap_guard(spark):
     """Below the cap the side gets a broadcast hint; above it the frame
     is returned unhinted so AQE owns the join strategy."""
-    from ra2_datalake_linaresjoan_spark import queries_ext32 as m
+    from ra2_datalake_linaresjoan_spark.operators.joins import maybe_broadcast
 
     df = spark.range(100).toDF("k")
-    assert "hint" in _logical(m._maybe_broadcast(df))
-    monkeypatch.setattr(m, "_EXT32_BROADCAST_CAP", 10)
-    assert "hint" not in _logical(m._maybe_broadcast(df))
+    assert "hint" in _logical(maybe_broadcast(df))
+    assert "hint" not in _logical(maybe_broadcast(df, cap=10))
+
+
+def _force_large_path(monkeypatch, m) -> None:
+    """Route the module's broadcast guard through a zero cap, so every
+    guarded side takes the unhinted (shuffle) path."""
+    from ra2_datalake_linaresjoan_spark.operators import joins
+
+    monkeypatch.setattr(m, "maybe_broadcast", lambda df: joins.maybe_broadcast(df, cap=0))
 
 
 def test_bloom_prefilter_large_path_shuffles_and_matches(
@@ -69,7 +76,7 @@ def test_bloom_prefilter_large_path_shuffles_and_matches(
     from ra2_datalake_linaresjoan_spark import queries_ext32 as m
 
     small = m.q_bloom_join_prefilter(spark, SF_SMOKE).collect()
-    monkeypatch.setattr(m, "_EXT32_BROADCAST_CAP", 0)
+    _force_large_path(monkeypatch, m)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -88,7 +95,7 @@ def test_join_reorder_advisor_large_path_matches(spark, monkeypatch):
     from ra2_datalake_linaresjoan_spark import queries_ext32 as m
 
     small = m.q_join_reorder_advisor(spark, SF_SMOKE).collect()
-    monkeypatch.setattr(m, "_EXT32_BROADCAST_CAP", 0)
+    _force_large_path(monkeypatch, m)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -117,7 +124,7 @@ def cbo_sf(tmp_path_factory):
         pa.table(
             {
                 "c_custkey": pa.array([1, 1, 2, 2, 2, 3, 3], pa.int64()),
-                "c_nationkey": pa.array([1] * 7, pa.int64()),
+                "c_nationkey": pa.array([1] * 7, pa.int32()),
             }
         ),
         str(d / "customer.parquet"),
@@ -136,7 +143,7 @@ def cbo_sf(tmp_path_factory):
         str(d / "lineitem.parquet"),
     )
     pq.write_table(
-        pa.table({"n_nationkey": pa.array([1], pa.int64())}),
+        pa.table({"n_nationkey": pa.array([1], pa.int32())}),
         str(d / "nation.parquet"),
     )
     return str(d)

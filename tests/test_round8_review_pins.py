@@ -236,7 +236,8 @@ def fixdir2(spark, tmp_path_factory):
             Row(vec_id=4, embedding=_pad64([0.8, 0.3]), label=1),
             Row(vec_id=5, embedding=_pad64([0.7, 0.1]), label=1),
             Row(vec_id=6, embedding=_pad64([0.6, 0.2]), label=1),
-        ]
+        ],
+        "vec_id long, embedding array<float>, label int",
     )
     emb.write.parquet(str(d / "embeddings.parquet"))
     docs = spark.createDataFrame(

@@ -53,14 +53,14 @@ def test_emb_clean_rejects_ragged_vectors_on_both_engines(spark, tmp_path):
     from ra2_datalake_linaresjoan_spark.queries import EMB_CLEAN_SQL, _emb_clean
 
     rows = [
-        (1, [0.1] * 64, "a"),
-        (2, [0.2] * 16, "a"),      # ragged: DuckDB list_cosine raises on it
-        (3, None, "a"),
-        (4, [0.0] * 64, "a"),      # zero norm
-        (5, [0.3] * 63 + [None], "a"),  # interior NULL
+        (1, [0.1] * 64, 0),
+        (2, [0.2] * 16, 0),      # ragged: DuckDB list_cosine raises on it
+        (3, None, 0),
+        (4, [0.0] * 64, 0),      # zero norm
+        (5, [0.3] * 63 + [None], 0),  # interior NULL
     ]
     df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label string"
+        rows, "vec_id long, embedding array<float>, label int"
     )
     d = str(tmp_path / "emb")
     df.coalesce(1).write.parquet(d + "/embeddings.parquet")

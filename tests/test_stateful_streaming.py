@@ -32,10 +32,10 @@ def test_running_totals_match_batch(spark, events_dir):
     # last emitted row per user == running total after all data
     latest = {r["user_id"]: r for r in out.collect()}
 
-    from ra2_datalake_linaresjoan_spark.queries import _events
+    from ra2_datalake_linaresjoan_spark.sources.readers import read_testdata
 
     batch = (
-        _events(spark, SF)
+        read_testdata(spark, SF, "events")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -66,10 +66,10 @@ def test_running_totals_v2_match_batch(spark, events_dir):
     )
     latest = {r["user_id"]: r for r in out.collect()}
 
-    from ra2_datalake_linaresjoan_spark.queries import _events
+    from ra2_datalake_linaresjoan_spark.sources.readers import read_testdata
 
     batch = (
-        _events(spark, SF)
+        read_testdata(spark, SF, "events")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

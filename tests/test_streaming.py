@@ -117,7 +117,7 @@ def test_stream_stream_join_equals_batch(spark, events_dir):
     """Watermarked stream–stream interval join (click → purchase within
     30 min per user) must emit exactly the pairs the same join produces
     on bounded DataFrames."""
-    from ra2_datalake_linaresjoan_spark.queries import _events
+    from ra2_datalake_linaresjoan_spark.sources.readers import read_testdata
     from ra2_datalake_linaresjoan_spark.streaming.joins import (
         stream_stream_interval_join,
     )
@@ -132,7 +132,7 @@ def test_stream_stream_join_equals_batch(spark, events_dir):
     joined = stream_stream_interval_join(clicks, purchases)
     stream_out = run_to_memory(joined, "t_ssjoin", spark, output_mode="append")
 
-    ev = _events(spark, SF)
+    ev = read_testdata(spark, SF, "events")
     batch = stream_stream_interval_join(
         ev.filter(F.col("event_type") == "click"),
         ev.filter(F.col("event_type") == "purchase"),
@@ -168,7 +168,7 @@ def test_foreach_batch_merge_sink_idempotent(spark, events_dir, tmp_path):
     re-processing the same data (simulated redelivery with a fresh
     checkpoint) must leave the table unchanged — idempotence is what turns
     at-least-once delivery into exactly-once table state."""
-    from ra2_datalake_linaresjoan_spark.queries import _events
+    from ra2_datalake_linaresjoan_spark.sources.readers import read_testdata
     from ra2_datalake_linaresjoan_spark.streaming.foreach_sink import (
         stream_merge_sink,
     )
@@ -191,7 +191,7 @@ def test_foreach_batch_merge_sink_idempotent(spark, events_dir, tmp_path):
         qy.awaitTermination(120)
 
     run("cp1")
-    batch = totals(_events(spark, SF))
+    batch = totals(read_testdata(spark, SF, "events"))
     cols = ["user_id", "n_events", "total_value"]
     first = _rows(spark.read.parquet(out), cols)
     assert first == _rows(batch, cols)

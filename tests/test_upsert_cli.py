@@ -42,8 +42,8 @@ def test_cli_end_to_end(spark, tmp_path):
         [sys.executable, "-m", "ra2_datalake_linaresjoan_spark.cli",
          "--base", str(base), "--report", str(report)],
         capture_output=True, text=True, timeout=300,
-        env={**__import__("os").environ, "SPARK_GRAFT_CPUS": "4"},
-        cwd="/root/repo",
+        env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     doc = json.loads(report.read_text())
@@ -63,7 +63,7 @@ def test_sql_surface(spark, sf_dir):
     assert "lineitem" in registered and "events" in registered
     n = spark.sql("SELECT count(*) AS n FROM lineitem").collect()[0]["n"]
     assert n == spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    # events view must come pre-normalized (nanos -> usable timestamp)
+    # the events view reads ts with its declared TIMESTAMP type
     r = spark.sql("SELECT min(ts) AS t FROM events").collect()[0]
     assert r["t"].year == 2024
 

@@ -1,4 +1,4 @@
-"""Driver simulation: imports __spark_entry__ from /root/repo like the real
+"""Driver simulation: imports __spark_entry__ from this checkout like the real
 driver would — plain default SparkSession, no engine session helper.
 
 Round-3 hardening (lesson from CORRECTNESS_r02): the driver's value hash is
@@ -11,7 +11,7 @@ the only two oracles whose DuckDB result carried a HUGEINT/decimal128 column
      automatic failure even when the values compare equal as Python ints.
 """
 import sys, os
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 import duckdb
 
