@@ -44,66 +44,55 @@ def run_pipeline(
     markets: DataFrame,
     events: DataFrame,
     series: DataFrame,
-    gold_path: str | None = None,
-    silver_path: str | None = None,
+    silver_path: str,
+    gold_path: str,
 ) -> dict:
     """Silver → gold → validate → report over already-loaded bronze frames.
     Returns {"validation": ..., "volumetry": ..., "summary": [...]} and
     raises RuntimeError when integrity checks fail (the reference logs and
     continues; the engine fails loudly)."""
-    m = enrich_gaming_markets(gaming_market_filter(clean_markets(markets)))
-    ev, se = clean_events(events), clean_series(series)
+    silver = {
+        "markets": enrich_gaming_markets(gaming_market_filter(clean_markets(markets))),
+        "events": clean_events(events),
+        "series": clean_series(series),
+    }
 
     # the validator + volumetry + summary fire ~20 separate actions over
-    # these frames; without materialization each action would re-derive the
-    # whole silver lineage (a count() storm, SURVEY §7.4.7). The persisted
-    # path WRITES SILVER to parquet and re-reads it — the medallion's own
-    # silver layer doubles as the materialization, so downstream actions
-    # (volumetry, gaming_summary, gold build) never re-run the cleaning
-    # lineage; the in-memory path caches instead (released in the finally).
-    cached = []
-    if silver_path:
-        for name, df in (("markets", m), ("events", ev), ("series", se)):
-            df.write.mode("overwrite").parquet(
-                os.path.join(silver_path, name)
-            )
-        m = spark.read.parquet(os.path.join(silver_path, "markets"))
-        ev = spark.read.parquet(os.path.join(silver_path, "events"))
-        se = spark.read.parquet(os.path.join(silver_path, "series"))
-    elif not gold_path:
-        m = m.cache()
-        cached.append(m)
+    # these frames; each would re-derive the whole cleaning lineage (a
+    # count() storm, SURVEY §7.4.7). So every layer is written to the lake
+    # and read back, and the medallion's own silver and gold tables double
+    # as the materialization. Each read-back carries the schema of the
+    # frame just written, so no read fires a footer-inference job.
+    for name, df in silver.items():
+        df.write.mode("overwrite").parquet(os.path.join(silver_path, name))
+    silver = {
+        name: spark.read.schema(df.schema).parquet(os.path.join(silver_path, name))
+        for name, df in silver.items()
+    }
 
-    try:
-        gold = build_gold(spark, m, ev, se)
-        if gold_path:
-            write_gold(gold, gold_path)
-            gold = {
-                name: spark.read.parquet(os.path.join(gold_path, name)) for name in gold
-            }
-        else:
-            for df in gold.values():
-                cached.append(df.cache())
+    gold = build_gold(spark, silver["markets"], silver["events"], silver["series"])
+    write_gold(gold, gold_path)
+    gold = {
+        name: spark.read.schema(df.schema).parquet(os.path.join(gold_path, name))
+        for name, df in gold.items()
+    }
 
-        report = validate_gold(gold)
-        if not report.ok:
-            raise RuntimeError(f"gold integrity failed: {report.orphans}")
+    report = validate_gold(gold)
+    if not report.ok:
+        raise RuntimeError(f"gold integrity failed: {report.orphans}")
 
-        vol = volumetry_report(
-            {"markets": m, "events": ev, "series": se},
-            {
-                "markets_per_event": (
-                    gold["fact_mercado_evento_gaming"],
-                    "evento_id",
-                    "mercado_id",
-                ),
-                "events_per_tag": (gold["fact_evento_tag_gaming"], "tag_id", "evento_id"),
-            },
-        )
-        summary = [r.asDict() for r in gaming_summary(m).collect()]
-    finally:
-        for df in cached:
-            df.unpersist()
+    vol = volumetry_report(
+        silver,
+        {
+            "markets_per_event": (
+                gold["fact_mercado_evento_gaming"],
+                "evento_id",
+                "mercado_id",
+            ),
+            "events_per_tag": (gold["fact_evento_tag_gaming"], "tag_id", "evento_id"),
+        },
+    )
+    summary = [r.asDict() for r in gaming_summary(silver["markets"]).collect()]
     return {
         "validation": {
             "counts": report.counts,

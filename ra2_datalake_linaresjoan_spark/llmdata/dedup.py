@@ -21,9 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Mersenne prime modulus for the MinHash universal-hash family.
-_MERSENNE = (1 << 61) - 1
-
 
 def shingles(
     df: DataFrame,
@@ -113,28 +110,6 @@ def ngram_jaccard_pairs(
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def _minhash_signature(sh: DataFrame, id_col: str, num_hashes: int, seed: int) -> DataFrame:
-    """(id, shingle) → (id, sig: array<long>[num_hashes]).
-
-    Hash family: independently-salted xxhash64 per function — each salt is
-    an effectively independent permutation of the shingle universe. (An
-    affine a·x+b mod p family is NOT usable here: keeping the product
-    inside a 64-bit long means it never wraps the modulus, so it's
-    order-preserving and every "hash" would pick the same argmin.)
-    The per-hash min runs as num_hashes aggregate columns — one shuffle on
-    id, constant state per doc.
-    """
-    aggs = [
-        F.min(F.xxhash64("shingle", F.lit(seed), F.lit(i))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = sh.groupBy(id_col).agg(*aggs)
-    return sig.select(
-        F.col(id_col),
-        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"),
     )
 
 
@@ -244,33 +219,6 @@ def minhash_lsh_candidates(
             F.round(common / (F.size("_sh_a") + F.size("_sh_b") - common), 6).alias(
                 "jaccard"
             ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def verify_candidates_jaccard(
-    cand: DataFrame, sh: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs WITHOUT the all-pairs
-    shingle join: collect each doc's shingle set once (bounded by doc
-    length), join onto the candidate pairs, intersect per pair. Cost is
-    O(|candidates| · doc_len) — the true LSH scale path."""
-    sets = sh.groupBy(id_col).agg(F.collect_set("shingle").alias("_sh"))
-    sa = sets.select(F.col(id_col).alias("doc_a"), F.col("_sh").alias("_sh_a"))
-    sb = sets.select(F.col(id_col).alias("doc_b"), F.col("_sh").alias("_sh_b"))
-    common = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                common
-                / (F.size("_sh_a") + F.size("_sh_b") - common),
-                6,
-            ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )

@@ -11,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ra2_datalake_linaresjoan_spark.functions.json_utils import extract_ids
-
 
 def explode_bridge(
     df: DataFrame,
@@ -30,11 +28,3 @@ def explode_bridge(
     arr = F.col(array_col) if isinstance(array_col, str) else array_col
     pairs = df.select(F.col(left_id), F.explode(arr).alias(right_name))
     return pairs.distinct() if distinct else pairs
-
-
-def bridge_from_embedded_json(
-    df: DataFrame, left_id: str, json_col: str, right_name: str
-) -> DataFrame:
-    """Bridge straight from an embedded JSON-ish struct-array column:
-    "[{'id': 'E1', ...}]" → (left_id, right_name='E1') pairs (J8/J10)."""
-    return explode_bridge(df, left_id, extract_ids(F.col(json_col)), right_name)

@@ -67,9 +67,10 @@ def maybe_broadcast(df: DataFrame, cap: int = SEMI_BROADCAST_CAP) -> DataFrame:
 
 def anti_orphans(fact: DataFrame, dim: DataFrame, on: str | Sequence[str]) -> DataFrame:
     """Rows of ``fact`` with no match in ``dim`` (J1-J3 orphan detection,
-    reference validator_warehouse.py:108-162)."""
+    reference validator_warehouse.py:108-162). A left-anti join never
+    multiplies ``fact`` rows, so duplicate ``dim`` keys need no distinct."""
     on = [on] if isinstance(on, str) else list(on)
-    return fact.join(dim.select(*on).distinct(), on=on, how="left_anti")
+    return fact.join(dim.select(*on), on=on, how="left_anti")
 
 
 def fk_resolve(
@@ -89,9 +90,8 @@ def fk_resolve(
     deterministic) before the join: a dimension carrying duplicate
     natural keys (double-loaded, or one-row-per-SCD-version) would
     otherwise silently FAN OUT fact rows, multiplying downstream counts
-    (round-10 review; anti_orphans already guards the same way with
-    distinct). On a healthy unique-key dim the aggregate is a no-op
-    and the tiny frame still broadcasts."""
+    (round-10 review). On a healthy unique-key dim the aggregate is a
+    no-op and the tiny frame still broadcasts."""
     d = (
         dim.select(F.col(dim_key).alias("_fk_nat"), F.col(dim_id).alias(out_col))
         .groupBy("_fk_nat")

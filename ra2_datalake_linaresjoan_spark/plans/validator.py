@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark.operators.joins import anti_orphans
 
+#: The gold contract, declared once. Each dimension's primary key:
 _PK = {
     "dim_fecha": "fecha_id",
     "dim_videojuego": "videojuego_id",
@@ -29,6 +30,34 @@ _PK = {
     "dim_evento_gaming": "evento_id",
     "dim_tag_gaming": "tag_id",
     "dim_mercado_gaming": "mercado_id",
+}
+
+#: Each foreign key as (child table, parent dimension, nullable); the key
+#: column is the parent's PK. A NULL in a nullable FK is not an orphan
+#: (an event outside any series); a NULL anywhere else is.
+_FK = (
+    ("fact_evento_tag_gaming", "dim_evento_gaming", False),
+    ("fact_evento_tag_gaming", "dim_tag_gaming", False),
+    ("fact_mercado_evento_gaming", "dim_mercado_gaming", False),
+    ("fact_mercado_evento_gaming", "dim_evento_gaming", False),
+    ("fact_metricas_gaming", "dim_mercado_gaming", False),
+    ("fact_metricas_gaming", "dim_fecha", False),
+    ("dim_evento_gaming", "dim_serie_gaming", True),
+    ("dim_mercado_gaming", "dim_videojuego", False),
+)
+
+#: Descriptive statistics (validator_warehouse.py:166-248), per table;
+#: each rides in that table's count aggregate. Built lazily: a Column
+#: needs a running session.
+_STATS = {
+    "dim_evento_gaming": lambda: {
+        "eventos_activos": F.coalesce(F.sum(F.when(F.col("es_activo"), 1).otherwise(0)), F.lit(0)),
+        "categorias_distintas": F.countDistinct("categoria"),
+    },
+    "fact_metricas_gaming": lambda: {
+        "volumen_total": F.coalesce(F.sum("volumen_total"), F.lit(0.0)),
+        "liquidez_total": F.coalesce(F.sum("liquidez_total"), F.lit(0.0)),
+    },
 }
 
 
@@ -49,46 +78,26 @@ class ValidationReport:
 def validate_gold(gold: dict[str, DataFrame]) -> ValidationReport:
     report = ValidationReport()
 
-    # counts + PK uniqueness: ONE aggregate per table
+    # counts, PK uniqueness and statistics: ONE aggregate per table
     for name, df in gold.items():
         pk = _PK.get(name)
+        stats = _STATS.get(name, dict)()
         aggs = [F.count(F.lit(1)).alias("n")]
         if pk:
             aggs.append(F.countDistinct(pk).alias("nd"))
+        aggs += [expr.alias(stat) for stat, expr in stats.items()]
         row = df.agg(*aggs).collect()[0]
         report.counts[name] = row["n"]
         if pk:
             report.uniqueness[name] = row["n"] == row["nd"]
+        for stat in stats:
+            report.stats[stat] = float(row[stat])
 
     # referential integrity: orphan counts (validator_warehouse.py:108-162)
-    checks = [
-        ("fact_evento_tag_gaming.evento_id", "fact_evento_tag_gaming", "dim_evento_gaming", "evento_id"),
-        ("fact_evento_tag_gaming.tag_id", "fact_evento_tag_gaming", "dim_tag_gaming", "tag_id"),
-        ("fact_mercado_evento_gaming.mercado_id", "fact_mercado_evento_gaming", "dim_mercado_gaming", "mercado_id"),
-        ("fact_mercado_evento_gaming.evento_id", "fact_mercado_evento_gaming", "dim_evento_gaming", "evento_id"),
-        ("fact_metricas_gaming.mercado_id", "fact_metricas_gaming", "dim_mercado_gaming", "mercado_id"),
-        ("fact_metricas_gaming.fecha_id", "fact_metricas_gaming", "dim_fecha", "fecha_id"),
-        ("dim_evento_gaming.serie_id", "dim_evento_gaming", "dim_serie_gaming", "serie_id"),
-        ("dim_mercado_gaming.videojuego_id", "dim_mercado_gaming", "dim_videojuego", "videojuego_id"),
-    ]
-    for label, fact_name, dim_name, key in checks:
-        fact = gold[fact_name]
-        if label == "dim_evento_gaming.serie_id":
-            fact = fact.filter(F.col("serie_id").isNotNull())
-        report.orphans[label] = anti_orphans(fact, gold[dim_name], key).count()
-
-    # descriptive statistics in one job per table (validator_warehouse.py:166-248)
-    ev = gold["dim_evento_gaming"].agg(
-        F.sum(F.when(F.col("es_activo"), 1).otherwise(0)).alias("eventos_activos"),
-        F.countDistinct("categoria").alias("categorias_distintas"),
-    ).collect()[0]
-    report.stats["eventos_activos"] = float(ev["eventos_activos"] or 0)
-    report.stats["categorias_distintas"] = float(ev["categorias_distintas"])
-
-    mkt = gold["fact_metricas_gaming"].agg(
-        F.coalesce(F.sum("volumen_total"), F.lit(0.0)).alias("volumen"),
-        F.coalesce(F.sum("liquidez_total"), F.lit(0.0)).alias("liquidez"),
-    ).collect()[0]
-    report.stats["volumen_total"] = float(mkt["volumen"])
-    report.stats["liquidez_total"] = float(mkt["liquidez"])
+    for child, dim, nullable in _FK:
+        key = _PK[dim]
+        fact = gold[child]
+        if nullable:
+            fact = fact.filter(F.col(key).isNotNull())
+        report.orphans[f"{child}.{key}"] = anti_orphans(fact, gold[dim], key).count()
     return report

@@ -2489,6 +2489,16 @@ _CHANGED: dict[str, int] = {
     "ngram_contamination": 15,
     "bloom_join_prefilter": 15,
     "join_reorder_advisor": 15,
+    # anti_orphans no longer de-duplicates the dim keys (row-identical)
+    "anti_join_orphans": 15,
+    # backward carry over a reversed running frame (row-identical)
+    "linear_interp_gaps": 15,
+    # Morton bits taken with & 1 (a pre-epoch order date diverged)
+    "zorder_layout": 15,
+    # finite_case on value, code and oracle (NaN bucketed apart)
+    "quantile_drift_detect": 15,
+    # oracle floors its epoch buckets like the Spark side (pre-epoch ts)
+    "time_bucket_rollup": 15,
 }
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -482,16 +482,18 @@ def q_time_bucket_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: floor of the double quotient, as the Spark side computes it: DuckDB's
+#: integer ``//`` truncates, which lifts a pre-epoch ts into bucket 0
 SQL_TIME_BUCKET_ROLLUP = """
 WITH fine AS (
-  SELECT (epoch_us(ts) // 300000000) * 300 AS bucket5m,
+  SELECT CAST(floor(epoch_us(ts) / 300000000) AS BIGINT) * 300 AS bucket5m,
          event_type,
          count(*) AS cnt,
          sum(value) AS val
   FROM events
   GROUP BY bucket5m, event_type
 )
-SELECT (bucket5m // 3600) * 3600 AS bucket_hour,
+SELECT CAST(floor(bucket5m / 3600) AS BIGINT) * 3600 AS bucket_hour,
        event_type,
        CAST(sum(cnt) AS BIGINT) AS n_events,
        round(sum(val), 4) AS total_value,

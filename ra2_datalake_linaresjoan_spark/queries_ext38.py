@@ -695,15 +695,17 @@ def q_quantile_drift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     two branches (totals + cumulative window) read the bounded table
     instead of re-scanning events. ``ks_from_joint`` turns it into
     max |CDF_a − CDF_b| as an exact-integer rational (division-last,
-    guarded for empty sides)."""
+    guarded for empty sides). Only a finite value has a bucket: NaN
+    defeats the clamp differently per engine (``finite_case``)."""
+    from ra2_datalake_linaresjoan_spark.operators.filters import finite_case
     from ra2_datalake_linaresjoan_spark.streaming.sketches import (
         ks_from_joint,
         quantile_bucket,
     )
 
     vals = (
-        _t(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull() & F.col("ts").isNotNull())
+        finite_case(_t(spark, sf_dir, "events"), "value")
+        .where(F.col("ts").isNotNull())
         .select(F.unix_micros("ts").alias("us"), "value")
     )
     span = vals.agg(
@@ -744,7 +746,7 @@ def q_quantile_drift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_QUANTILE_DRIFT_DETECT = f"""
 WITH vals AS (
   SELECT epoch_us(ts) AS us, value FROM events
-  WHERE value IS NOT NULL AND ts IS NOT NULL
+  WHERE isfinite(value) AND ts IS NOT NULL
 ), span AS (
   SELECT min(us) AS us_lo, max(us) AS us_hi FROM vals
 ), joint AS (

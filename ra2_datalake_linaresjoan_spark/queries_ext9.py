@@ -132,10 +132,13 @@ def q_linear_interp_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
+    # the backward carry runs over the day order REVERSED: a frame from
+    # the current row to the partition end would re-scan that tail per
+    # row (quadratic in the spine length, which one far-off ts makes long)
     w_next = (
         Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(0, Window.unboundedFollowing)
+        .orderBy(F.desc("day"))
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
     obs_day = F.when(F.col("v").isNotNull(), F.col("day"))
     g = grid.select(
@@ -144,8 +147,8 @@ def q_linear_interp_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v",
         F.last("v", ignorenulls=True).over(w_prev).alias("pv"),
         F.last(obs_day, ignorenulls=True).over(w_prev).alias("pd"),
-        F.first("v", ignorenulls=True).over(w_next).alias("nv"),
-        F.first(obs_day, ignorenulls=True).over(w_next).alias("nd"),
+        F.last("v", ignorenulls=True).over(w_next).alias("nv"),
+        F.last(obs_day, ignorenulls=True).over(w_next).alias("nd"),
     )
     frac = F.datediff("day", "pd") / F.datediff("nd", "pd")
     filled = (
@@ -356,8 +359,10 @@ FROM classes GROUP BY level ORDER BY level
 
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) layout audit: interleave the low 10 bits of
-    (custkey, order-day) into a 20-bit Z-value per order, bucket by the
-    top 6 Z-bits (64 "files"), and report each bucket's row count plus
+    (custkey, order-day) into a 20-bit Z-value per order (a bit is
+    ``& 1``, not ``% 2``: a pre-1992 day leaves y negative, and Java's
+    remainder would make its bits -1), bucket by the top 6 Z-bits (64
+    "files"), and report each bucket's row count plus
     min/max of BOTH dimensions — the min/max column statistics a
     data-skipping reader would prune on. The interleave is an in-row
     integer ``aggregate(sequence(0,9), ...)`` (bit OR as disjoint-bit
@@ -375,8 +380,8 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "zval",
         F.expr(
             "aggregate(sequence(0, 9), 0L, (acc, i) ->"
-            " acc + (shiftleft(shiftright(x, i) % 2, 2*i))"
-            " + (shiftleft(shiftright(y, i) % 2, 2*i + 1)))"
+            " acc + (shiftleft(shiftright(x, i) & 1, 2*i))"
+            " + (shiftleft(shiftright(y, i) & 1, 2*i + 1)))"
         ),
     )
     return (

@@ -84,15 +84,6 @@ def write_jdbc(
     )
 
 
-def write_json_report(rows: list[dict], path: str) -> None:
-    """Tiny JSON report sink (S11, volumetry reports): collected aggregate
-    rows → one JSON document on the driver (reports are KB-sized)."""
-    import json
-
-    with open(path, "w") as f:
-        json.dump(rows, f, indent=2, default=str)
-
-
 def write_sorted(
     df: DataFrame,
     path: str,

@@ -175,6 +175,51 @@ def test_gold_star_schema(spark, silver):
     assert gold["fact_metricas_gaming"].count() == 3
 
 
+def test_validator_reports_broken_gold(spark, silver):
+    """The validator must SEE a broken warehouse: a duplicated dim PK
+    fails that table's uniqueness, an unknown fact FK counts one orphan
+    on its own edge, and a NULL in the nullable serie FK is no orphan."""
+    gold = build_gold(spark, *silver)
+    tags = gold["dim_tag_gaming"]
+    gold["dim_tag_gaming"] = tags.unionByName(tags.limit(1))
+    et = gold["fact_evento_tag_gaming"]
+    gold["fact_evento_tag_gaming"] = et.unionByName(
+        et.limit(1).withColumn("evento_id", F.lit("e_ghost"))
+    )
+    ev = gold["dim_evento_gaming"]
+    gold["dim_evento_gaming"] = ev.withColumn(
+        "serie_id", F.when(F.col("evento_id") != "e1", F.col("serie_id"))
+    )
+    report = validate_gold(gold)
+    assert report.uniqueness["dim_tag_gaming"] is False
+    assert all(ok for t, ok in report.uniqueness.items() if t != "dim_tag_gaming")
+    assert report.orphans["fact_evento_tag_gaming.evento_id"] == 1
+    # the duplicated tag row is still ONE parent: no orphan, no fan-out
+    assert report.orphans["fact_evento_tag_gaming.tag_id"] == 0
+    assert report.orphans["dim_evento_gaming.serie_id"] == 0
+    assert sum(report.orphans.values()) == 1
+    assert report.ok is False
+
+
+def test_run_pipeline_raises_on_orphan(spark, raw, tmp_path, monkeypatch):
+    from ra2_datalake_linaresjoan_spark import cli
+
+    def build_with_orphan(*args):
+        gold = build_gold(*args)
+        f = gold["fact_mercado_evento_gaming"]
+        gold["fact_mercado_evento_gaming"] = f.unionByName(
+            f.limit(1).withColumn("mercado_id", F.lit("m_ghost"))
+        )
+        return gold
+
+    monkeypatch.setattr(cli, "build_gold", build_with_orphan)
+    with pytest.raises(RuntimeError, match="gold integrity failed"):
+        cli.run_pipeline(
+            spark, *raw,
+            silver_path=str(tmp_path / "silver"), gold_path=str(tmp_path / "gold"),
+        )
+
+
 def test_gaming_summary_shape(silver):
     m, _, _ = silver
     s = {r["gaming_type"]: r for r in gaming_summary(m).collect()}

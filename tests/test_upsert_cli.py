@@ -54,10 +54,7 @@ def test_cli_end_to_end(spark, tmp_path):
 
 
 def test_sql_surface(spark, sf_dir):
-    from ra2_datalake_linaresjoan_spark.sql_surface import (
-        register_views,
-        validate_gold_sql,
-    )
+    from ra2_datalake_linaresjoan_spark.sql_surface import register_views
 
     registered = register_views(spark, sf_dir)
     assert "lineitem" in registered and "events" in registered
@@ -66,21 +63,6 @@ def test_sql_surface(spark, sf_dir):
     # the events view reads ts with its declared TIMESTAMP type
     r = spark.sql("SELECT min(ts) AS t FROM events").collect()[0]
     assert r["t"].year == 2024
-
-    # SQL-mode gold validation over the fixture pipeline
-    from tests.test_pipeline_gold import EVENTS, EVENT_COLS, MARKETS, MARKET_COLS, SERIES, SERIES_COLS
-    from ra2_datalake_linaresjoan_spark.plans.pipelines import (
-        clean_events, clean_markets, clean_series, enrich_gaming_markets,
-        gaming_market_filter)
-    from ra2_datalake_linaresjoan_spark.plans.star_schema import build_gold
-
-    m = enrich_gaming_markets(gaming_market_filter(clean_markets(
-        spark.createDataFrame(MARKETS, MARKET_COLS))))
-    gold = build_gold(spark, m,
-                      clean_events(spark.createDataFrame(EVENTS, EVENT_COLS)),
-                      clean_series(spark.createDataFrame(SERIES, SERIES_COLS)))
-    checks = validate_gold_sql(spark, gold)
-    assert checks and all(checks.values()), checks
 
 
 def test_cli_query_runner(spark, monkeypatch, capsys):

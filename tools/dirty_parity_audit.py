@@ -32,9 +32,15 @@ sys.path.insert(0, os.path.join(_ROOT, "tests"))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType
+from pyspark.sql.types import ArrayType, TimestampNTZType, TimestampType
+
+from ra2_datalake_linaresjoan_spark.sources.readers import TESTDATA_SCHEMAS, read_testdata
 
 SF = "/root/testdata/sf0.001"
+
+#: timestamp fuzz values: the last micro before the epoch (the floor-div
+#: negative-epoch class) and the last micro of signed 32-bit seconds
+TS_BOUNDARIES = ("1969-12-31 23:59:59.999999", "2038-01-19 03:14:07.999999")
 
 #: Cross-engine divergences on dirty data, by query name — the
 #: documented BACKLOG this audit ratchets down each round.  Every OTHER
@@ -119,6 +125,8 @@ UNICODE_CARRIERS: tuple[str, ...] = (
 def build_dirty_dir(spark: SparkSession, out_dir: str) -> str:
     import zlib
 
+    ts_cells = 0
+
     # FK-COHERENT sampling (round-13 close review): a bare limit(60)
     # per table breaks referential overlap — the sampled lineitem rows
     # mostly reference orderkeys OUTSIDE the sampled orders, so poisoned
@@ -129,22 +137,22 @@ def build_dirty_dir(spark: SparkSession, out_dir: str) -> str:
     # sample: customer → orders → lineitem.  First adoption run caught
     # hhi_concentration's LONG/LONG share division raising on a
     # zero-total nation where the oracle's DOUBLE division sailed past.
-    cust = spark.read.parquet(os.path.join(SF, "customer.parquet")).limit(60)
+    # samples read through the declared catalog, so each timestamp column
+    # carries its declared type (events.ts TIMESTAMP, the TPC-H dates
+    # TIMESTAMP_NTZ) and the timestamp fuzz below reaches every one
+    cust = read_testdata(spark, SF, "customer").limit(60)
     cust_keys = [r[0] for r in cust.select("c_custkey").collect()]
-    orders_all = spark.read.parquet(os.path.join(SF, "orders.parquet"))
+    orders_all = read_testdata(spark, SF, "orders")
     orders = orders_all.where(F.col("o_custkey").isin(cust_keys)).limit(60)
     okeys = [r[0] for r in orders.select("o_orderkey").collect()]
-    li_all = spark.read.parquet(os.path.join(SF, "lineitem.parquet"))
+    li_all = read_testdata(spark, SF, "lineitem")
     lineitem = li_all.where(F.col("l_orderkey").isin(okeys)).limit(60)
-    _fk_sampled = {"customer.parquet": cust, "orders.parquet": orders,
-                   "lineitem.parquet": lineitem}
+    _fk_sampled = {"customer": cust, "orders": orders, "lineitem": lineitem}
 
-    for f in os.listdir(SF):
-        if not f.endswith(".parquet"):
-            continue
-        df = _fk_sampled.get(f)
+    for name in TESTDATA_SCHEMAS:
+        df = _fk_sampled.get(name)
         if df is None:
-            df = spark.read.parquet(os.path.join(SF, f)).limit(60)
+            df = read_testdata(spark, SF, name).limit(60)
         nullable = [fl.name for fl in df.schema.fields if fl.nullable]
 
         def _nulled(fl):
@@ -309,13 +317,12 @@ def build_dirty_dir(spark: SparkSession, out_dir: str) -> str:
                         F.coalesce(fuzzed, F.col(fl.name))
                     ).alias(fl.name)
                 )
-            if fl.dataType.simpleString() == "timestamp":
-                fuzzed = F.when(
-                    (rid + voff) % 13 == 1,
-                    F.lit("1969-12-31 23:59:59.999999").cast("timestamp"),
-                ).when(
-                    (rid + voff) % 13 == 6,
-                    F.lit("2038-01-19 03:14:07.999999").cast("timestamp"),
+            if isinstance(fl.dataType, (TimestampType, TimestampNTZType)):
+                # the micros boundary on both sides of the epoch, as the
+                # column's own type (UTC session: same wall clock for both)
+                pre_epoch, y2038 = (F.lit(b).cast(fl.dataType) for b in TS_BOUNDARIES)
+                fuzzed = F.when((rid + voff) % 13 == 1, pre_epoch).when(
+                    (rid + voff) % 13 == 6, y2038
                 )
                 return (
                     whole_null.otherwise(
@@ -325,11 +332,25 @@ def build_dirty_dir(spark: SparkSession, out_dir: str) -> str:
             return whole_null.otherwise(F.col(fl.name)).alias(fl.name)
 
         out = df.select(*[_nulled(fl) for fl in df.schema.fields])
+        # the testdata stores every timestamp timezone-naive; the dirty
+        # copy does too, so DuckDB reads the same column types as on the
+        # clean corpus (a TIMESTAMP column would land as TIMESTAMPTZ)
+        out = out.select(*[
+            F.col(fl.name).cast(TimestampNTZType())
+            if isinstance(fl.dataType, TimestampType) else F.col(fl.name)
+            for fl in out.schema.fields
+        ])
         # coalesce(1): deterministic single part file per table so
         # monotonically_increasing_id row selection is reproducible
         out.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f)
+            os.path.join(out_dir, f"{name}.parquet")
         )
+        back = read_testdata(spark, out_dir, name)
+        for fl in back.schema.fields:
+            if isinstance(fl.dataType, (TimestampType, TimestampNTZType)):
+                bounds = [F.lit(b).cast(fl.dataType) for b in TS_BOUNDARIES]
+                ts_cells += back.where(F.col(fl.name).isin(*bounds)).count()
+    print(f"timestamp cells fuzzed to a micros boundary: {ts_cells}")
     return out_dir
 
 

@@ -4,9 +4,10 @@ star schema → full integrity validation, at reference-comparable volume.
 BASELINE.md's headline numbers are 3-5 min end-to-end over ~452 K markets
 (pandas + row-at-a-time loads, `README.md:317-322`) and ~50 K rows/s of
 warehouse load throughput. This harness replays the engine's whole
-medallion flow (`cli.run_pipeline` — the same function the CLI runs) on
-the messy pipeline fixtures replicated to a comparable row count, and
-prints ONE JSON line with wall seconds and rows/s.
+medallion flow (`cli.run_pipeline` — the same function the CLI runs,
+writing silver and gold into a temporary lake) on the messy pipeline
+fixtures replicated to a comparable row count, and prints ONE JSON line
+with wall seconds and rows/s.
 
 Run: python tools/pipeline_bench.py [n_copies]   (default 50000 ≈ 450 K rows)
 """
@@ -15,7 +16,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -61,11 +64,19 @@ def main() -> None:
     series = replicate(spark, SERIES, SERIES_COLS, max(n_copies // 500, 1))
     n_in = markets.count() + events.count() + series.count()
 
-    t0 = time.perf_counter()
-    out = run_pipeline(spark, markets, events, series, gold_path=None)
-    wall = time.perf_counter() - t0
+    lake = tempfile.mkdtemp(prefix="pipeline_bench_")
+    try:
+        t0 = time.perf_counter()
+        out = run_pipeline(
+            spark, markets, events, series,
+            silver_path=os.path.join(lake, "silver"), gold_path=os.path.join(lake, "gold"),
+        )
+        wall = time.perf_counter() - t0
+    finally:
+        shutil.rmtree(lake, ignore_errors=True)
 
-    ok = all(v.get("ok", True) for v in out["validation"].values() if isinstance(v, dict))
+    v = out["validation"]
+    ok = all(v["uniqueness"].values()) and not any(v["orphans"].values())
     print(
         json.dumps(
             {
