@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ra2_datalake_linaresjoan_spark.operators.joins import at_most, maybe_broadcast
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -71,6 +73,61 @@ def _id_dtypes(df, id_col):
     )
 
 
+def _corpus_groups(corpus: DataFrame, id_col: str, vec_col: str, np_id):
+    """Collect the corpus into broadcast per-length unit-norm float64
+    matrices ``{length: (ids, matrix)}``; ``None`` for an empty corpus.
+
+    Degenerate vectors cannot participate: NULL ids/vectors crash
+    np.array/np.stack with NoneType, and interior-NULL or zero-norm
+    vectors have no defined cosine (0/0 = NaN would still occupy top-k
+    tail slots or mint NaN pairs). The expr/lsh paths drop exactly the
+    same rows through the guarded cosine's NULL — the strategies must
+    agree on dirty input, not just on _emb_clean-prefiltered corpora.
+
+    One matrix PER DISTINCT VECTOR LENGTH: the expr/lsh paths' zip_with
+    NULL-pads mixed-length pairs, so their cosine is NULL and the pair
+    drops — pairs score iff len(q) == len(c). Grouping by length
+    reproduces those semantics and keeps a ragged corpus from crashing
+    np.array; clean corpora have one group."""
+    import numpy as np
+
+    rows = (
+        corpus.select(id_col, vec_col)
+        .where(
+            F.col(id_col).isNotNull()
+            & F.col(vec_col).isNotNull()
+            & ~F.exists(vec_col, lambda x: x.isNull())
+            & (
+                F.aggregate(
+                    F.col(vec_col).cast("array<double>"),
+                    F.lit(0.0),
+                    lambda a, x: a + x * x,
+                )
+                > 0
+            )
+        )
+        .collect()
+    )
+    if not rows:
+        # empty corpus: no neighbors or pairs exist — the degenerate
+        # partition every 100-TB job eventually meets must yield an empty
+        # frame, not an ndim crash in the normalizer
+        return None
+    by_len: dict[int, tuple[list, list]] = {}
+    for r in rows:
+        gids, gvecs = by_len.setdefault(len(r[1]), ([], []))
+        gids.append(r[0])
+        gvecs.append(r[1])
+    groups = {}
+    for length, (gids, gvecs) in by_len.items():
+        m = np.array(gvecs, dtype=np.float64)
+        groups[length] = (
+            np.array(gids, dtype=np_id),
+            m / np.linalg.norm(m, axis=1, keepdims=True),
+        )
+    return corpus.sparkSession.sparkContext.broadcast(groups)
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -83,8 +140,8 @@ def cosine_topk(
     """Exact brute-force cosine top-k: (query_id, neighbor_id, cos_sim).
 
     Physical strategies, identical results:
-    - ``auto`` (default): a capped count (``limit(N+1).count()`` — the
-      guard job stops scanning at the threshold); if the corpus is within
+    - ``auto`` (default): an ``at_most`` probe (the guard job stops
+      scanning at the threshold); if the corpus is within
       ``MAX_COLLECT_ROWS`` use the numpy matmul path, else fall back to
       the collect-free broadcast-join expression plan. No data-sized
       driver collect is ever reachable on an unbounded corpus.
@@ -105,11 +162,9 @@ def cosine_topk(
     Ranking happens on the ROUNDED similarity with neighbor-id tiebreak so
     results are deterministic and engine-portable. Self-matches excluded.
     """
-    from ra2_datalake_linaresjoan_spark.operators.joins import maybe_broadcast
-
     corpus_known_large = False
     if method == "auto":
-        small = corpus.limit(MAX_COLLECT_ROWS + 1).count() <= MAX_COLLECT_ROWS
+        small = at_most(corpus, MAX_COLLECT_ROWS)
         method = "numpy" if small else "expr"
         # the probe already established the corpus exceeds the broadcast
         # cap — don't pay a second identical capped count inside
@@ -164,57 +219,11 @@ def _cosine_topk_numpy(
     import numpy as np
     import pandas as pd
 
-    spark = queries.sparkSession
     np_id, sql_id = _id_dtypes(corpus, id_col)
     out_schema = f"query_id {sql_id}, neighbor_id {sql_id}, cos_sim double"
-    # degenerate vectors cannot participate: NULL ids/vectors crash
-    # np.array/np.stack with NoneType, and interior-NULL or zero-norm
-    # vectors have no defined cosine (0/0 = NaN would still occupy top-k
-    # tail slots under lexsort). The expr path drops exactly the same
-    # rows via its cos_sim IS NOT NULL filter — the two strategies must
-    # agree on dirty input, not just on _emb_clean-prefiltered corpora.
-    rows = (
-        corpus.select(id_col, vec_col)
-        .where(
-            F.col(id_col).isNotNull()
-            & F.col(vec_col).isNotNull()
-            & ~F.exists(vec_col, lambda x: x.isNull())
-            & (
-                F.aggregate(
-                    F.col(vec_col).cast("array<double>"),
-                    F.lit(0.0),
-                    lambda a, x: a + x * x,
-                )
-                > 0
-            )
-        )
-        .collect()
-    )
-    if not rows:
-        # empty corpus: no neighbors exist — the degenerate partition every
-        # 100-TB job eventually meets must yield an empty frame, not an
-        # ndim crash in the normalizer
-        return spark.createDataFrame([], schema=out_schema)
-    # one matrix PER DISTINCT VECTOR LENGTH: the expr path's zip_with
-    # NULL-pads mixed-length pairs, so their cosine is NULL and the pair
-    # drops — i.e. pairs score iff len(q) == len(c). A ragged corpus
-    # previously crashed np.array here while the expr path silently
-    # filtered (the round-9 advisor's auto-strategy asymmetry); grouping
-    # by length reproduces the expr semantics exactly AND removes the
-    # crash. Clean corpora have one group — zero overhead.
-    by_len: dict[int, tuple[list, list]] = {}
-    for r in rows:
-        gids, gvecs = by_len.setdefault(len(r[1]), ([], []))
-        gids.append(r[0])
-        gvecs.append(r[1])
-    groups = {}
-    for length, (gids, gvecs) in by_len.items():
-        m = np.array(gvecs, dtype=np.float64)
-        groups[length] = (
-            np.array(gids, dtype=np_id),
-            m / np.linalg.norm(m, axis=1, keepdims=True),
-        )
-    bc = spark.sparkContext.broadcast(groups)
+    bc = _corpus_groups(corpus, id_col, vec_col, np_id)
+    if bc is None:
+        return queries.sparkSession.createDataFrame([], schema=out_schema)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         grp = bc.value
@@ -272,8 +281,8 @@ def cosine_neardup_pairs(
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, cos_sim ≥ t),
     id_a < id_b.
 
-    ``auto`` (default) size-guards with a capped count (``limit(N+1)`` so
-    the guard job never scans past the threshold): a bounded corpus takes
+    ``auto`` (default) size-guards with an ``at_most`` probe (the guard
+    job never scans past the threshold): a bounded corpus takes
     the broadcast-matrix mapInPandas path (one matmul per Arrow batch, keep
     only pairs with the larger partner id — dedup for free, no shuffle); a
     corpus beyond ``MAX_COLLECT_ROWS`` routes to LSH-bucketed candidate
@@ -294,8 +303,7 @@ def cosine_neardup_pairs(
     import pandas as pd
 
     if method == "auto":
-        small = df.limit(MAX_COLLECT_ROWS + 1).count() <= MAX_COLLECT_ROWS
-        method = "numpy" if small else "lsh"
+        method = "numpy" if at_most(df, MAX_COLLECT_ROWS) else "lsh"
     if method == "lsh":
         _, sql_id = _id_dtypes(df, id_col)
         # first NON-NULL vector: a null leading embedding must not crash
@@ -352,52 +360,11 @@ def cosine_neardup_pairs(
             .filter(F.col("cos_sim") >= threshold)
         )
 
-    spark = df.sparkSession
     np_id, sql_id = _id_dtypes(df, id_col)
     pair_schema = f"id_a {sql_id}, id_b {sql_id}, cos_sim double"
-    # same degenerate-vector filter as _cosine_topk_numpy: interior-NULL
-    # vectors crash the float64 matrix build and zero-norm vectors mint
-    # NaN rows; the lsh/expr paths exclude both via the guarded cosine's
-    # NULL failing the >= threshold filter — keep the strategies agreeing.
-    rows = (
-        df.select(id_col, vec_col)
-        .where(
-            F.col(id_col).isNotNull()
-            & F.col(vec_col).isNotNull()
-            & ~F.exists(vec_col, lambda x: x.isNull())
-            & (
-                F.aggregate(
-                    F.col(vec_col).cast("array<double>"),
-                    F.lit(0.0),
-                    lambda a, x: a + x * x,
-                )
-                > 0
-            )
-        )
-        .collect()
-    )
-    if not rows:
-        # empty corpus: no pairs — return an empty frame instead of an
-        # ndim crash in the normalizer (same guard as _cosine_topk_numpy)
-        return spark.createDataFrame([], schema=pair_schema)
-    # per-length matrices, same reasoning as _cosine_topk_numpy: the
-    # lsh/expr paths' zip_with cosine is NULL for mixed-length pairs (so
-    # they fail the >= threshold filter); a ragged corpus crashed
-    # np.array/np.stack here instead. Pairs exist only WITHIN a length
-    # group — clean corpora have one group, zero overhead.
-    by_len: dict[int, tuple[list, list]] = {}
-    for r in rows:
-        gids, gvecs = by_len.setdefault(len(r[1]), ([], []))
-        gids.append(r[0])
-        gvecs.append(r[1])
-    groups = {}
-    for length, (gids, gvecs) in by_len.items():
-        m = np.array(gvecs, dtype=np.float64)
-        groups[length] = (
-            np.array(gids, dtype=np_id),
-            m / np.linalg.norm(m, axis=1, keepdims=True),
-        )
-    bc = spark.sparkContext.broadcast(groups)
+    bc = _corpus_groups(df, id_col, vec_col, np_id)
+    if bc is None:
+        return df.sparkSession.createDataFrame([], schema=pair_schema)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         grp = bc.value

@@ -27,16 +27,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ra2_datalake_linaresjoan_spark.operators.joins import at_most
+
+#: Round budget of the label propagation; a graph whose diameter needs
+#: more rounds raises instead of returning unconverged component ids.
+MAX_ITER = 30
+
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Return ``(id, component_id)`` where ``component_id`` is the minimum
     vertex id in the vertex's connected component. Isolated vertices are
-    not represented (no edges → no row); callers union them in if needed."""
+    not represented (no edges → no row); callers union them in if needed.
+    Raises ``RuntimeError`` when ``MAX_ITER`` rounds end before the label
+    fixpoint."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
     e = e.localCheckpoint(eager=True)
@@ -48,8 +53,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
 
-    converged = False
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         nbr_min = (
             e.join(labels, e["v"] == labels["id"])
             .groupBy("u")
@@ -69,22 +73,11 @@ def connected_components(
             new_labels.alias("n")
             .join(labels.alias("o"), "id")
             .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
         )
         labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"connected_components: iteration budget max_iter={max_iter} exhausted "
-            "before the label fixpoint — component ids may be incorrect on "
-            "long-chain graphs; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select(F.col("id"), F.col("comp").alias("component_id"))
+        if at_most(changed, 0):
+            return labels.select(F.col("id"), F.col("comp").alias("component_id"))
+    raise RuntimeError(
+        f"connected_components: {MAX_ITER} rounds ended before the label "
+        "fixpoint; the graph's diameter exceeds the round budget"
+    )

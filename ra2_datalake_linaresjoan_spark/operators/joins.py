@@ -15,11 +15,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-#: keys_df sizes up to this many rows force-broadcast in semi_filter;
-#: larger key sets fall back to a plain left_semi join so Catalyst/AQE
-#: pick the strategy from real sizes (the capped ``limit(N+1).count()``
-#: probe convention, cf. queries_ext23 ngram_contamination).
+#: Sides up to this many rows get a broadcast hint (semi_filter's key
+#: set, maybe_broadcast's default); larger ones join unhinted so
+#: Catalyst/AQE pick the strategy from real sizes.
 SEMI_BROADCAST_CAP = 1_000_000
+
+
+def at_most(df: DataFrame, n: int) -> bool:
+    """The one size probe behind every small/large route: does ``df``
+    have at most ``n`` rows?  A capped count — the job stops scanning at
+    ``n``+1 rows, so it never pays an exact count of a huge frame.
+    ``not at_most(df, 0)`` is the emptiness check."""
+    return df.limit(n + 1).count() <= n
 
 
 def semi_filter(df: DataFrame, keys_df: DataFrame, on: str | Sequence[str]) -> DataFrame:
@@ -28,9 +35,9 @@ def semi_filter(df: DataFrame, keys_df: DataFrame, on: str | Sequence[str]) -> D
 
     The broadcast is GUARDED: key sets that scale with the fact side
     (e.g. one id per market) must not be force-broadcast past AQE's size
-    checks — at 100 TB that is a driver OOM. A capped count probe (stops
-    scanning at CAP+1 rows) chooses broadcast for genuinely small sets
-    and leaves big ones to AQE's own shuffle/broadcast decision.
+    checks — at 100 TB that is a driver OOM. The ``at_most`` probe
+    chooses broadcast for genuinely small sets and leaves big ones to
+    AQE's own shuffle/broadcast decision.
 
     Streaming inputs skip the probe entirely (a count on a streaming
     frame throws) — the call stays a pure transformation and Spark's
@@ -39,29 +46,24 @@ def semi_filter(df: DataFrame, keys_df: DataFrame, on: str | Sequence[str]) -> D
     keys = keys_df.select(*on).distinct()
     if df.isStreaming or keys_df.isStreaming:
         return df.join(keys, on=on, how="left_semi")
-    # plain capped count probe: scans at most CAP+1 distinct keys and
-    # pins NOTHING (a localCheckpoint here would leave its blocks in
-    # executor storage for the session lifetime on the large path —
-    # DataFrame.unpersist does not release checkpoint RDD blocks). The
-    # small path re-derives the bounded key set lazily inside the
-    # broadcast — one extra scan of a provably-small set; the large
-    # path joins the lazy distinct unhinted so AQE picks the strategy.
-    probe = keys.limit(SEMI_BROADCAST_CAP + 1)
-    if probe.count() <= SEMI_BROADCAST_CAP:
-        return df.join(F.broadcast(probe), on=on, how="left_semi")
-    return df.join(keys, on=on, how="left_semi")
+    # the probe pins NOTHING (a localCheckpoint here would leave its
+    # blocks in executor storage for the session lifetime on the large
+    # path — DataFrame.unpersist does not release checkpoint RDD
+    # blocks), so the small path re-derives the bounded key set lazily
+    # inside the broadcast; the large path joins the lazy distinct
+    # unhinted so AQE picks the strategy.
+    return df.join(maybe_broadcast(keys), on=on, how="left_semi")
 
 
-def maybe_broadcast(df: DataFrame, cap: int = SEMI_BROADCAST_CAP) -> DataFrame:
-    """Capped-count broadcast guard (the queries_ext32 ``_maybe_broadcast``
-    convention, shared): probe at most ``cap``+1 rows — never an exact
-    count of a huge side — and attach the broadcast hint only when the
-    side is provably bounded.  Large sides fall through UNHINTED so
+def maybe_broadcast(df: DataFrame, cap: int | None = None) -> DataFrame:
+    """Broadcast guard: attach the broadcast hint only when ``at_most``
+    proves the side bounded by ``cap`` (default ``SEMI_BROADCAST_CAP``,
+    read at call time).  Large sides fall through UNHINTED so
     AQE/shuffle handles linear-growth sides without driver OOM at scale.
     Streaming frames skip the probe (count would throw)."""
     if df.isStreaming:
         return df
-    small = df.limit(cap + 1).count() <= cap
+    small = at_most(df, SEMI_BROADCAST_CAP if cap is None else cap)
     return F.broadcast(df) if small else df
 
 
@@ -80,7 +82,6 @@ def fk_resolve(
     dim_key: str,
     dim_id: str,
     out_col: str,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Resolve a natural key to a dimension surrogate id via broadcast
     left join (J4/J5 — replaces the reference's driver-side dict probes,
@@ -92,11 +93,9 @@ def fk_resolve(
     otherwise silently FAN OUT fact rows, multiplying downstream counts
     (round-10 review). On a healthy unique-key dim the aggregate is a
     no-op and the tiny frame still broadcasts."""
-    d = (
+    d = F.broadcast(
         dim.select(F.col(dim_key).alias("_fk_nat"), F.col(dim_id).alias(out_col))
         .groupBy("_fk_nat")
         .agg(F.min(out_col).alias(out_col))
     )
-    if broadcast_dim:
-        d = F.broadcast(d)
     return fact.join(d, fact[fact_key] == d["_fk_nat"], "left").drop("_fk_nat")

@@ -5,11 +5,13 @@ column (``loader_NeonDB.py:431-455``) — the Spark translation is
 ``row_number() OVER (ORDER BY ...)``, which funnels every row through ONE
 partition. Fine for a 5 K-tag dimension, a stall for a 500 M-row one.
 
-``surrogate_key`` keeps the cheap global window for small inputs and
-switches to a two-phase assignment past a threshold:
+``surrogate_key`` keeps the cheap global window for inputs of at most
+``SMALL_THRESHOLD`` rows (an ``at_most`` probe, which stops scanning at
+the threshold) and switches to a two-phase assignment past it:
 
-1. range-partition by the ordering columns (deterministic for a given
-   dataset), number rows within each partition;
+1. range-partition by the ordering columns into ``NUM_PARTS`` ranges
+   (deterministic for a given dataset), number rows within each
+   partition;
 2. count rows per partition (tiny aggregate), broadcast the cumulative
    offsets back, and add them — every partition works independently, no
    single-partition exchange anywhere.
@@ -24,18 +26,20 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ra2_datalake_linaresjoan_spark.operators.joins import at_most
+
+#: Inputs of at most this many rows take the single global window.
+SMALL_THRESHOLD = 1_000_000
+#: Range partitions of the two-phase assignment.
+NUM_PARTS = 64
+
 
 def surrogate_key(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    key_col: str = "sk",
-    small_threshold: int = 1_000_000,
-    num_parts: int = 64,
+    df: DataFrame, order_cols: Sequence[str], key_col: str = "sk"
 ) -> DataFrame:
     """Assign dense 1-based surrogate keys ordered by ``order_cols``."""
     cols = list(order_cols)
-    n = df.count()
-    if n <= small_threshold:
+    if at_most(df, SMALL_THRESHOLD):
         w = Window.orderBy(*cols)
         return df.select(F.row_number().over(w).alias(key_col), *df.columns)
 
@@ -45,7 +49,7 @@ def surrogate_key(
     # jobs is an assumption, not a guarantee. persist() makes both passes
     # read the same materialized partitioning (disk-spillable; released
     # before return).
-    parts = df.repartitionByRange(num_parts, *cols).withColumn(
+    parts = df.repartitionByRange(NUM_PARTS, *cols).withColumn(
         "_pid", F.spark_partition_id()
     )
     parts = parts.persist()

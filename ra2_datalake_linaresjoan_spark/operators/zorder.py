@@ -12,7 +12,7 @@ this is the same technique as a pure Column expression for plain parquet.
 
 Implementation — two physical strategies behind one rank-based contract:
 
-- **small input** (≤ ``exact_threshold`` rows, capped-count guard): each
+- **small input** (≤ ``EXACT_THRESHOLD`` rows, an ``at_most`` probe): each
   column is rank-bucketed to ``2^bits`` levels with an exact ``ntile``
   window. A global window is a single task, acceptable only because the
   input is bounded.
@@ -40,10 +40,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType, IntegerType, LongType, ShortType, ByteType, DecimalType
 
-#: Above this row count (checked with a capped ``limit(N+1).count()``)
-#: the exact-ntile window is refused and bucketing runs on sampled
-#: quantile boundaries instead.
-DEFAULT_EXACT_THRESHOLD = 100_000
+from ra2_datalake_linaresjoan_spark.operators.joins import at_most
+
+#: Above this row count (checked with ``at_most``) the exact-ntile window
+#: is refused and bucketing runs on sampled quantile boundaries instead.
+EXACT_THRESHOLD = 100_000
 
 _NUMERIC = (DoubleType, FloatType, IntegerType, LongType, ShortType, ByteType, DecimalType)
 
@@ -73,9 +74,7 @@ def zorder_key(
     df: DataFrame,
     cols: Sequence[str],
     bits: int = 8,
-    exact_threshold: int = DEFAULT_EXACT_THRESHOLD,
     rel_err: float = 0.001,
-    known_rows: int | None = None,
 ) -> DataFrame:
     """Add a ``_zorder`` column interleaving ``bits`` rank-bits per column.
 
@@ -83,22 +82,16 @@ def zorder_key(
     files in all of ``cols`` at once. Strategy (exact ntile vs sampled
     quantile buckets) is size-guarded — see module docstring.
 
-    NOT a lazy builder: the size guard runs a capped ``limit(N+1).count()``
-    job at call time, and the quantile path additionally runs one
-    ``approxQuantile`` job per column — each call re-pays the input scan
-    (cache the input if calling repeatedly) and streaming DataFrames are
-    not supported. Pass ``known_rows`` (an already-known or estimated row
-    count, e.g. from write metrics or a prior count) to skip the probe
-    job; ``known_rows=2**63`` forces the scalable quantile path outright.
+    NOT a lazy builder: the ``at_most`` size probe runs a job at call
+    time, and the quantile path additionally runs one ``approxQuantile``
+    job for all columns — each call re-pays the input scan (cache the
+    input if calling repeatedly) and streaming DataFrames are not
+    supported.
     """
     n_buckets = 1 << bits
-    if known_rows is not None:
-        small = known_rows <= exact_threshold
-    else:
-        small = df.limit(exact_threshold + 1).count() <= exact_threshold
     out = df
     bucket_cols: list[Column] = []
-    if small:
+    if at_most(df, EXACT_THRESHOLD):
         for c in cols:
             b = f"_zb_{c}"
             out = out.withColumn(
@@ -162,12 +155,11 @@ def write_zordered(
     n_files: int = 8,
     bits: int = 8,
     fmt: str = "parquet",
-    exact_threshold: int = DEFAULT_EXACT_THRESHOLD,
 ) -> None:
     """Write ``df`` as ``n_files`` files range-partitioned on the Z-order
     key — every file covers a tight hyper-rectangle in ``cols`` space, so
     min/max statistics prune scans filtered on ANY of the dimensions."""
-    keyed = zorder_key(df, cols, bits, exact_threshold=exact_threshold)
+    keyed = zorder_key(df, cols, bits)
     (
         keyed.repartitionByRange(n_files, "_zorder")
         .sortWithinPartitions("_zorder")

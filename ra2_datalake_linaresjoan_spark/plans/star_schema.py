@@ -32,7 +32,7 @@ from ra2_datalake_linaresjoan_spark.functions.json_utils import (
 )
 from ra2_datalake_linaresjoan_spark.functions.normalize import clean_string
 from ra2_datalake_linaresjoan_spark.operators.bridges import explode_bridge
-from ra2_datalake_linaresjoan_spark.operators.joins import semi_filter
+from ra2_datalake_linaresjoan_spark.operators.joins import at_most, semi_filter
 
 #: Seed game catalog (loader_NeonDB.py:118-132) + engine fallback row.
 GAME_CATALOG: list[tuple[str, str, bool]] = [
@@ -272,7 +272,7 @@ def write_gold(gold: dict[str, DataFrame], base_path: str) -> None:
             # an EMPTY partitioned write emits only _SUCCESS (no schema
             # footer anywhere) and the read-back fails with
             # UNABLE_TO_INFER_SCHEMA — write empty facts unpartitioned so
-            # the schema survives (capped probe, stops at the first row)
-            if df.limit(1).count() > 0:
+            # the schema survives (the probe stops at the first row)
+            if not at_most(df, 0):
                 writer = writer.partitionBy("fecha_id")
         writer.parquet(f"{base_path}/{name}")

@@ -20,6 +20,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ra2_datalake_linaresjoan_spark.operators.filters import finite_pred
 from ra2_datalake_linaresjoan_spark.operators.joins import anti_orphans
 
 #: The gold contract, declared once. Each dimension's primary key:
@@ -46,6 +47,17 @@ _FK = (
     ("dim_mercado_gaming", "dim_videojuego", False),
 )
 
+
+def _money_sum(c: str):
+    """Exact sum of a money column as per-row ``DECIMAL(20,8)``, the
+    reference warehouse type (loader_NeonDB.py:237-243): a double sum's
+    last digits follow the row order, a decimal sum does not.  Like
+    ``exact_cents``, a non-finite or out-of-range value (|x| >= 1e12
+    does not fit) is skipped: under ANSI its cast would raise."""
+    ok = finite_pred(c) & (F.abs(F.col(c)) < F.lit(1e12))
+    return F.coalesce(F.sum(F.when(ok, F.col(c).cast("decimal(20,8)"))), F.lit(0))
+
+
 #: Descriptive statistics (validator_warehouse.py:166-248), per table;
 #: each rides in that table's count aggregate. Built lazily: a Column
 #: needs a running session.
@@ -55,8 +67,8 @@ _STATS = {
         "categorias_distintas": F.countDistinct("categoria"),
     },
     "fact_metricas_gaming": lambda: {
-        "volumen_total": F.coalesce(F.sum("volumen_total"), F.lit(0.0)),
-        "liquidez_total": F.coalesce(F.sum("liquidez_total"), F.lit(0.0)),
+        "volumen_total": _money_sum("volumen_total"),
+        "liquidez_total": _money_sum("liquidez_total"),
     },
 }
 

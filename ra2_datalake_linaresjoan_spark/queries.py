@@ -2499,6 +2499,9 @@ _CHANGED: dict[str, int] = {
     "quantile_drift_detect": 15,
     # oracle floors its epoch buckets like the Spark side (pre-epoch ts)
     "time_bucket_rollup": 15,
+    # size route read through the shared at_most probe (row-identical)
+    "revenue_decile_lift": 15,
+    "semantic_kmeans": 15,
 }
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

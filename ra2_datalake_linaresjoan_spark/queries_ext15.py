@@ -95,14 +95,17 @@ LIMIT 20
 # ---------------------------------------------------------------------------
 
 
-def q_revenue_decile_lift(
-    spark: SparkSession, sf_dir: str, exact_threshold: int = 1_000_000
-) -> DataFrame:
+#: Customer counts up to this take the exact ntile window in
+#: revenue_decile_lift; larger ones bucket on approxQuantile boundaries.
+_DECILE_EXACT_CAP = 1_000_000
+
+
+def q_revenue_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer spend deciles with revenue share and cumulative share.
     Exact integer cents end to end.
 
     Size-guarded decile assignment (the ``operators/zorder.py`` pattern):
-    up to ``exact_threshold`` customers, an exact ``ntile(10)`` window
+    up to ``_DECILE_EXACT_CAP`` customers, an exact ``ntile(10)`` window
     with a customer-key tie-break lands equal totals deterministically —
     this is the oracle-parity path the driver checks at sf0.01. Above
     the threshold a partition-less window over the per-customer
@@ -116,18 +119,18 @@ def q_revenue_decile_lift(
     CONTIGUOUS range 1..(#distinct boundaries + 1) — under heavy ties
     fewer than 10 decile numbers appear (the trailing numbers are
     absent, never interior gaps). Shares remain exact for the reported
-    buckets. The guard itself is a capped ``limit(N+1).count()`` probe —
-    one extra aggregation job at call time.  money_case: a spend
+    buckets. The guard itself is an ``at_most`` probe — one extra
+    aggregation job at call time.  money_case: a spend
     RANKING needs a finite population — NaN/±Inf prices raise on the
     cents cast in both engines (round-11 value-fuzz)."""
     from ra2_datalake_linaresjoan_spark.operators.filters import money_case
+    from ra2_datalake_linaresjoan_spark.operators.joins import at_most
 
     orders = money_case(_t(spark, sf_dir, "orders"), "o_totalprice")
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
     )
-    small = per_cust.limit(exact_threshold + 1).count() <= exact_threshold
-    if small:
+    if at_most(per_cust, _DECILE_EXACT_CAP):
         w = Window.orderBy(F.desc("cents"), "o_custkey")
         assigned = per_cust.withColumn("decile", F.ntile(10).over(w))
     else:

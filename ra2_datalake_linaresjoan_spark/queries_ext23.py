@@ -58,8 +58,8 @@ def q_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is scanned, never self-joined.
 
     The eval slice is corpus-proportional (1/97 of docs), so the eval
-    gram set is NOT fixed-size: a capped ``limit(N+1).count()`` probe
-    (the ``similarity.py`` auto-guard pattern) chooses between a
+    gram set is NOT fixed-size: ``maybe_broadcast``'s ``at_most`` probe
+    chooses between a
     broadcast semi-join (eval grams ≤ ``_NC_BROADCAST_CAP``) and a
     shuffle semi-join where AQE picks the strategy. Both audit counts
     (contaminated docs, shared grams) come from ONE pass over the

@@ -182,10 +182,22 @@ assert all(0 < t < 65536 for t in _PB_CUTS16)
 
 def _pb_u16(key, b):
     """The deterministic 16-bit uniform for (row key, replicate b): two
-    32-bit LCG steps seeded by (key mod 2^32, b), top 16 bits of the
-    second state.  Exact int64 arithmetic (every intermediate < 2^53);
-    shared by the flat codegen fan-out in ``q_poisson_bootstrap_ci`` and
-    the struct-array form ``poisson_weight_structs``."""
+    32-bit LCG steps (Numerical Recipes a = 1664525, c = 1013904223)
+    seeded by (key mod 2^32, b), top 16 bits of the second state.  Exact
+    int64 arithmetic (every intermediate < 2^53), so DuckDB reproduces
+    it exactly; shared by ``q_poisson_bootstrap_ci`` and
+    ``tools/scale_probe.py`` so the probe measures the shipped kernel.
+
+    Statistical trade-off (recorded deliberately): the stage-1 seeds are
+    affinely spaced across replicates b and adjacent keys, so replicate
+    weights are lattice-correlated — each weight is still marginally
+    Poisson(1) (pinned against a pure-Python reference in
+    test_round11_fixes.py), but the JOINT stream is weaker than the md5
+    stream it replaced, which can slightly bias bootstrap CI coverage.
+    Accepted for the measured 2x win (3.04 -> 1.57 s at sf0.1): a
+    40-replicate percentile CI's own Monte Carlo error dominates any
+    lattice effect.  If CI fidelity ever matters more, add a xorshift/
+    murmur finalizer on state 2 IN BOTH ENGINES and re-pin."""
     km = F.pmod(key.cast("long"), F.lit(_PB_M32))
     bl = b.cast("long")
     s1 = F.pmod(km * _PB_A + bl * _PB_C + 12345, F.lit(_PB_M32))
@@ -206,53 +218,6 @@ def _pb_w_of(u16):
     return w
 
 
-def poisson_weight_structs(key):
-    """The Poisson-bootstrap weight fan-out as ONE Column expression:
-    for a row key, the array of ``_PB_B`` (b, w) structs — replicate
-    b's weight drawn from a two-step 32-bit LCG (Numerical Recipes
-    a = 1664525, c = 1013904223) seeded by (key mod 2^32, b), taking
-    the TOP 16 bits of the second state as the uniform and inverse-
-    CDF'ing it through 7 integer comparisons against ``_PB_CUTS16``.
-
-    Round-11 A/B (round-10 verdict ask #2): the previous stream sliced
-    md5 hex — cryptographic quality the bootstrap never needed, and the
-    md5 + substr + base-16 conv WAS the measured query cost (3.0 s
-    driver / 2.0 s quiet-host at sf0.1).  The LCG is ~10 integer ops
-    per replicate, entirely inside whole-stage codegen, and EXACTLY
-    reproducible in DuckDB (int64 arithmetic never overflows: every
-    product is < 2^53).  Two LCG steps decorrelate adjacent b's (state
-    1 is linear in b; state 2 mixes).  Shared by the query below and
-    ``tools/scale_probe.py`` so the probe always measures the shipped
-    kernel.
-
-    Statistical trade-off (round-12 advisor, recorded deliberately):
-    the stage-1 seeds are affinely spaced across replicates b and
-    adjacent keys, so replicate weights are lattice-correlated — each
-    weight is still marginally Poisson(1) (pinned against a pure-
-    Python reference in test_round11_fixes.py), but the JOINT stream
-    is weaker than the md5 stream it replaced, which can slightly bias
-    bootstrap CI coverage.  Accepted for the measured 2× win
-    (3.04 → 1.57 s at sf0.1): a 40-replicate percentile CI's own Monte
-    Carlo error dominates any lattice effect at this replicate count.
-    If CI fidelity ever matters more than the 1.5 s, add a xorshift/
-    murmur finalizer on state 2 IN BOTH ENGINES and re-pin.
-
-    Round-14 note: ``q_poisson_bootstrap_ci`` itself no longer explodes
-    this struct array — it runs the SAME ``_pb_u16``/``_pb_w_of`` kernel
-    in flat codegen projections after an explode(sequence) (see its
-    inline comment for the measured interpreted-lambda/CSE problem).
-    This array form remains for ``tools/scale_probe.py`` and shares the
-    two kernel helpers so the probe still measures the shipped
-    arithmetic."""
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(_PB_B)),
-        lambda b: F.struct(
-            b.cast("long").alias("b"),
-            _pb_w_of(_pb_u16(key, b)).alias("w"),
-        ),
-    )
-
-
 def q_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row: exact mean order value (cents) and a 90 % Poisson-
     bootstrap percentile CI from B = 40 deterministic replicates — the
@@ -260,20 +225,15 @@ def q_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     by permutation (each replicate reweights rows by an independent
     Poisson(1) draw instead of drawing n rows with replacement).
 
-    Determinism: replicate b = 8g+j+1 draws its weight from the j-th
-    4-hex slice of md5(orderkey:g) — one md5 yields EIGHT independent
-    16-bit uniforms, so a row pays 5 md5 calls for all 40 replicates
-    instead of 40 (the md5 was the whole cost at sf0.1: 8.5 s naive,
-    2.4 s at 4 slices/md5, 1.6 s at 8). The inverse CDF runs as 7
-    integer comparisons against precomputed 16-bit cuts (``_PB_CUTS16``)
-    — no float, no division. The md5 string is materialized in an outer
-    transform because Spark does no CSE inside lambda bodies — an
-    inner-lambda md5 would recompute per slice. Replicate b = 0 pins
-    weight 1 (the actual sample), so the exact mean and all 40
-    replicate means come from ONE scan and ONE (b)-keyed aggregate with
-    map-side combine; replicate means are exact-integer ratios
-    (Σw·cents / Σw), so the sorted pick of ranks 2 and 38 (nearest-rank
-    p05/p95 of 40) is engine-identical.
+    Determinism: replicate b draws its weight from ``_pb_u16`` (a
+    two-step 32-bit LCG seeded by (orderkey, b), exact int64 in both
+    engines), and the inverse CDF runs as 7 integer comparisons against
+    precomputed 16-bit cuts (``_PB_CUTS16``) — no float, no division.
+    Replicate b = 0 pins weight 1 (the actual sample), so the exact mean
+    and all 40 replicate means come from ONE scan and ONE (b)-keyed
+    aggregate with map-side combine; replicate means are exact-integer
+    ratios (Σw·cents / Σw), so the sorted pick of ranks 2 and 38
+    (nearest-rank p05/p95 of 40) is engine-identical.
 
     Complete-case on (o_orderkey, o_totalprice) in lockstep with the
     oracle: a NULL key has no md5 weight stream, a NULL price adds

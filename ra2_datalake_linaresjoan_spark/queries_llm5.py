@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ra2_datalake_linaresjoan_spark.operators.joins import at_most
 from ra2_datalake_linaresjoan_spark.queries import EMB_CLEAN_SQL, _emb_clean, _spread, _t
 
 _SPAN = 16  # words per dedup span
@@ -191,8 +192,8 @@ ORDER BY t.lang
 # ---------------------------------------------------------------------------
 
 
-#: Auto-guard cap for the assignment-strategy probe (round-14; the
-#: ngram_contamination / similarity.py capped-count pattern).  Corpora
+#: Auto-guard cap for the assignment-strategy ``at_most`` probe
+#: (round-14).  Corpora
 #: at or under this many clean vectors route to the single-action
 #: broadcast-join Lloyd (zero driver collects, one Spark job — the
 #: measured winner at bench scale, where the whole query is fixed
@@ -329,8 +330,8 @@ def q_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost 4.6 s as three sequential driver-gated jobs + two heavy
     assignment-expression compiles, vs 1.7 s as the round-12 one-job
     broadcast-join; interleaved A/B at HEAD read 1.9-3.0x in the join
-    shape's favor at every iteration): a capped-count probe (the
-    ngram_contamination auto-guard pattern) routes corpora ≤
+    shape's favor at every iteration): an ``at_most`` probe routes
+    corpora ≤
     ``_KMEANS_SMALL_CAP`` to the single-action join Lloyd and larger
     corpora to the in-row + localCheckpoint shape, which removes both
     corpus-sized assignment exchanges where they actually cost (the
@@ -343,7 +344,7 @@ def q_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean = _emb_clean(spark, sf_dir)
     vecs = _spread(spark, clean).select("vec_id", _qvec(F.col("embedding")).alias("qv"))
     # probe the unspread frame: same rows, no second read, no repartition
-    small = clean.limit(_KMEANS_SMALL_CAP + 1).count() <= _KMEANS_SMALL_CAP
+    small = at_most(clean, _KMEANS_SMALL_CAP)
     if small:
         a1 = _assign_join(vecs, _seed_frame(vecs))
     else:
@@ -471,7 +472,7 @@ def q_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows with the corpus so the per-cluster block stays machine-sized).
     Exact integer cosines make the prune set engine-portable. Reports
     per-cluster members, pruned count, and the kept fraction.
-    Round-14 routing: the same ``_KMEANS_SMALL_CAP`` capped-count probe
+    Round-14 routing: the same ``_KMEANS_SMALL_CAP`` ``at_most`` probe
     as q_semantic_kmeans — small corpora take the round-12 one-action
     join assignment (the measured bench winner; the whole sf0.1 cost is
     fixed job/compile overhead), large corpora keep the round-13
@@ -483,8 +484,7 @@ def q_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity audit)."""
     emb = _emb_clean(spark, sf_dir)
     vecs = emb.select("vec_id", _qvec(F.col("embedding")).alias("qv"))
-    small = emb.limit(_KMEANS_SMALL_CAP + 1).count() <= _KMEANS_SMALL_CAP
-    if small:
+    if at_most(emb, _KMEANS_SMALL_CAP):
         asg = _assign_join(vecs, _seed_frame(vecs)).select(
             "vec_id", "cluster", "qv"
         )

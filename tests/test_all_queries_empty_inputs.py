@@ -35,6 +35,33 @@ def test_every_registered_query_survives_empty_tables(spark, empty_sf):
     assert not failures, "\n".join(failures)
 
 
+def test_contamination_empty_train_rate_is_zero(spark, empty_sf):
+    """The lazy rewrite must keep the pre-lazy contract: an empty train
+    set reports contamination_rate 0.0, not NULL (bare engine-side
+    division by zero yields NULL in both Spark and DuckDB)."""
+    row = q.queries()["contamination"](spark, empty_sf).collect()[0]
+    assert row["n_train"] == 0
+    assert row["contamination_rate"] == 0.0
+
+
+def test_char_entropy_zero_length_text(spark, tmp_path):
+    """Spark's sequence(1, 0) is DESCENDING [1, 0], not empty — the
+    length guard must keep zero-length texts at entropy 0.0 instead of
+    dividing by zero (DuckDB's range(1,1) is empty, so without the
+    shared guard the engines would diverge)."""
+    d = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "", "en", "s0", 0), (2, "aaab", "en", "s0", 4)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(d + "/documents.parquet")
+    rows = {
+        r["doc_id"]: r
+        for r in q.queries()["char_entropy_filter"](spark, d).collect()
+    }
+    assert rows[1]["char_entropy"] == 0.0
+    assert rows[2]["char_entropy"] > 0.5 and rows[2]["low_entropy"]
+
+
 @pytest.fixture(scope="module")
 def identical_docs_sf(spark, tmp_path_factory):
     """Adversarial corpus: 200 documents with IDENTICAL text — one giant

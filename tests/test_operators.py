@@ -232,6 +232,23 @@ def test_connected_components(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
 
 
+def test_connected_components_raises_when_rounds_run_out(spark, monkeypatch):
+    """A path longer than the round budget must raise, not return the
+    half-propagated labels as component ids."""
+    import pytest
+
+    from ra2_datalake_linaresjoan_spark.operators import components
+
+    monkeypatch.setattr(components, "MAX_ITER", 3)
+    path = spark.createDataFrame([(i, i + 1) for i in range(5)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="3 rounds"):
+        components.connected_components(path)
+    # the same path converges once the budget covers its diameter
+    monkeypatch.setattr(components, "MAX_ITER", 6)
+    got = {r["component_id"] for r in components.connected_components(path).collect()}
+    assert got == {0}
+
+
 def test_hll_sketch_rollup(spark, sf_dir):
     """Mergeable HLL sketches: per-group sketches union to the global
     distinct count — the pre-aggregated-rollup path for COUNT(DISTINCT)
@@ -268,9 +285,10 @@ def test_salted_join_deterministic_with_salt_cols(spark):
     assert out1.count() == expected
 
 
-def test_surrogate_key_modes_agree(spark):
+def test_surrogate_key_modes_agree(spark, monkeypatch):
     """The offset-partitioned big-input path must produce exactly the keys
     the global-window path produces (dense, 1-based, sorted order)."""
+    from ra2_datalake_linaresjoan_spark.operators import surrogate
     from ra2_datalake_linaresjoan_spark.operators.surrogate import surrogate_key
 
     from pyspark.sql import functions as F
@@ -281,7 +299,9 @@ def test_surrogate_key_modes_agree(spark):
         )
     ).distinct()
     small = {(r["sk"], r["name"]) for r in surrogate_key(df, ["name"]).collect()}
-    big_df = surrogate_key(df, ["name"], small_threshold=10, num_parts=8)
+    monkeypatch.setattr(surrogate, "SMALL_THRESHOLD", 10)
+    monkeypatch.setattr(surrogate, "NUM_PARTS", 8)
+    big_df = surrogate_key(df, ["name"])
     big = {(r["sk"], r["name"]) for r in big_df.collect()}
     assert small == big
     # the big-input path must not funnel through one partition anywhere
@@ -334,7 +354,7 @@ def test_zorder_tightens_both_dimensions(spark, tmp_path):
     assert avg_span(z_path, "y") < 120
 
 
-def test_zorder_quantile_path_no_window(spark, tmp_path):
+def test_zorder_quantile_path_no_window(spark, tmp_path, monkeypatch):
     """Above the exact threshold, zorder_key must bucket via sampled
     quantile boundaries (Bucketizer binary search) — no global window,
     no single-partition stage anywhere in the plan — while still
@@ -344,6 +364,7 @@ def test_zorder_quantile_path_no_window(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from ra2_datalake_linaresjoan_spark.operators import zorder
     from ra2_datalake_linaresjoan_spark.operators.zorder import (
         write_zordered,
         zorder_key,
@@ -353,13 +374,14 @@ def test_zorder_quantile_path_no_window(spark, tmp_path):
         (F.col("id") % 200).alias("x"),
         ((F.col("id") * 7919) % 200).alias("y"),
     )
-    keyed = zorder_key(df, ["x", "y"], exact_threshold=1_000)
+    monkeypatch.setattr(zorder, "EXACT_THRESHOLD", 1_000)
+    keyed = zorder_key(df, ["x", "y"])
     plan = keyed._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     assert "SinglePartition" not in plan
 
     z_path = str(tmp_path / "zorder_q")
-    write_zordered(df, z_path, ["x", "y"], n_files=16, exact_threshold=1_000)
+    write_zordered(df, z_path, ["x", "y"], n_files=16)
 
     def avg_span(path, col):
         spans = []
@@ -375,17 +397,19 @@ def test_zorder_quantile_path_no_window(spark, tmp_path):
     assert avg_span(z_path, "y") < 120
 
 
-def test_zorder_quantile_path_rejects_non_numeric(spark):
+def test_zorder_quantile_path_rejects_non_numeric(spark, monkeypatch):
     import pytest
     from pyspark.sql import functions as F
 
+    from ra2_datalake_linaresjoan_spark.operators import zorder
     from ra2_datalake_linaresjoan_spark.operators.zorder import zorder_key
 
+    monkeypatch.setattr(zorder, "EXACT_THRESHOLD", 1_000)
     df = spark.range(5_000).select(
         F.col("id").alias("x"), F.concat(F.lit("s"), F.col("id")).alias("name")
     )
     with pytest.raises(ValueError, match="numeric"):
-        zorder_key(df, ["x", "name"], exact_threshold=1_000)
+        zorder_key(df, ["x", "name"])
     # small input still takes the exact ntile path for any orderable type
     assert "_zorder" in zorder_key(df.limit(100), ["x", "name"]).columns
 

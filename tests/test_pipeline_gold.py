@@ -201,6 +201,37 @@ def test_validator_reports_broken_gold(spark, silver):
     assert report.ok is False
 
 
+def test_validator_money_stats_ignore_row_order(spark, silver):
+    """The money stats are exact DECIMAL(20,8) sums: the same fact rows
+    in two orders give equal stats (a double sum's last digits follow
+    the order), and a NaN or out-of-range value is skipped, not cast."""
+    from decimal import Decimal
+
+    gold = build_gold(spark, *silver)
+    fact = gold["fact_metricas_gaming"]
+    base = fact.first().asDict()
+    # as doubles, sum(vol) and sum(reversed(vol)) differ in the last digits
+    vol = [0.1] * 10 + [1e8] + [0.7] * 5
+    liq = [0.3, 0.2, float("nan"), 1e13, 5.55, -0.25] + [0.1] * 10
+    rows = [
+        tuple({**base, "volumen_total": v, "liquidez_total": q}[c] for c in fact.columns)
+        for v, q in zip(vol, liq)
+    ]
+    stats = []
+    for ordered in (rows, rows[::-1]):
+        gold["fact_metricas_gaming"] = spark.createDataFrame(
+            ordered, fact.schema
+        ).coalesce(1)
+        stats.append(validate_gold(gold).stats)
+    assert stats[0] == stats[1]
+
+    def exact(xs):  # NaN fails the bound, as it fails finite_pred
+        return float(sum(Decimal(repr(x)) for x in xs if abs(x) < 1e12))
+
+    assert stats[0]["volumen_total"] == exact(vol)
+    assert stats[0]["liquidez_total"] == exact(liq)
+
+
 def test_run_pipeline_raises_on_orphan(spark, raw, tmp_path, monkeypatch):
     from ra2_datalake_linaresjoan_spark import cli
 

@@ -51,15 +51,6 @@ NEW_QUERIES = [
 ]
 
 
-def test_contamination_empty_train_rate_is_zero(spark, empty_sf):
-    """The lazy rewrite must keep the pre-lazy contract: an empty train
-    set reports contamination_rate 0.0, not NULL (bare engine-side
-    division by zero yields NULL in both Spark and DuckDB)."""
-    row = q.queries()["contamination"](spark, empty_sf).collect()[0]
-    assert row["n_train"] == 0
-    assert row["contamination_rate"] == 0.0
-
-
 @pytest.mark.parametrize("name", NEW_QUERIES)
 def test_new_query_survives_empty_tables(spark, empty_sf, name):
     # bellman_ford seeds node 0 itself; everything else must yield an

@@ -53,21 +53,3 @@ ROUND4_QUERIES = [
 def test_round4_query_survives_empty_tables(spark, empty_sf, name):
     n = q.queries()[name](spark, empty_sf).count()
     assert n >= 0
-
-
-def test_char_entropy_zero_length_text(spark, tmp_path):
-    """Spark's sequence(1, 0) is DESCENDING [1, 0], not empty — the
-    length guard must keep zero-length texts at entropy 0.0 instead of
-    dividing by zero (DuckDB's range(1,1) is empty, so without the
-    shared guard the engines would diverge)."""
-    d = str(tmp_path / "docs")
-    spark.createDataFrame(
-        [(1, "", "en", "s0", 0), (2, "aaab", "en", "s0", 4)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.parquet(d + "/documents.parquet")
-    rows = {
-        r["doc_id"]: r
-        for r in q.queries()["char_entropy_filter"](spark, d).collect()
-    }
-    assert rows[1]["char_entropy"] == 0.0
-    assert rows[2]["char_entropy"] > 0.5 and rows[2]["low_entropy"]

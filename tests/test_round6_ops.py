@@ -302,13 +302,16 @@ def test_containment_pairs_df_cap_bounds_skewed_shingle(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_revenue_deciles_quantile_path_contiguous_under_ties(spark, tmp_path):
-    """Force the approxQuantile path (exact_threshold=0) on a corpus with
+def test_revenue_deciles_quantile_path_contiguous_under_ties(
+    spark, tmp_path, monkeypatch
+):
+    """Force the approxQuantile path (a zero exact cap) on a corpus with
     only 3 distinct spend values (70/25/5 split). approxQuantile repeats
     boundaries under ties; un-deduped, the when-chain double-increments
     past a repeated boundary and skips interior decile numbers (the
     ADVICE r5 finding). Deduped boundaries must yield a CONTIGUOUS
     populated decile range starting at 1, covering all customers."""
+    from ra2_datalake_linaresjoan_spark import queries_ext15
     from ra2_datalake_linaresjoan_spark.queries_ext15 import (
         q_revenue_decile_lift,
     )
@@ -322,8 +325,9 @@ def test_revenue_deciles_quantile_path_contiguous_under_ties(spark, tmp_path):
     d = tmp_path / "ties_sf"
     orders.write.mode("overwrite").parquet(str(d / "orders.parquet"))
 
+    monkeypatch.setattr(queries_ext15, "_DECILE_EXACT_CAP", 0)
     out = sorted(
-        q_revenue_decile_lift(spark, str(d), exact_threshold=0).collect(),
+        q_revenue_decile_lift(spark, str(d)).collect(),
         key=lambda r: r["decile"],
     )
     deciles = [r["decile"] for r in out]

@@ -133,7 +133,7 @@ def test_semi_filter_large_path_pins_no_storage(spark, monkeypatch):
     # no FORCED broadcast hint — the large path must leave the strategy
     # to Catalyst/AQE (which may still pick broadcast from real sizes)
     logical = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "ResolvedHint" not in logical, logical
+    assert "strategy=broadcast" not in logical, logical
     # and no NEW localCheckpoint blocks pinned in executor storage
     after = {
         i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()

@@ -23,6 +23,7 @@ Usage: python tools/dirty_parity_audit.py [only_csv_names]
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 
@@ -364,11 +365,18 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    tmp = tempfile.mkdtemp(prefix="dirty_parity_")
+    try:
+        return audit(spark, build_dirty_dir(spark, tmp), only)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def audit(spark: SparkSession, d: str, only: set[str] | None) -> int:
     from oracle_harness import compare, duck_con
 
     from ra2_datalake_linaresjoan_spark.queries import oracle_sql, queries
 
-    d = build_dirty_dir(spark, tempfile.mkdtemp(prefix="dirty_parity_"))
     con = duck_con(d)
     qs, sqls = queries(), oracle_sql()
     tallies: dict[str, list[str]] = {}

@@ -364,21 +364,28 @@ def probe(spark, docs: DataFrame) -> dict[str, float]:
     timed("quantile_hist", quantile_hist_kernel)
 
     # Poisson-bootstrap weight fan-out (the poisson_bootstrap_ci map
-    # kernel, via the SHARED expression builder so the probe always
-    # measures the shipped kernel): two-step 32-bit LCG → 40 16-bit
-    # integer-cut weights per row, one 41-key aggregate (round-11: the
-    # md5 stream this replaced WAS the kernel cost)
+    # kernel, via the SHARED _pb_u16/_pb_w_of builders in the query's
+    # flat shape, so the probe always measures the shipped kernel):
+    # explode(sequence) → two-step 32-bit LCG → 40 16-bit integer-cut
+    # weights per row, one 40-key aggregate
     def poisson_weights():
         from ra2_datalake_linaresjoan_spark.queries_ext27 import (
-            poisson_weight_structs,
+            _PB_B,
+            _pb_u16,
+            _pb_w_of,
         )
 
-        weights = poisson_weight_structs(F.col("doc_id"))
         (
-            docs.select(F.col("n_chars").alias("x"), F.explode(weights).alias("bw"))
-            .groupBy("bw.b")
-            .agg(F.sum(F.col("bw.w") * F.col("x")), F.sum("bw.w"))
-            .count()
+            docs.select(
+                F.col("n_chars").alias("x"),
+                "doc_id",
+                F.explode(F.sequence(F.lit(1), F.lit(_PB_B))).alias("b"),
+            )
+            .select("x", "b", _pb_u16(F.col("doc_id"), F.col("b")).alias("u16"))
+            .select("x", "b", _pb_w_of(F.col("u16")).alias("w"))
+            .groupBy("b")
+            .agg(F.sum(F.col("w") * F.col("x")), F.sum("w"))
+            .collect()  # not count(): it would prune the weight columns
         )
 
     timed("poisson_weights", poisson_weights)
