@@ -157,11 +157,18 @@ def parse_tags(col: Column) -> Column:
     return F.when(F.size(tags) > 0, tags).otherwise(F.lit(None).cast("array<string>"))
 
 
+#: ``NULL_LITERALS`` as one SQL array: parsed in one call per column,
+#: where ``isin`` sends every literal to the JVM on its own.
+_NULL_LITERALS_SQL = "array({})".format(", ".join(f"'{s}'" for s in NULL_LITERALS))
+
+
 def normalize_null_literals(col: Column) -> Column:
     """Map the reference's fake-null string literals to real NULL (F11)."""
+    s = col.cast("string")
     return F.when(
-        F.trim(col.cast("string")).isin(*NULL_LITERALS), F.lit(None).cast("string")
-    ).otherwise(col.cast("string"))
+        F.array_contains(F.expr(_NULL_LITERALS_SQL), F.trim(s)),
+        F.lit(None).cast("string"),
+    ).otherwise(s)
 
 
 def coalesce_chain(*cols: Column | str, default: str | None = None) -> Column:

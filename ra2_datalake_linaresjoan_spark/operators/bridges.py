@@ -2,8 +2,8 @@
 
 The reference builds bridge tables with per-row Python loops over embedded
 JSON (loader_NeonDB.py:457-551); here it's ``from_json`` + ``explode`` —
-fully distributed, and the downstream FK-validity check is a broadcast
-semi-join instead of a driver-side set.
+fully distributed, and the downstream FK-validity check is a left-semi
+join instead of a driver-side set.
 """
 
 from __future__ import annotations

@@ -12,12 +12,15 @@ DataFrame plans:
 
 Every recipe is filter → window-dedup → normalize → fill/coalesce →
 truncate, all Column expressions: one shuffle (the dedup window) per
-entity regardless of data size.
+entity regardless of data size. Each stage is one projection
+(``select``/``withColumns``), not a ``withColumn`` per column: every
+``withColumn`` re-analyzes the whole plan on the driver, and on a
+43-string-column bronze that chain cost seconds before Spark ran.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark.functions.classify import (
@@ -66,22 +69,43 @@ _DATE_COLS = ["startDate", "endDate", "creationDate", "createdAt", "updatedAt"]
 
 
 def _normalize_string_nulls(df: DataFrame) -> DataFrame:
-    """F11 over every string column (spark_cleaner._normalize_nulls)."""
-    for c, t in df.dtypes:
-        if t == "string":
-            df = df.withColumn(c, normalize_null_literals(F.col(c)))
-    return df
+    """F11 over every string column (spark_cleaner._normalize_nulls), as
+    one projection."""
+    return df.withColumns(
+        {c: normalize_null_literals(F.col(c)) for c, t in df.dtypes if t == "string"}
+    )
 
 
 def _has(df: DataFrame, col: str) -> bool:
     return col in df.columns
 
 
+def _typed(df: DataFrame, numerics: list[str], booleans: list[str]) -> dict[str, Column]:
+    """Typing expressions for the listed columns ``df`` has: numerics
+    (0.0 default), booleans (False default), and every date column
+    (timestamp, null on failure)."""
+    out = {
+        c: F.coalesce(normalize_numeric(F.col(c)), F.lit(0.0))
+        for c in numerics
+        if _has(df, c)
+    }
+    out.update(
+        {
+            c: F.coalesce(normalize_boolean(F.col(c)), F.lit(False))
+            for c in booleans
+            if _has(df, c)
+        }
+    )
+    out.update({c: to_timestamp_coerce(F.col(c)) for c in _DATE_COLS if _has(df, c)})
+    return out
+
+
 def clean_markets(df: DataFrame) -> DataFrame:
     """Silver markets recipe (spark_cleaner.py:74-160 semantics):
     null-literal normalization → id+question guard → newest-per-id dedup →
     numeric/boolean/timestamp typing → fills and coalesce chains →
-    truncation."""
+    truncation. Typing and fills read disjoint columns and truncation
+    wraps the filled value, so the three are one projection."""
     df = _normalize_string_nulls(df)
     df = df.filter(non_null_non_blank("id", "question"))
     sort_col = "updatedAt" if _has(df, "updatedAt") else (
@@ -98,27 +122,18 @@ def clean_markets(df: DataFrame) -> DataFrame:
         )
     else:
         df = dedup_keep_newest(df, ["id"], None, tiebreak=())
-    for c in _NUMERIC_COLS:
-        if _has(df, c):
-            df = df.withColumn(c, F.coalesce(normalize_numeric(F.col(c)), F.lit(0.0)))
-    for c in ["active", "closed", "featured"]:
-        if _has(df, c):
-            df = df.withColumn(c, F.coalesce(normalize_boolean(F.col(c)), F.lit(False)))
-    for c in _DATE_COLS:
-        if _has(df, c):
-            df = df.withColumn(c, to_timestamp_coerce(F.col(c)))
-    if _has(df, "resolutionSource"):
-        df = df.withColumn("resolutionSource", F.coalesce("resolutionSource", F.lit("Sin fuente")))
-    if _has(df, "slug"):
-        df = df.withColumn("slug", F.coalesce("slug", F.col("id").cast("string")))
-    if _has(df, "outcomes"):
-        df = df.withColumn("outcomes", F.coalesce("outcomes", F.lit("[]")))
-    if _has(df, "description"):
-        df = df.withColumn("description", F.coalesce("description", F.lit("Sin descripción")))
+    out = _typed(df, _NUMERIC_COLS, ["active", "closed", "featured"])
+    fills = {
+        "resolutionSource": F.lit("Sin fuente"),
+        "slug": F.col("id").cast("string"),
+        "outcomes": F.lit("[]"),
+        "description": F.lit("Sin descripción"),
+    }
+    out.update({c: F.coalesce(c, v) for c, v in fills.items() if _has(df, c)})
     for c, n in {"question": 500, "slug": 500, "resolutionSource": 500}.items():
         if _has(df, c):
-            df = df.withColumn(c, F.substring(F.col(c).cast("string"), 1, n))
-    return df
+            out[c] = F.substring(out.get(c, F.col(c)).cast("string"), 1, n)
+    return df.withColumns(out)
 
 
 def clean_events(df: DataFrame) -> DataFrame:
@@ -131,22 +146,14 @@ def clean_events(df: DataFrame) -> DataFrame:
         "createdAt" if _has(df, "createdAt") else None
     )
     df = dedup_keep_newest(df, ["id"], sort_col, tiebreak=())
-    for c in ["active", "closed", "featured", "resolved"]:
-        if _has(df, c):
-            df = df.withColumn(c, F.coalesce(normalize_boolean(F.col(c)), F.lit(False)))
-    for c in _DATE_COLS:
-        if _has(df, c):
-            df = df.withColumn(c, to_timestamp_coerce(F.col(c)))
+    out = _typed(df, [], ["active", "closed", "featured", "resolved"])
     title_chain = [c for c in ["title", "ticker", "slug"] if _has(df, c)]
     if title_chain:
-        df = df.withColumn(
-            "title", F.coalesce(*[F.col(c) for c in title_chain], F.lit("Sin título"))
-        )
-    if _has(df, "category"):
-        df = df.withColumn("category", F.coalesce("category", F.lit("Gaming")))
-    if _has(df, "subcategory"):
-        df = df.withColumn("subcategory", F.coalesce("subcategory", F.lit("General")))
-    return df
+        out["title"] = F.coalesce(*[F.col(c) for c in title_chain], F.lit("Sin título"))
+    for c, v in {"category": "Gaming", "subcategory": "General"}.items():
+        if _has(df, c):
+            out[c] = F.coalesce(c, F.lit(v))
+    return df.withColumns(out)
 
 
 def clean_series(df: DataFrame) -> DataFrame:
@@ -155,11 +162,12 @@ def clean_series(df: DataFrame) -> DataFrame:
     df = _normalize_string_nulls(df)
     df = df.filter(non_null_non_blank("id"))
     df = dedup_keep_newest(df, ["id"], "updatedAt" if _has(df, "updatedAt") else None)
+    out = {}
     if _has(df, "slug"):
-        df = df.withColumn("slug", F.coalesce("slug", F.col("id").cast("string")))
+        out["slug"] = F.coalesce("slug", F.col("id").cast("string"))
     if _has(df, "title") and _has(df, "description"):
-        df = df.withColumn("description", F.coalesce("description", "title"))
-    return df
+        out["description"] = F.coalesce("description", "title")
+    return df.withColumns(out)
 
 
 def gaming_market_filter(df: DataFrame, text_col: str = "question") -> DataFrame:
@@ -180,19 +188,21 @@ def gaming_market_filter(df: DataFrame, text_col: str = "question") -> DataFrame
 
 def enrich_gaming_markets(df: DataFrame) -> DataFrame:
     """Classifier + derived columns (transformer_data.py:521-566):
-    gaming_type, bet_type, outcomes_list, outcome_count, category flag."""
-    out = df.withColumn("gaming_type", extract_gaming_type(F.col("question")))
-    out = out.withColumn("bet_type", extract_bet_type(F.col("question")))
+    gaming_type, bet_type, outcomes_list, outcome_count, category flag.
+    Two projections: ``outcome_count`` reads the parsed ``outcomes_list``
+    instead of parsing the outcomes a second time."""
+    out = {
+        "gaming_type": extract_gaming_type(F.col("question")),
+        "bet_type": extract_bet_type(F.col("question")),
+    }
+    derived = {}
     if _has(df, "outcomes"):
-        out = out.withColumn("outcomes_list", normalize_outcomes(F.col("outcomes")))
-        out = out.withColumn(
-            "outcome_count",
-            F.when(F.col("outcomes_list").isNull(), F.lit(0)).otherwise(
-                F.size("outcomes_list")
-            ),
-        )
-    out = out.withColumn("category_simplified", F.lit("Gaming"))
-    return out
+        out["outcomes_list"] = normalize_outcomes(F.col("outcomes"))
+        derived["outcome_count"] = F.when(
+            F.col("outcomes_list").isNull(), F.lit(0)
+        ).otherwise(F.size("outcomes_list"))
+    derived["category_simplified"] = F.lit("Gaming")
+    return df.withColumns(out).withColumns(derived)
 
 
 def gaming_summary(df: DataFrame) -> DataFrame:

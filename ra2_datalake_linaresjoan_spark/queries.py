@@ -2502,6 +2502,8 @@ _CHANGED: dict[str, int] = {
     # size route read through the shared at_most probe (row-identical)
     "revenue_decile_lift": 15,
     "semantic_kmeans": 15,
+    # silver recipes built as one projection per stage (row-identical)
+    "pipeline_parity": 15,
 }
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -175,6 +175,80 @@ def test_gold_star_schema(spark, silver):
     assert gold["fact_metricas_gaming"].count() == 3
 
 
+def _node_names(plan) -> list[str]:
+    """Node names of a Catalyst plan tree, depth first."""
+    out = [plan.nodeName()]
+    children = plan.children()
+    for i in range(children.size()):
+        out += _node_names(children.apply(i))
+    return out
+
+
+def test_dim_videojuego_is_a_local_relation(spark):
+    """The seeded catalog plans as a literal relation: an RDD-backed scan
+    of its 13 rows costs several times more each time it is read."""
+    from pyspark.sql.types import StructType
+
+    from ra2_datalake_linaresjoan_spark.plans.star_schema import (
+        GAME_CATALOG,
+        dim_videojuego,
+    )
+
+    df = dim_videojuego(spark)
+    assert _node_names(df._jdf.queryExecution().optimizedPlan()) == ["LocalRelation"]
+    ddl = StructType.fromDDL(
+        "videojuego_id int, nombre_juego string, genero string, es_esports boolean"
+    )
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in ddl
+    ]
+    assert [tuple(r) for r in df.collect()] == [
+        (i, name, genero, es) for i, (name, genero, es) in enumerate(GAME_CATALOG, 1)
+    ]
+
+
+def test_build_gold_fires_only_the_tag_key_probe(spark, silver, monkeypatch):
+    """Building gold runs no Spark job except the dim_tag surrogate-key
+    size probe: the bridges join their dimension keys lazily, with no
+    probe of their own."""
+    import uuid
+
+    import ra2_datalake_linaresjoan_spark.operators.surrogate as surrogate
+
+    sc = spark.sparkContext
+    build, probe = f"gold_build_{uuid.uuid4().hex}", f"gold_probe_{uuid.uuid4().hex}"
+    calls = []
+    surrogate_at_most = surrogate.at_most
+
+    def grouped_probe(df, n):
+        calls.append(n)
+        sc.setJobGroup(probe, "dim_tag surrogate probe")
+        try:
+            return surrogate_at_most(df, n)
+        finally:
+            sc.setJobGroup(build, "build_gold")
+
+    monkeypatch.setattr(surrogate, "at_most", grouped_probe)
+    sc.setJobGroup(build, "build_gold")
+    try:
+        build_gold(spark, *silver)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    assert calls == [surrogate.SMALL_THRESHOLD]
+    assert tracker.getJobIdsForGroup(probe)
+    assert tracker.getJobIdsForGroup(build) == []
+
+
+def test_clean_markets_is_a_few_projections(raw):
+    """Each silver stage is one projection: a withColumn per column (20
+    here) would put one Project per column back into the plan."""
+    markets, _, _ = raw
+    plan = clean_markets(markets)._jdf.queryExecution().analyzed()
+    assert _node_names(plan).count("Project") <= 8
+
+
 def test_validator_reports_broken_gold(spark, silver):
     """The validator must SEE a broken warehouse: a duplicated dim PK
     fails that table's uniqueness, an unknown fact FK counts one orphan

@@ -7,7 +7,8 @@ warehouse load throughput. This harness replays the engine's whole
 medallion flow (`cli.run_pipeline` — the same function the CLI runs,
 writing silver and gold into a temporary lake) on the messy pipeline
 fixtures replicated to a comparable row count, and prints ONE JSON line
-with wall seconds and rows/s.
+with wall seconds, rows/s and the Spark jobs the ``run_pipeline`` call
+fired (its job group in the status tracker).
 
 Run: python tools/pipeline_bench.py [n_copies]   (default 50000 ≈ 450 K rows)
 """
@@ -65,6 +66,8 @@ def main() -> None:
     n_in = markets.count() + events.count() + series.count()
 
     lake = tempfile.mkdtemp(prefix="pipeline_bench_")
+    sc = spark.sparkContext
+    sc.setJobGroup("run_pipeline", "cli.run_pipeline")
     try:
         t0 = time.perf_counter()
         out = run_pipeline(
@@ -73,7 +76,11 @@ def main() -> None:
         )
         wall = time.perf_counter() - t0
     finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
         shutil.rmtree(lake, ignore_errors=True)
+    # the status store fills from the listener bus; drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup("run_pipeline"))
 
     v = out["validation"]
     ok = all(v["uniqueness"].values()) and not any(v["orphans"].values())
@@ -85,6 +92,7 @@ def main() -> None:
                 "unit": "sec",
                 "rows_in": n_in,
                 "rows_per_sec": int(n_in / wall),
+                "spark_jobs": jobs,
                 "validation_clean": ok,
                 "baseline_envelope_sec": "180-300 (reference 3-5 min end-to-end)",
             }
