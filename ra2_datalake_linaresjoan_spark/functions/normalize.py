@@ -63,13 +63,9 @@ def normalize_numeric(col: Column) -> Column:
     - otherwise the string is float-cast as-is (dots-only strings pass through)
     """
     s = F.trim(col.cast("string"))
-    dots = F.length(s) - F.length(F.regexp_replace(s, r"\.", ""))
-    commas = F.length(s) - F.length(F.regexp_replace(s, ",", ""))
-    # position of last occurrence: length - locate-in-reversed
-    last_comma = F.when(commas > 0, F.length(s) - F.instr(F.reverse(s), ","))
-    last_dot = F.when(dots > 0, F.length(s) - F.instr(F.reverse(s), "."))
-    eu = (dots > 0) & (commas == 1) & (last_comma > last_dot)
-    us_thousands = (commas > 0) & (dots == 0)
+    # EU: one comma, a dot before it and none after; US: commas, no dot
+    eu = s.rlike(r"^[^,]*\.[^,]*,[^.,]*$")
+    us_thousands = s.rlike(r"^[^.]*,[^.]*$")
     cleaned = (
         F.when(eu, F.regexp_replace(F.regexp_replace(s, r"\.", ""), ",", "."))
         .when(us_thousands, F.regexp_replace(s, ",", ""))

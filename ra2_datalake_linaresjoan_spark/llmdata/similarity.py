@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ra2_datalake_linaresjoan_spark.operators.joins import at_most, maybe_broadcast
+from ra2_datalake_linaresjoan_spark.operators.joins import at_most
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -152,24 +152,16 @@ def cosine_topk(
       documented contract of a brute-force baseline; beyond that use
       ``lsh_bucket_ann``).
     - ``expr``: pure Column zip_with/aggregate — no Python anywhere, no
-      collect anywhere. The corpus side goes through the capped-count
-      broadcast guard: a bounded corpus moves via broadcast join, an
-      unbounded one is left UNHINTED so Spark's nested-loop planning
-      broadcasts whichever side is genuinely smaller (usually the query
-      sample) — never a forced table-sized broadcast. Past that, the
-      real scale path is ``lsh_bucket_ann``.
+      collect anywhere. The join is UNHINTED, so Spark's nested-loop
+      planning broadcasts whichever side is genuinely smaller (usually
+      the query sample) — never a forced table-sized broadcast. Past
+      that, the real scale path is ``lsh_bucket_ann``.
 
     Ranking happens on the ROUNDED similarity with neighbor-id tiebreak so
     results are deterministic and engine-portable. Self-matches excluded.
     """
-    corpus_known_large = False
     if method == "auto":
-        small = at_most(corpus, MAX_COLLECT_ROWS)
-        method = "numpy" if small else "expr"
-        # the probe already established the corpus exceeds the broadcast
-        # cap — don't pay a second identical capped count inside
-        # maybe_broadcast; join unhinted directly.
-        corpus_known_large = not small
+        method = "numpy" if at_most(corpus, MAX_COLLECT_ROWS) else "expr"
     if method == "numpy":
         return _cosine_topk_numpy(queries, corpus, id_col, vec_col, k, round_digits)
     q = queries.select(
@@ -181,10 +173,7 @@ def cosine_topk(
         F.col(vec_col).cast("array<double>").alias("_cv"),
     )
     scored = (
-        q.join(
-            c if corpus_known_large else maybe_broadcast(c, cap=MAX_COLLECT_ROWS),
-            F.col("query_id") != F.col("neighbor_id"),
-        )
+        q.join(c, F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",

@@ -15,7 +15,6 @@ from ra2_datalake_linaresjoan_spark.operators.filters import (
 from ra2_datalake_linaresjoan_spark.operators.joins import (
     anti_orphans,
     fk_resolve,
-    semi_filter,
 )
 from ra2_datalake_linaresjoan_spark.operators.topk import top_k, top_k_groups
 from ra2_datalake_linaresjoan_spark.operators.bridges import explode_bridge
@@ -29,7 +28,6 @@ __all__ = [
     "non_null_non_blank",
     "anti_orphans",
     "fk_resolve",
-    "semi_filter",
     "top_k",
     "top_k_groups",
     "explode_bridge",

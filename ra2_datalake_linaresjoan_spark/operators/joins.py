@@ -2,9 +2,11 @@
 
 Scale posture: dimension lookups are explicitly broadcast (`F.broadcast`)
 so fact-side scans never shuffle for them; semi/anti joins are expressed
-as `left_semi` / `left_anti` so Catalyst can pick broadcast variants and
-AQE can re-plan at runtime. No collect-based key sets — everything stays
-distributed.
+as plain, unhinted `left_semi` / `left_anti` joins (J6's valid-id set
+filters, loader_NeonDB.py:493-500, are `df.join(keys, on, "left_semi")`)
+so Catalyst picks the strategy from file statistics and AQE re-plans it
+from runtime sizes. No collect-based key sets and no size probe in front
+of a join — everything stays distributed and lazy.
 """
 
 from __future__ import annotations
@@ -15,56 +17,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-#: Sides up to this many rows get a broadcast hint (semi_filter's key
-#: set, maybe_broadcast's default); larger ones join unhinted so
-#: Catalyst/AQE pick the strategy from real sizes.
-SEMI_BROADCAST_CAP = 1_000_000
-
-
 def at_most(df: DataFrame, n: int) -> bool:
-    """The one size probe behind every small/large route: does ``df``
-    have at most ``n`` rows?  A capped count — the job stops scanning at
-    ``n``+1 rows, so it never pays an exact count of a huge frame.
-    ``not at_most(df, 0)`` is the emptiness check."""
+    """The one size probe behind every small/large algorithm route (and
+    the ``connected_components`` fixpoint check): does ``df`` have at
+    most ``n`` rows?  A capped count — the job stops scanning at ``n``+1
+    rows, so it never pays an exact count of a huge frame.  It never
+    sets a join hint: join strategy is left to Catalyst and AQE."""
     return df.limit(n + 1).count() <= n
-
-
-def semi_filter(df: DataFrame, keys_df: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """Keep rows whose key exists in keys_df (J6 — the reference's
-    valid-id set filters, loader_NeonDB.py:493-500, without collecting).
-
-    The broadcast is GUARDED: key sets that scale with the fact side
-    (e.g. one id per market) must not be force-broadcast past AQE's size
-    checks — at 100 TB that is a driver OOM. The ``at_most`` probe
-    chooses broadcast for genuinely small sets and leaves big ones to
-    AQE's own shuffle/broadcast decision.
-
-    Streaming inputs skip the probe entirely (a count on a streaming
-    frame throws) — the call stays a pure transformation and Spark's
-    own stream-static/stream-stream planning applies."""
-    on = [on] if isinstance(on, str) else list(on)
-    keys = keys_df.select(*on).distinct()
-    if df.isStreaming or keys_df.isStreaming:
-        return df.join(keys, on=on, how="left_semi")
-    # the probe pins NOTHING (a localCheckpoint here would leave its
-    # blocks in executor storage for the session lifetime on the large
-    # path — DataFrame.unpersist does not release checkpoint RDD
-    # blocks), so the small path re-derives the bounded key set lazily
-    # inside the broadcast; the large path joins the lazy distinct
-    # unhinted so AQE picks the strategy.
-    return df.join(maybe_broadcast(keys), on=on, how="left_semi")
-
-
-def maybe_broadcast(df: DataFrame, cap: int | None = None) -> DataFrame:
-    """Broadcast guard: attach the broadcast hint only when ``at_most``
-    proves the side bounded by ``cap`` (default ``SEMI_BROADCAST_CAP``,
-    read at call time).  Large sides fall through UNHINTED so
-    AQE/shuffle handles linear-growth sides without driver OOM at scale.
-    Streaming frames skip the probe (count would throw)."""
-    if df.isStreaming:
-        return df
-    small = at_most(df, SEMI_BROADCAST_CAP if cap is None else cap)
-    return F.broadcast(df) if small else df
 
 
 def anti_orphans(fact: DataFrame, dim: DataFrame, on: str | Sequence[str]) -> DataFrame:

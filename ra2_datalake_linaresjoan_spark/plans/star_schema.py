@@ -24,7 +24,7 @@ seed → NULL; the engine falls back to 'Esports General' as documented.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark.functions.calendar import build_date_dim
@@ -34,7 +34,6 @@ from ra2_datalake_linaresjoan_spark.functions.json_utils import (
 )
 from ra2_datalake_linaresjoan_spark.functions.normalize import clean_string
 from ra2_datalake_linaresjoan_spark.operators.bridges import explode_bridge
-from ra2_datalake_linaresjoan_spark.operators.joins import at_most
 
 #: Seed game catalog (loader_NeonDB.py:118-132) + engine fallback row.
 GAME_CATALOG: list[tuple[str, str, bool]] = [
@@ -274,12 +273,19 @@ def write_gold(gold: dict[str, DataFrame], base_path: str) -> None:
     """Persist the star schema as parquet (Delta when available): facts
     partitioned by their date FK for partition pruning at scale."""
     for name, df in gold.items():
-        writer = df.write.mode("overwrite")
-        if name == "fact_metricas_gaming":
-            # an EMPTY partitioned write emits only _SUCCESS (no schema
-            # footer anywhere) and the read-back fails with
-            # UNABLE_TO_INFER_SCHEMA — write empty facts unpartitioned so
-            # the schema survives (the probe stops at the first row)
-            if not at_most(df, 0):
-                writer = writer.partitionBy("fecha_id")
-        writer.parquet(f"{base_path}/{name}")
+        path = f"{base_path}/{name}"
+        if name != "fact_metricas_gaming":
+            df.write.mode("overwrite").parquet(path)
+            continue
+        # an EMPTY partitioned write emits only _SUCCESS (no schema
+        # footer anywhere) and the read-back fails with
+        # UNABLE_TO_INFER_SCHEMA.  The row count rides on the partitioned
+        # write itself (an Observation, as in sources.writers.mirror_table),
+        # and only an empty fact is rewritten unpartitioned so its schema
+        # survives.
+        rows = Observation("fact_metricas_rows")
+        df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).partitionBy("fecha_id").parquet(path)
+        if rows.get["n"] == 0:
+            df.write.mode("overwrite").parquet(path)

@@ -16,6 +16,7 @@ shared parquet and are not rounded.
 from __future__ import annotations
 
 import glob
+import importlib
 import json
 import os
 import re
@@ -372,15 +373,13 @@ LIMIT 10
 def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (J6): customers having ≥1 URGENT open order —
     the reference's valid-id set filters without collecting a set."""
-    from ra2_datalake_linaresjoan_spark.operators.joins import semi_filter
-
     customer = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
     urgent = orders.filter(
         (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_orderstatus") == "O")
     ).select(F.col("o_custkey").alias("c_custkey"))
     return (
-        semi_filter(customer, urgent, "c_custkey")
+        customer.join(urgent, "c_custkey", "left_semi")
         .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
         .orderBy("c_custkey")
     )
@@ -2484,8 +2483,12 @@ _CHANGED: dict[str, int] = {
     "incremental_dedup": 14,
     "tfidf_cosine_pairs": 14,
     # declared-catalog change: oracle rewritten (row-identical at
-    # sf0.001/0.01) and the shared broadcast guard
+    # sf0.001/0.01)
     "semantic_prune": 15,
+    # unhinted joins, no size-probed broadcast (row-identical)
+    "semi_join": 15,
+    "nation_jaccard": 15,
+    "hhi_concentration": 15,
     "ngram_contamination": 15,
     "bloom_join_prefilter": 15,
     "join_reorder_advisor": 15,
@@ -2542,117 +2545,28 @@ def _driver_order(names: list[str], records: dict[int, dict], changed: dict[str,
     return [name for _, name in sorted(enumerate(names), key=key)]
 
 
-def _full_registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
-    from ra2_datalake_linaresjoan_spark.queries_ext import REGISTRY_EXT
-    from ra2_datalake_linaresjoan_spark.queries_ext3 import REGISTRY_EXT3
-    from ra2_datalake_linaresjoan_spark.queries_llm2 import REGISTRY_LLM2
-    from ra2_datalake_linaresjoan_spark.queries_ext4 import REGISTRY_EXT4
-    from ra2_datalake_linaresjoan_spark.queries_ext5 import REGISTRY_EXT5
-    from ra2_datalake_linaresjoan_spark.queries_llm3 import REGISTRY_LLM3
-    from ra2_datalake_linaresjoan_spark.queries_ext6 import REGISTRY_EXT6
-    from ra2_datalake_linaresjoan_spark.queries_ext7 import REGISTRY_EXT7
-    from ra2_datalake_linaresjoan_spark.queries_ext8 import REGISTRY_EXT8
-    from ra2_datalake_linaresjoan_spark.queries_ext9 import REGISTRY_EXT9
-    from ra2_datalake_linaresjoan_spark.queries_llm4 import REGISTRY_LLM4
-    from ra2_datalake_linaresjoan_spark.queries_llm5 import REGISTRY_LLM5
-    from ra2_datalake_linaresjoan_spark.queries_llm6 import REGISTRY_LLM6
-    from ra2_datalake_linaresjoan_spark.queries_ext10 import REGISTRY_EXT10
-    from ra2_datalake_linaresjoan_spark.queries_ext11 import REGISTRY_EXT11
-    from ra2_datalake_linaresjoan_spark.queries_ext12 import REGISTRY_EXT12
-    from ra2_datalake_linaresjoan_spark.queries_ext13 import REGISTRY_EXT13
-    from ra2_datalake_linaresjoan_spark.queries_ext14 import REGISTRY_EXT14
-    from ra2_datalake_linaresjoan_spark.queries_llm7 import REGISTRY_LLM7
-    from ra2_datalake_linaresjoan_spark.queries_llm8 import REGISTRY_LLM8
-    from ra2_datalake_linaresjoan_spark.queries_llm9 import REGISTRY_LLM9
-    from ra2_datalake_linaresjoan_spark.queries_llm10 import REGISTRY_LLM10
-    from ra2_datalake_linaresjoan_spark.queries_ext15 import REGISTRY_EXT15
-    from ra2_datalake_linaresjoan_spark.queries_llm11 import REGISTRY_LLM11
-    from ra2_datalake_linaresjoan_spark.queries_ext16 import REGISTRY_EXT16
-    from ra2_datalake_linaresjoan_spark.queries_llm12 import REGISTRY_LLM12
-    from ra2_datalake_linaresjoan_spark.queries_llm13 import REGISTRY_LLM13
-    from ra2_datalake_linaresjoan_spark.queries_ext17 import REGISTRY_EXT17
-    from ra2_datalake_linaresjoan_spark.queries_ext18 import REGISTRY_EXT18
-    from ra2_datalake_linaresjoan_spark.queries_ext19 import REGISTRY_EXT19
-    from ra2_datalake_linaresjoan_spark.queries_ext20 import REGISTRY_EXT20
-    from ra2_datalake_linaresjoan_spark.queries_llm14 import REGISTRY_LLM14
-    from ra2_datalake_linaresjoan_spark.queries_ext21 import REGISTRY_EXT21
-    from ra2_datalake_linaresjoan_spark.queries_ext22 import REGISTRY_EXT22
-    from ra2_datalake_linaresjoan_spark.queries_ext23 import REGISTRY_EXT23
-    from ra2_datalake_linaresjoan_spark.queries_ext24 import REGISTRY_EXT24
-    from ra2_datalake_linaresjoan_spark.queries_ext25 import REGISTRY_EXT25
-    from ra2_datalake_linaresjoan_spark.queries_ext26 import REGISTRY_EXT26
-    from ra2_datalake_linaresjoan_spark.queries_ext27 import REGISTRY_EXT27
-    from ra2_datalake_linaresjoan_spark.queries_ext28 import REGISTRY_EXT28
-    from ra2_datalake_linaresjoan_spark.queries_ext29 import REGISTRY_EXT29
-    from ra2_datalake_linaresjoan_spark.queries_llm15 import REGISTRY_LLM15
-    from ra2_datalake_linaresjoan_spark.queries_ext30 import REGISTRY_EXT30
-    from ra2_datalake_linaresjoan_spark.queries_ext31 import REGISTRY_EXT31
-    from ra2_datalake_linaresjoan_spark.queries_ext32 import REGISTRY_EXT32
-    from ra2_datalake_linaresjoan_spark.queries_ext33 import REGISTRY_EXT33
-    from ra2_datalake_linaresjoan_spark.queries_ext34 import REGISTRY_EXT34
-    from ra2_datalake_linaresjoan_spark.queries_ext35 import REGISTRY_EXT35
-    from ra2_datalake_linaresjoan_spark.queries_ext36 import REGISTRY_EXT36
-    from ra2_datalake_linaresjoan_spark.queries_ext37 import REGISTRY_EXT37
-    from ra2_datalake_linaresjoan_spark.queries_ext38 import REGISTRY_EXT38
-    from ra2_datalake_linaresjoan_spark.queries_ext39 import REGISTRY_EXT39
-    from ra2_datalake_linaresjoan_spark.queries_ext40 import REGISTRY_EXT40
+#: The query modules after this one, in registry order: ``_REGISTRY``
+#: first, then each ``queries_<m>.REGISTRY_<M>``.  ``_driver_order``
+#: breaks ties by registry order, so a reorder here reseats the driver
+#: window.
+_QUERY_MODULES = (
+    "ext", "ext3", "ext4", "ext5", "ext6", "ext7", "ext8", "ext9",
+    "llm2", "llm3", "llm4", "llm5", "llm6",
+    "ext10", "ext11", "ext12", "ext13", "ext14",
+    "llm7", "llm8", "llm9", "llm10", "ext15", "llm11", "ext16", "llm12", "llm13",
+    "ext17", "ext18", "ext19", "ext20", "llm14",
+    "ext21", "ext22", "ext23", "ext24", "ext25", "ext26", "ext27", "ext28", "ext29",
+    "llm15",
+    "ext30", "ext31", "ext32", "ext33", "ext34", "ext35", "ext36", "ext37", "ext38",
+    "ext39", "ext40",
+)
 
-    merged = {
-        **_REGISTRY,
-        **REGISTRY_EXT,
-        **REGISTRY_EXT3,
-        **REGISTRY_EXT4,
-        **REGISTRY_EXT5,
-        **REGISTRY_EXT6,
-        **REGISTRY_EXT7,
-        **REGISTRY_EXT8,
-        **REGISTRY_EXT9,
-        **REGISTRY_LLM2,
-        **REGISTRY_LLM3,
-        **REGISTRY_LLM4,
-        **REGISTRY_LLM5,
-        **REGISTRY_LLM6,
-        **REGISTRY_EXT10,
-        **REGISTRY_EXT11,
-        **REGISTRY_EXT12,
-        **REGISTRY_EXT13,
-        **REGISTRY_EXT14,
-        **REGISTRY_LLM7,
-        **REGISTRY_LLM8,
-        **REGISTRY_LLM9,
-        **REGISTRY_LLM10,
-        **REGISTRY_EXT15,
-        **REGISTRY_LLM11,
-        **REGISTRY_EXT16,
-        **REGISTRY_LLM12,
-        **REGISTRY_LLM13,
-        **REGISTRY_EXT17,
-        **REGISTRY_EXT18,
-        **REGISTRY_EXT19,
-        **REGISTRY_EXT20,
-        **REGISTRY_LLM14,
-        **REGISTRY_EXT21,
-        **REGISTRY_EXT22,
-        **REGISTRY_EXT23,
-        **REGISTRY_EXT24,
-        **REGISTRY_EXT25,
-        **REGISTRY_EXT26,
-        **REGISTRY_EXT27,
-        **REGISTRY_EXT28,
-        **REGISTRY_EXT29,
-        **REGISTRY_LLM15,
-        **REGISTRY_EXT30,
-        **REGISTRY_EXT31,
-        **REGISTRY_EXT32,
-        **REGISTRY_EXT33,
-        **REGISTRY_EXT34,
-        **REGISTRY_EXT35,
-        **REGISTRY_EXT36,
-        **REGISTRY_EXT37,
-        **REGISTRY_EXT38,
-        **REGISTRY_EXT39,
-        **REGISTRY_EXT40,
-    }
+
+def _full_registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
+    merged = dict(_REGISTRY)
+    for m in _QUERY_MODULES:
+        module = importlib.import_module(f"{__package__}.queries_{m}")
+        merged.update(getattr(module, f"REGISTRY_{m.upper()}"))
     return {name: merged[name] for name in _driver_order(list(merged), _driver_records(), _CHANGED)}
 
 

@@ -121,17 +121,15 @@ def q_nation_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 nation pairs by Jaccard similarity of the part sets their
     suppliers ship. Distinct (nation, part) extraction → part-keyed
     self-join for intersections → nation-pair-bounded output. The
-    supplier side grows linearly with scale, so its broadcast goes
-    through the capped-count guard; nation (25 rows) broadcasts
+    supplier side grows linearly with scale, so it joins unhinted and
+    Catalyst/AQE choose the strategy; nation (25 rows) broadcasts
     unconditionally."""
-    from ra2_datalake_linaresjoan_spark.operators.joins import maybe_broadcast
-
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation")
     np_ = (
         li.select("l_suppkey", "l_partkey")
-        .join(maybe_broadcast(sup.select("s_suppkey", "s_nationkey")),
+        .join(sup.select("s_suppkey", "s_nationkey"),
               F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(nat.select("n_nationkey", "n_name")),
               F.col("s_nationkey") == F.col("n_nationkey"))

@@ -431,8 +431,8 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Herfindahl–Hirschman index of supplier revenue share per nation:
     HHI = Σ share², plus the top-supplier share. Revenue accumulates in
     exact integer cents; shares go double only in the final squares.
-    The supplier side grows linearly with scale, so its broadcast goes
-    through the capped-count guard; nation (25 rows) broadcasts
+    The supplier side grows linearly with scale, so it joins unhinted
+    and Catalyst/AQE choose the strategy; nation (25 rows) broadcasts
     unconditionally.  money_case on the revenue inputs: a share
     statistic needs a finite population, and NaN/±Inf raises on the
     cents cast in both engines (round-11 value-fuzz).
@@ -445,7 +445,6 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     population is nonzero-total nations in both engines.  Real revenue
     totals are never zero, so this is a clean-corpus no-op."""
     from ra2_datalake_linaresjoan_spark.operators.filters import money_case
-    from ra2_datalake_linaresjoan_spark.operators.joins import maybe_broadcast
 
     li = money_case(
         _t(spark, sf_dir, "lineitem"), "l_extendedprice", "l_discount"
@@ -458,7 +457,7 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     per_sup = (
-        li.join(maybe_broadcast(sup), li["l_suppkey"] == sup["s_suppkey"])
+        li.join(sup, li["l_suppkey"] == sup["s_suppkey"])
         .join(F.broadcast(nat), sup["s_nationkey"] == nat["n_nationkey"])
         .groupBy("n_name", "s_suppkey")
         .agg(cents.alias("c"))

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark.llmdata.text_analysis import ascii_words
-from ra2_datalake_linaresjoan_spark.operators.joins import maybe_broadcast
 from ra2_datalake_linaresjoan_spark.queries import _t
 
 
@@ -42,14 +41,6 @@ from ra2_datalake_linaresjoan_spark.queries import _t
 
 _NC_N = 8
 _NC_EVAL_MOD = 97
-#: Max distinct eval grams to broadcast. The eval slice is defined as
-#: doc_id % 97 == 0 — i.e. ~1% OF THE CORPUS, so its gram set grows
-#: linearly with data and an unconditional broadcast OOMs executors at
-#: 100-TB scale (round-5 verdict finding #2). Above the cap the semi-join
-#: falls back to a shuffle join. 1M int64 gram keys ≈ 8 MB serialized
-#: (round-13: grams travel as xxhash64 of the word slice, not strings) —
-#: comfortably under a 1-GiB broadcast budget after the relation overhead.
-_NC_BROADCAST_CAP = 1_000_000
 
 
 def q_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,10 +49,9 @@ def q_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is scanned, never self-joined.
 
     The eval slice is corpus-proportional (1/97 of docs), so the eval
-    gram set is NOT fixed-size: ``maybe_broadcast``'s ``at_most`` probe
-    chooses between a
-    broadcast semi-join (eval grams ≤ ``_NC_BROADCAST_CAP``) and a
-    shuffle semi-join where AQE picks the strategy. Both audit counts
+    gram set is NOT fixed-size and an unconditional broadcast would OOM
+    at scale: the semi-join is unhinted, so Catalyst and AQE choose
+    broadcast or shuffle from the gram set's real size. Both audit counts
     (contaminated docs, shared grams) come from ONE pass over the
     matched train grams — a single multi-distinct aggregate — so the
     large path shuffles the train grams once, not twice.
@@ -78,8 +68,7 @@ def q_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # containment_pairs convention.  The old shape materialized a
     # ~50-byte concat_ws string per gram position just to compare
     # equality; the int64 key skips the concat allocation entirely and
-    # the distinct/semi-join/broadcast all move 8-byte keys (the 1M-gram
-    # broadcast cap now costs ~8 MB, not 60-100 MB).  The OUTPUT
+    # the distinct/semi-join/broadcast all move 8-byte keys.  The OUTPUT
     # (counts + rate) is hash-invariant; the DuckDB oracle keeps
     # verifying on the actual gram strings, so a 64-bit collision
     # (p ≈ 1e-9 at this cardinality) would surface as an oracle
@@ -98,10 +87,9 @@ def q_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_eval = F.col("doc_id") % _NC_EVAL_MOD == 0
     eval_grams = grams.filter(is_eval).select("gram").distinct()
     train_grams = grams.filter(~is_eval)
-    eval_side = maybe_broadcast(eval_grams, _NC_BROADCAST_CAP)
     # leftsemi keeps (doc_id, gram) of train grams present in the eval
     # set; both counts collapse from it in one aggregate.
-    hits = train_grams.join(eval_side, "gram", "leftsemi")
+    hits = train_grams.join(eval_grams, "gram", "leftsemi")
     hit_counts = hits.agg(
         F.count_distinct("doc_id").alias("n_contaminated"),
         F.count_distinct("gram").alias("n_shared_grams"),

@@ -32,7 +32,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ra2_datalake_linaresjoan_spark.operators.joins import maybe_broadcast
 from ra2_datalake_linaresjoan_spark.queries import _t
 
 _IVM_DELTA_DAYS = 7
@@ -255,15 +254,11 @@ def q_bloom_join_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand_flag = cand_flag & F.col(f"p{j}").isNotNull()
     cands = probed.where(cand_flag).select("k", "cents")
     # Exactness join on the Bloom-reduced candidate set.  The build side
-    # grows linearly with the corpus (~1/5 of customer), so it is only
-    # broadcast under the capped-count guard; above the cap the residual
-    # join shuffles — which is the whole point of the Bloom prefilter:
-    # the shuffle moves candidates, not the full fact table.
-    matched = cands.join(
-        maybe_broadcast(build.select("k", F.lit(1).alias("hit"))),
-        "k",
-        "left",
-    )
+    # grows linearly with the corpus (~1/5 of customer), so it joins
+    # unhinted: Catalyst/AQE broadcast it while small and shuffle it when
+    # large — which is the whole point of the Bloom prefilter: the
+    # shuffle moves candidates, not the full fact table.
+    matched = cands.join(build.select("k", F.lit(1).alias("hit")), "k", "left")
     stats = matched.agg(
         F.count(F.lit(1)).alias("bloom_candidates"),
         F.sum((F.col("hit").isNotNull()).cast("long")).alias("true_matches"),
@@ -476,8 +471,8 @@ def q_join_reorder_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically for non-integral quotients.  The truth for each FK join
     is statistics-derivable (every child row joins iff its FK exists in
     the parent), so no join output is ever materialized; the
-    corpus-proportional parent key sets are only broadcast under the
-    capped-count guard."""
+    corpus-proportional parent key sets join unhinted, so Catalyst/AQE
+    choose broadcast or shuffle."""
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -514,12 +509,10 @@ def q_join_reorder_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # truth for FK joins without materializing: child rows whose FK is
     # present in the parent key set (parent keys unique).
-    # The customer key set grows linearly with the corpus — broadcast
-    # only under the capped-count guard; nation is a fixed 25-row
-    # dimension and stays an unconditional broadcast.
-    cust_keys = maybe_broadcast(
-        cust.select(F.col("c_custkey").alias("o_custkey"))
-    )
+    # The customer key set grows linearly with the corpus, so it joins
+    # unhinted; nation is a fixed 25-row dimension and stays an
+    # unconditional broadcast.
+    cust_keys = cust.select(F.col("c_custkey").alias("o_custkey"))
     o_in_c = orders.join(cust_keys, "o_custkey", "left_semi").count()
     l_in_o = li.join(
         orders.select(F.col("o_orderkey").alias("l_orderkey")),

@@ -8,8 +8,13 @@ tests check the pure function rather than any hand-kept list.
 
 from __future__ import annotations
 
+import pkgutil
+import re
+
+import ra2_datalake_linaresjoan_spark as pkg
 from ra2_datalake_linaresjoan_spark.queries import (
     _CHANGED,
+    _QUERY_MODULES,
     _driver_order,
     _driver_records,
     queries,
@@ -38,6 +43,17 @@ def test_priority_names_all_resolve():
     assert len(order) == len(set(order)), "duplicate registry names"
     assert _driver_order(order, _driver_records(), _CHANGED) == order
     assert set(_CHANGED) <= set(order), sorted(set(_CHANGED) - set(order))
+
+
+def test_query_module_list_names_every_module_once():
+    """Every ``queries_ext*``/``queries_llm*`` module in the package
+    feeds the registry, each exactly once."""
+    on_disk = sorted(
+        m.name.removeprefix("queries_")
+        for m in pkgutil.iter_modules(pkg.__path__)
+        if re.fullmatch(r"queries_(ext|llm)\d*", m.name)
+    )
+    assert sorted(_QUERY_MODULES) == on_disk
 
 
 def test_never_checked_queries_lead_the_driver_window():

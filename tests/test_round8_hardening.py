@@ -1,4 +1,4 @@
-"""Round-8 regression pins for the four round-7 advisor findings.
+"""Round-8 regression pins for round-7 advisor findings.
 
 1. quantile_estimate(q=0) must report (near) the MINIMUM, not bucket 0's
    upper edge, when the distribution's min sits above bucket 0.
@@ -7,15 +7,11 @@
    skips null inputs, so the naive per-column cast hash collides on
    ('x', NULL) vs (NULL, 'x') and the survivor falls back to partition
    order (the nondeterminism the fingerprint exists to remove).
-3. semi_filter must stay a pure transformation on streaming frames (no
-   eager count) while still choosing broadcast for small batch key sets.
 """
 
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import functions as F
 
 
 def test_quantile_estimate_q0_reports_minimum_bucket(spark):
@@ -81,43 +77,3 @@ def test_asof_tiebreak_distinguishes_null_placement(spark):
         assert len(out) == 1
         picked.add((out[0]["v1_asof"], out[0]["v2_asof"]))
     assert len(picked) == 1, f"attached row flipped: {picked}"
-
-
-def test_semi_filter_pure_on_streaming_frames(spark, tmp_path):
-    """semi_filter on a streaming frame must not throw (no eager count)
-    and must produce the semi-join result through a stream-static join."""
-    from ra2_datalake_linaresjoan_spark.operators.joins import semi_filter
-
-    src = os.path.join(str(tmp_path), "src")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k int, v string"
-    ).write.parquet(src)
-    stream = spark.readStream.schema("k int, v string").parquet(src)
-    keys = spark.createDataFrame([(1,), (3,)], "k int")
-    out = semi_filter(stream, keys, "k")  # must not raise
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t_semi_pure")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        r["k"] for r in spark.sql("SELECT * FROM t_semi_pure").collect()
-    )
-    assert got == [1, 3]
-
-
-def test_semi_filter_batch_still_broadcasts_small_keys(spark):
-    from ra2_datalake_linaresjoan_spark.operators.joins import semi_filter
-
-    df = spark.range(1000).select(F.col("id").alias("k"))
-    keys = spark.createDataFrame([(7,), (9,)], "k bigint")
-    out = semi_filter(df, keys, "k")
-    assert sorted(r["k"] for r in out.collect()) == [7, 9]
-    # the hint itself, not the executed plan: Catalyst broadcasts a 2-row
-    # side on its own, so "Broadcast" there holds with or without it
-    logical = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "strategy=broadcast" in logical, logical

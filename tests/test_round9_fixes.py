@@ -12,7 +12,6 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
@@ -109,36 +108,6 @@ def test_cosine_topk_strategies_agree_on_dirty_corpus(spark):
     # the zero-norm row must appear as neither query nor neighbor
     flat = {r[0] for r in got_np} | {r[1] for r in got_np}
     assert 3 not in flat and 5 not in flat
-
-
-# ---------------------------------------------------------------------------
-# semi_filter: large-keys path leaves no pinned storage behind
-# ---------------------------------------------------------------------------
-
-
-def test_semi_filter_large_path_pins_no_storage(spark, monkeypatch):
-    import ra2_datalake_linaresjoan_spark.operators.joins as joins
-
-    monkeypatch.setattr(joins, "SEMI_BROADCAST_CAP", 5)
-    # other tests in the shared session may legitimately hold
-    # checkpointed RDDs — assert semi_filter adds NOTHING, not that the
-    # session is globally clean
-    before = {
-        i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    }
-    df = spark.range(100).select(F.col("id").alias("k"))
-    keys = spark.range(20).select(F.col("id").alias("k"))
-    out = joins.semi_filter(df, keys, "k")
-    assert out.count() == 20
-    # no FORCED broadcast hint — the large path must leave the strategy
-    # to Catalyst/AQE (which may still pick broadcast from real sizes)
-    logical = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "strategy=broadcast" not in logical, logical
-    # and no NEW localCheckpoint blocks pinned in executor storage
-    after = {
-        i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    }
-    assert after <= before, f"semi_filter pinned storage: {after - before}"
 
 
 # ---------------------------------------------------------------------------
