@@ -8,27 +8,30 @@ quarter = (month-1)//3 + 1. Spark's ``dayofweek`` is Sunday=1, so we use
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from ra2_datalake_linaresjoan_spark.functions.sql import col_ref
 
 
-def calendar_parts(date_col: Column, prefix: str = "") -> list[Column]:
-    """Return the standard calendar-part columns for a date/timestamp column.
+def calendar_parts(date_col: str, prefix: str = "") -> list[str]:
+    """Return the standard calendar-part columns for a date/timestamp
+    column, as aliased SQL text (``selectExpr`` items).
 
     Produces: fecha (date), anio, mes, dia, trimestre, dia_semana (Mon=0),
     es_finde (bool) — the reference's dim_fecha shape
     (loader_NeonDB.py:94-105).
     """
-    d = F.to_date(date_col)
-    return [
-        d.alias(f"{prefix}fecha"),
-        F.year(d).alias(f"{prefix}anio"),
-        F.month(d).alias(f"{prefix}mes"),
-        F.dayofmonth(d).alias(f"{prefix}dia"),
-        F.quarter(d).alias(f"{prefix}trimestre"),
-        F.weekday(d).alias(f"{prefix}dia_semana"),
-        (F.weekday(d) >= 5).alias(f"{prefix}es_finde"),
-    ]
+    d = f"to_date({date_col})"
+    parts = {
+        "fecha": d,
+        "anio": f"year({d})",
+        "mes": f"month({d})",
+        "dia": f"dayofmonth({d})",
+        "trimestre": f"quarter({d})",
+        "dia_semana": f"weekday({d})",
+        "es_finde": f"weekday({d}) >= 5",
+    }
+    return [f"{e} AS {col_ref(prefix + name)}" for name, e in parts.items()]
 
 
 def build_date_dim(df: DataFrame, date_col: str) -> DataFrame:
@@ -40,22 +43,11 @@ def build_date_dim(df: DataFrame, date_col: str) -> DataFrame:
     way). Mirrors reference ``_get_or_create_fecha`` (loader_NeonDB.py:266-285)
     without the per-row SELECT/INSERT round-trips.
     """
-    from pyspark.sql import Window
-
     # schema-tolerant like star_schema._c: a bronze feed without the date
     # column yields an EMPTY date dim (and empty date-keyed facts), not an
     # UNRESOLVED_COLUMN crash
-    src = (
-        F.col(date_col)
-        if date_col in df.columns
-        else F.lit(None).cast("timestamp")
-    )
-    dates = (
-        df.select(F.to_date(src).alias("fecha"))
-        .where(F.col("fecha").isNotNull())
-        .distinct()
-    )
-    w = Window.orderBy("fecha")
-    return dates.select(
-        F.row_number().over(w).alias("fecha_id"), *calendar_parts(F.col("fecha"))
+    src = col_ref(date_col) if date_col in df.columns else "CAST(NULL AS TIMESTAMP)"
+    dates = df.selectExpr(f"to_date({src}) AS fecha").where("fecha IS NOT NULL").distinct()
+    return dates.selectExpr(
+        "row_number() OVER (ORDER BY fecha) AS fecha_id", *calendar_parts("fecha")
     )

@@ -1,15 +1,16 @@
-"""Keyword classifiers as ordered ``when`` chains (SURVEY.md §2.8 F7/F8).
+"""Keyword classifiers as ordered ``CASE WHEN`` chains (SURVEY.md §2.8 F7/F8).
 
 Behavior mirrors reference ``src/utils/transformer_data.py:393-455``:
 first-match-wins over an ordered keyword table; null question → null;
-no match → the documented default label. Implemented as cascaded Column
-``when`` expressions so classification runs JVM-side at full scan speed.
+no match → the documented default label. Each classifier is one SQL
+expression (text in, text out, like ``functions.normalize``), so
+classification runs JVM-side at full scan speed and costs one parse on
+the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from ra2_datalake_linaresjoan_spark.functions.sql import ascii_fold, sql_str
 
 #: Ordered (label, substring-keywords) table — order is semantic
 #: (DOTA before Valorant before CS:GO…, reference transformer_data.py:405-419).
@@ -32,51 +33,49 @@ GAME_KEYWORDS: list[tuple[str, list[str]]] = [
 DEFAULT_GAME = "Esports General"
 
 
-def _fold(question: Column) -> Column:
+def _fold(question: str) -> str:
     """ASCII fold for classifier matching: the keyword tables above are
     all-ASCII, so the 26-letter translate fold suffices — and unlike a
-    full ``F.lower()`` it cannot fold non-ASCII INTO ASCII (U+212A
-    Kelvin → 'k') and complete a keyword the raw text does not contain
-    (round-12 fold contract, finished at these last two call sites in
-    round 13).  Bit-identical to ``lower()`` on ASCII text."""
-    from ra2_datalake_linaresjoan_spark.operators.filters import _ascii_fold
-
-    return _ascii_fold(question)
+    full ``lower()`` it cannot fold non-ASCII INTO ASCII (U+212A Kelvin →
+    'k') and complete a keyword the raw text does not contain (round-12
+    fold contract).  Bit-identical to ``lower()`` on ASCII text."""
+    return ascii_fold(f"CAST({question} AS STRING)")
 
 
-def extract_gaming_type(question: Column) -> Column:
+def _any(q: str, *keywords: str) -> str:
+    """The folded question ``q`` contains at least one of ``keywords``."""
+    return "(" + " OR ".join(f"contains({q}, {sql_str(k)})" for k in keywords) + ")"
+
+
+def _first_match(q: str, rules: list[tuple[str, str]], default: str) -> str:
+    """First-match-wins ``(label, condition)`` chain; a null or empty
+    question classifies as null."""
+    whens = " ".join(f"WHEN {cond} THEN {sql_str(label)}" for label, cond in rules)
+    return (
+        f"CASE WHEN {q} IS NULL OR {q} = '' THEN CAST(NULL AS STRING) "
+        f"ELSE CASE {whens} ELSE {sql_str(default)} END END"
+    )
+
+
+def extract_gaming_type(question: str) -> str:
     """Ordered keyword → game label classifier (F7)."""
     q = _fold(question)
-    expr: Column = F.lit(DEFAULT_GAME)
-    # build the when-chain from the END of the priority table backwards so
-    # the first (highest-priority) rule is the outermost condition
-    for label, keywords in reversed(GAME_KEYWORDS):
-        cond = None
-        for kw in keywords:
-            c = q.contains(kw)
-            cond = c if cond is None else (cond | c)
-        expr = F.when(cond, F.lit(label)).otherwise(expr)
-    return F.when(q.isNull() | (q == ""), F.lit(None).cast("string")).otherwise(expr)
+    return _first_match(
+        q, [(label, _any(q, *kws)) for label, kws in GAME_KEYWORDS], DEFAULT_GAME
+    )
 
 
-def extract_bet_type(question: Column) -> Column:
+def extract_bet_type(question: str) -> str:
     """Rule-chain bet-type classifier (F8) — order-sensitive, mirrors
     transformer_data.py:439-455."""
     q = _fold(question)
-    expr = (
-        F.when(q.contains("will win"), F.lit("Match Winner"))
-        .when(
-            q.contains("spread") | q.contains("by more than") | q.contains("by less than"),
-            F.lit("Spread"),
-        )
-        .when(q.contains("over") & q.contains("under"), F.lit("Over/Under"))
-        .when(
-            q.contains("total") & (q.contains("point") | q.contains("kill")),
-            F.lit("Over/Under"),
-        )
-        .when(q.contains("first") & q.contains("win"), F.lit("First Blood"))
-        .when(q.contains("mvp") | q.contains("best player"), F.lit("MVP/Best Player"))
-        .when(q.contains("map") | q.contains("round"), F.lit("Round/Map Winner"))
-        .otherwise(F.lit("Prop Bet"))
-    )
-    return F.when(q.isNull() | (q == ""), F.lit(None).cast("string")).otherwise(expr)
+    rules = [
+        ("Match Winner", _any(q, "will win")),
+        ("Spread", _any(q, "spread", "by more than", "by less than")),
+        ("Over/Under", f"{_any(q, 'over')} AND {_any(q, 'under')}"),
+        ("Over/Under", f"{_any(q, 'total')} AND {_any(q, 'point', 'kill')}"),
+        ("First Blood", f"{_any(q, 'first')} AND {_any(q, 'win')}"),
+        ("MVP/Best Player", _any(q, "mvp", "best player")),
+        ("Round/Map Winner", _any(q, "map", "round")),
+    ]
+    return _first_match(q, rules, "Prop Bet")

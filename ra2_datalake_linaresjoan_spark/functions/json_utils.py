@@ -9,36 +9,42 @@ JSON strings (single quotes). Parsing behavior mirrors
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from ra2_datalake_linaresjoan_spark.functions.sql import sql_str
+
+#: Each element of a parsed tag list read as a tag object.
+_TAG_STRUCT = "struct<label:string,slug:string,id:string>"
 
 
-def _repair(col: Column) -> Column:
+def _repair(col: str) -> str:
     """Python-literal JSON → JSON (single→double quotes, reference quirk)."""
-    return F.regexp_replace(col.cast("string"), "'", '"')
+    return f"""regexp_replace(CAST({col} AS STRING), '\\'', '"')"""
 
 
-def parse_json_ish(col: Column, schema: str) -> Column:
+def parse_json_ish(col: str, schema: str) -> str:
     """Parse a possibly-Python-literal JSON string with the given schema.
 
     ``from_json`` returns null on malformed input — the engine's documented
     parse-failure contract. Apostrophes inside values corrupt the repair
     (same as the reference's replace trick) and land in the null path.
+    Text in, text out, like ``functions.normalize``.
     """
-    return F.from_json(_repair(col), schema)
+    return f"from_json({_repair(col)}, {sql_str(schema)})"
 
 
-def parse_list_value(col: Column) -> Column:
+def parse_list_value(col: str) -> str:
     """Tolerant list parse (F9): '[...]' → array<string>, else empty array.
 
     Mirrors ``loader_NeonDB.py:287-304`` (_parse_list_value).
     """
-    s = F.trim(col.cast("string"))
-    parsed = F.when(s.startswith("["), F.from_json(_repair(s), "array<string>"))
-    return F.coalesce(parsed, F.array().cast("array<string>"))
+    s = f"trim(CAST({col} AS STRING))"
+    return (
+        f"coalesce(CASE WHEN startswith({s}, '[') "
+        f"THEN {parse_json_ish(s, 'array<string>')} END, "
+        "CAST(array() AS ARRAY<STRING>))"
+    )
 
 
-def parse_struct_labels(col: Column) -> Column:
+def parse_struct_labels(col: str) -> str:
     """Tag objects → labels (F10), PER ELEMENT like the reference
     (``loader_NeonDB.py:408-429`` _parse_tags_field iterates the parsed
     list): a dict element yields ``label ?? slug ?? id`` (trimmed) or is
@@ -48,23 +54,17 @@ def parse_struct_labels(col: Column) -> Column:
     ``[]`` — it must never leak its JSON text as a label (the previous
     whole-array fallback emitted the blob into dim_tag_gaming).
     """
-    strings = parse_json_ish(col, "array<string>")
-
-    def label_of(x: Column) -> Column:
-        st = F.from_json(x, "struct<label:string,slug:string,id:string>")
-        return F.when(
-            F.trim(x).startswith("{"),
-            F.trim(F.coalesce(st["label"], st["slug"], st["id"])),
-        ).otherwise(F.trim(x))
-
-    labels = F.transform(strings, label_of)
-    return F.filter(labels, lambda e: e.isNotNull() & (e != ""))
+    st = f"from_json(x, {sql_str(_TAG_STRUCT)})"
+    label_of = (
+        f"CASE WHEN startswith(trim(x), '{{') "
+        f"THEN trim(coalesce({st}.label, {st}.slug, {st}.id)) ELSE trim(x) END"
+    )
+    labels = f"transform({parse_json_ish(col, 'array<string>')}, x -> {label_of})"
+    return f"filter({labels}, e -> e IS NOT NULL AND e != '')"
 
 
-def extract_ids(col: Column) -> Column:
+def extract_ids(col: str) -> str:
     """Embedded entity structs → array of their ids (J10 pattern):
     "[{'id': 'E1', ...}]" → ['E1']  (loader_NeonDB.py:711-736)."""
     structs = parse_json_ish(col, "array<struct<id:string>>")
-    return F.filter(
-        F.transform(structs, lambda x: x["id"]), lambda x: x.isNotNull()
-    )
+    return f"filter(transform({structs}, x -> x.id), x -> x IS NOT NULL)"

@@ -1,4 +1,4 @@
-"""Scalar normalizers as native Column expressions (SURVEY.md §2.8 F1-F6,
+"""Scalar normalizers as Spark SQL expression text (SURVEY.md §2.8 F1-F6,
 F11-F16, F21).
 
 Reference-parity notes (behavior studied at the cited lines; implemented
@@ -15,14 +15,25 @@ fresh as Spark expressions):
 - ``to_timestamp_coerce``     — reference ``transformer_data.py:243-246``
   (pandas ``to_datetime(errors='coerce')`` semantics: null on failure)
 
-All builders are pure ``Column -> Column``: zero Python at execution time,
-so they run inside WholeStageCodegen and scale to any data volume.
+Every builder maps SQL text to SQL text: its input is a quoted column
+reference (``functions.sql.col_ref``), a typed NULL or another builder's
+output, and a stage parses all of its columns in one ``selectExpr``
+(``F.expr`` wraps one for the Column API). Nothing runs Python per row,
+so the expressions stay inside WholeStageCodegen.
+
+No builder on the medallion path calls ``lower()`` or ``upper()`` on
+ASCII text: Spark 4 maps case through ICU, and the first call in a JVM
+loads its case tables (about 1.5 s, inside whichever task hits it first).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from ra2_datalake_linaresjoan_spark.functions.sql import (
+    ASCII_LOWER,
+    ASCII_UPPER,
+    sql_str,
+    sql_strs,
+)
 
 #: Literal strings the reference treats as null (spark_cleaner.py:54-71).
 NULL_LITERALS = ("", "None", "none", "null", "NULL", "N/A", "n/a", "NA", "NaN")
@@ -31,29 +42,38 @@ _TRUE_WORDS = ("true", "yes", "1", "t", "y", "si", "sí")
 _FALSE_WORDS = ("false", "no", "0", "f", "n")
 
 
-def normalize_boolean(col: Column) -> Column:
+def _word_fold(expr: str) -> str:
+    """``lower()`` restricted to what the boolean word lists can tell
+    apart: the 26 ASCII capitals and 'Í'.  Both sides agree on every
+    string: a character that ``lower()`` maps to a letter of the words is
+    one of those capitals, 'Í', or already that letter (the Kelvin sign
+    folds to 'k' and 'İ' to two characters, neither of which a word
+    holds), and a string with any other character is in neither list
+    under either fold.  ``tests/test_functions.py`` checks this over
+    every code point."""
+    return f"translate({expr}, '{ASCII_UPPER}Í', '{ASCII_LOWER}í')"
+
+
+def normalize_boolean(col: str) -> str:
     """Multi-format boolean: true-words → True, false-words → False, else null.
 
     Accepts the zoo the reference accepts: True/'True'/1/'yes'/'si'/'sí'…
     Numeric inputs go through their string form ('1'/'0' are in the word
-    lists; other numerics are truthy per ``bool(int(v))`` — handled by the
-    final numeric fallback).
+    lists); other numeric strings like "2", "0.0" follow ``bool(int(v))``
+    as |v| >= 1 (int() truncates toward zero, so int(v) != 0 ⇔ |v| >= 1)
+    — overflow-proof, unlike a try_cast to int/long, which NULLs past the
+    integer range ('3000000000' must be True, not null).
     """
-    s = F.lower(F.trim(col.cast("string")))
+    s = _word_fold(f"trim(CAST({col} AS STRING))")
     return (
-        F.when(s.isin(*_TRUE_WORDS), F.lit(True))
-        .when(s.isin(*_FALSE_WORDS), F.lit(False))
-        # numeric strings like "2", "0.0": bool(int(v)) semantics as
-        # |v| >= 1 (int() truncates toward zero, so int(v) != 0 ⇔
-        # |v| >= 1) — overflow-proof, unlike a try_cast to int/long
-        # which NULLs past the integer range ('3000000000' must be
-        # True, not null)
-        .when(s.rlike(r"^-?\d+(\.\d+)?$"), F.abs(s.try_cast("double")) >= 1)
-        .otherwise(F.lit(None).cast("boolean"))
+        f"CASE WHEN {s} IN ({sql_strs(_TRUE_WORDS)}) THEN true "
+        f"WHEN {s} IN ({sql_strs(_FALSE_WORDS)}) THEN false "
+        rf"WHEN {s} RLIKE r'^-?\d+(\.\d+)?$' THEN abs(try_cast({s} AS DOUBLE)) >= 1 "
+        "ELSE CAST(NULL AS BOOLEAN) END"
     )
 
 
-def normalize_numeric(col: Column) -> Column:
+def normalize_numeric(col: str) -> str:
     """US/EU numeric string → double, null on failure.
 
     Decision table (transformer_data.py:63-71):
@@ -62,20 +82,19 @@ def normalize_numeric(col: Column) -> Column:
     - commas>0 and dots==0                               → `1,234`: strip commas
     - otherwise the string is float-cast as-is (dots-only strings pass through)
     """
-    s = F.trim(col.cast("string"))
-    # EU: one comma, a dot before it and none after; US: commas, no dot
-    eu = s.rlike(r"^[^,]*\.[^,]*,[^.,]*$")
-    us_thousands = s.rlike(r"^[^.]*,[^.]*$")
-    cleaned = (
-        F.when(eu, F.regexp_replace(F.regexp_replace(s, r"\.", ""), ",", "."))
-        .when(us_thousands, F.regexp_replace(s, ",", ""))
-        .otherwise(s)
-    )
+    s = f"trim(CAST({col} AS STRING))"
+    # EU: one comma, a dot before it and none after; US: commas, no dot.
     # try_cast: null on malformed input (ANSI-safe coerce-to-null)
-    return cleaned.try_cast("double")
+    return (
+        "try_cast(CASE "
+        rf"WHEN {s} RLIKE r'^[^,]*\.[^,]*,[^.,]*$' "
+        rf"THEN regexp_replace(regexp_replace({s}, r'\.', ''), ',', '.') "
+        rf"WHEN {s} RLIKE r'^[^.]*,[^.]*$' THEN regexp_replace({s}, ',', '') "
+        f"ELSE {s} END AS DOUBLE)"
+    )
 
 
-def clean_string(col: Column, max_length: int = 5000) -> Column:
+def clean_string(col: str, max_length: int = 5000) -> str:
     """Trim, collapse whitespace, strip control chars, truncate; ''→null.
 
     Order matters and mirrors the reference: whitespace collapse happens
@@ -89,14 +108,14 @@ def clean_string(col: Column, max_length: int = 5000) -> Column:
     reproduces it, so both engines agree; callers needing strict
     canonical whitespace re-clean after.
     """
-    s = F.trim(col.cast("string"))
-    s = F.regexp_replace(s, r"\s+", " ")
-    s = F.regexp_replace(s, r"[\x00-\x1f]", "")
-    s = F.substring(s, 1, max_length)
-    return F.when(s == "", F.lit(None).cast("string")).otherwise(s)
+    s = (
+        rf"substring(regexp_replace(regexp_replace(trim(CAST({col} AS STRING)), "
+        rf"r'\s+', ' '), r'[\x00-\x1f]', ''), 1, {int(max_length)})"
+    )
+    return f"CASE WHEN {s} = '' THEN CAST(NULL AS STRING) ELSE {s} END"
 
 
-def _jsonish_array(col: Column) -> Column:
+def _jsonish_array(col: str) -> str:
     """Parse a Python-literal-ish JSON array string to array<string>.
 
     The reference repairs single quotes by a global replace before
@@ -112,76 +131,75 @@ def _jsonish_array(col: Column) -> Column:
     parse_list_value returns an EMPTY ARRAY (loader_NeonDB.py:287-304
     returns []). Merging them would silently change one contract.
     """
-    s = F.trim(col.cast("string"))
-    repaired = F.regexp_replace(s, "'", '"')
-    return F.when(s.startswith("["), F.from_json(repaired, "array<string>")).otherwise(
-        F.lit(None).cast("array<string>")
+    s = f"trim(CAST({col} AS STRING))"
+    return (
+        f"CASE WHEN startswith({s}, '[') "
+        f"""THEN from_json(regexp_replace({s}, '\\'', '"'), 'array<string>') """
+        "ELSE CAST(NULL AS ARRAY<STRING>) END"
     )
 
 
-def normalize_prices(col: Column) -> Column:
+def _non_empty(arr: str, dtype: str) -> str:
+    """``arr`` when it has elements, else a typed NULL."""
+    return f"CASE WHEN size({arr}) > 0 THEN {arr} ELSE CAST(NULL AS {dtype}) END"
+
+
+def normalize_prices(col: str) -> str:
     """JSON-ish array of numeric strings → array<double>; skips unparseable
     elements; null if nothing parses (transformer_data.py:102-140)."""
-    arr = _jsonish_array(col)
-    doubles = F.filter(
-        F.transform(arr, lambda x: F.trim(x).try_cast("double")), lambda x: x.isNotNull()
+    doubles = (
+        f"filter(transform({_jsonish_array(col)}, x -> try_cast(trim(x) AS DOUBLE)), "
+        "x -> x IS NOT NULL)"
     )
-    return F.when(F.size(doubles) > 0, doubles).otherwise(
-        F.lit(None).cast("array<double>")
-    )
+    return _non_empty(doubles, "ARRAY<DOUBLE>")
 
 
-def normalize_outcomes(col: Column) -> Column:
+def normalize_outcomes(col: str) -> str:
     """JSON-ish array → trimmed UPPER array<string>, dropping empties; null
-    if empty (transformer_data.py:142-176)."""
-    arr = _jsonish_array(col)
-    upped = F.filter(
-        F.transform(arr, lambda x: F.upper(F.trim(x))), lambda x: x != ""
+    if empty (transformer_data.py:142-176).  A pure-ASCII element (as many
+    bytes as characters) is upper-cased by the 26-letter translate, which
+    equals ``upper()`` there; only the other elements call ``upper()``."""
+    upped = (
+        f"filter(transform({_jsonish_array(col)}, x -> CASE "
+        f"WHEN octet_length(x) = length(x) "
+        f"THEN translate(trim(x), '{ASCII_LOWER}', '{ASCII_UPPER}') "
+        "ELSE upper(trim(x)) END), x -> x != '')"
     )
-    return F.when(F.size(upped) > 0, upped).otherwise(
-        F.lit(None).cast("array<string>")
-    )
+    return _non_empty(upped, "ARRAY<STRING>")
 
 
-def parse_tags(col: Column) -> Column:
+def parse_tags(col: str) -> str:
     """JSON-ish array → distinct lower-cased trimmed array<string>; null if
     empty (transformer_data.py:178-212)."""
-    arr = _jsonish_array(col)
-    tags = F.array_distinct(
-        F.filter(F.transform(arr, lambda x: F.lower(F.trim(x))), lambda x: x != "")
+    tags = (
+        f"array_distinct(filter(transform({_jsonish_array(col)}, "
+        "x -> lower(trim(x))), x -> x != ''))"
     )
-    return F.when(F.size(tags) > 0, tags).otherwise(F.lit(None).cast("array<string>"))
+    return _non_empty(tags, "ARRAY<STRING>")
 
 
-#: ``NULL_LITERALS`` as one SQL array: parsed in one call per column,
-#: where ``isin`` sends every literal to the JVM on its own.
-_NULL_LITERALS_SQL = "array({})".format(", ".join(f"'{s}'" for s in NULL_LITERALS))
-
-
-def normalize_null_literals(col: Column) -> Column:
+def normalize_null_literals(col: str) -> str:
     """Map the reference's fake-null string literals to real NULL (F11)."""
-    s = col.cast("string")
-    return F.when(
-        F.array_contains(F.expr(_NULL_LITERALS_SQL), F.trim(s)),
-        F.lit(None).cast("string"),
-    ).otherwise(s)
+    s = f"CAST({col} AS STRING)"
+    return (
+        f"CASE WHEN array_contains(array({sql_strs(NULL_LITERALS)}), trim({s})) "
+        f"THEN CAST(NULL AS STRING) ELSE {s} END"
+    )
 
 
-def coalesce_chain(*cols: Column | str, default: str | None = None) -> Column:
+def coalesce_chain(*cols: str, default: str | None = None) -> str:
     """Coalesce fallback chain (F13), e.g. title→ticker→slug→'Sin título'."""
-    resolved = [F.col(c) if isinstance(c, str) else c for c in cols]
-    if default is not None:
-        resolved.append(F.lit(default))
-    return F.coalesce(*resolved)
+    parts = list(cols) + ([sql_str(default)] if default is not None else [])
+    return f"coalesce({', '.join(parts)})"
 
 
-def to_timestamp_coerce(col: Column) -> Column:
+def to_timestamp_coerce(col: str) -> str:
     """ISO-8601 string → timestamp, null on failure (F16; try_to_timestamp
     keeps coerce semantics under ANSI mode)."""
-    return F.try_to_timestamp(col.cast("string"))
+    return f"try_to_timestamp(CAST({col} AS STRING))"
 
 
-def safe_array_size(col: Column) -> Column:
+def safe_array_size(col: str) -> str:
     """len(arr) with null→0 (F21). Spark's size(null) is -1 with legacy
     conf; make it explicitly 0."""
-    return F.when(col.isNull(), F.lit(0)).otherwise(F.size(col))
+    return f"CASE WHEN {col} IS NULL THEN 0 ELSE size({col}) END"

@@ -13,8 +13,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ra2_datalake_linaresjoan_spark.functions.sql import col_ref
 
 
 def dedup_keep_newest(
@@ -30,25 +32,18 @@ def dedup_keep_newest(
     ``dropDuplicates`` when no ordering column is available (U2,
     spark_cleaner.py:114).
     """
-    from ra2_datalake_linaresjoan_spark.operators.ordering import (
-        order_nulls_last,
-    )
-
     if order_col is None and not tiebreak:
         return df.dropDuplicates(list(keys))
-    # shared NULLS LAST contract (operators/ordering.py): a NULL
-    # order/tiebreak value never outranks a real one, matching the
-    # oracle engine's default in both directions
-    ordering: list[Column] = []
-    if order_col is not None:
-        ordering.append(order_nulls_last(order_col, ascending=False))
-    ordering.extend(order_nulls_last(c, ascending=False) for c in tiebreak)
-    w = Window.partitionBy(*keys).orderBy(*ordering)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    # the shared NULLS LAST contract (operators/ordering.py) in both
+    # directions: a NULL order/tiebreak value never outranks a real one,
+    # matching the oracle engine's default.  One parsed window
+    # expression, not a Column tree per key.
+    order = [c for c in (order_col,) if c is not None] + list(tiebreak)
+    window = "row_number() OVER (PARTITION BY {} ORDER BY {})".format(
+        ", ".join(col_ref(k) for k in keys),
+        ", ".join(f"{col_ref(c)} DESC NULLS LAST" for c in order),
     )
+    return df.selectExpr("*", f"{window} AS _rn").where("_rn = 1").drop("_rn")
 
 
 def dedup_exact(df: DataFrame, keys: Sequence[str]) -> DataFrame:

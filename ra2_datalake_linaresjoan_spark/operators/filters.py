@@ -13,16 +13,21 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ra2_datalake_linaresjoan_spark.functions.sql import ASCII_LOWER, ASCII_UPPER, col_ref
+
 
 def non_null_non_blank(*cols: str) -> Column:
     """id-style guard (P6, reference spark_cleaner.py:103-106): every listed
     column non-null and non-blank after trim."""
-    pred: Column | None = None
-    for c in cols:
-        p = F.col(c).isNotNull() & (F.trim(F.col(c).cast("string")) != "")
-        pred = p if pred is None else (pred & p)
-    assert pred is not None
-    return pred
+    if not cols:
+        raise ValueError("non_null_non_blank needs at least one column")
+    # one parsed predicate, not a Column tree per column
+    return F.expr(
+        " AND ".join(
+            f"{col_ref(c)} IS NOT NULL AND trim(CAST({col_ref(c)} AS STRING)) != ''"
+            for c in cols
+        )
+    )
 
 
 def complete_case(df: DataFrame, *cols: str) -> DataFrame:
@@ -226,11 +231,7 @@ def _ascii_fold(col: Column) -> Column:
     include/exclude different ROWS per engine.  ``translate`` is a pure
     1:1 char map, identical everywhere, and bit-identical to ``lower()``
     on ASCII text."""
-    return F.translate(
-        col.cast("string"),
-        "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
-        "abcdefghijklmnopqrstuvwxyz",
-    )
+    return F.translate(col.cast("string"), ASCII_UPPER, ASCII_LOWER)
 
 
 #: CPython mirror of ``_ascii_fold``'s 26-letter translate map — keywords
@@ -238,9 +239,7 @@ def _ascii_fold(col: Column) -> Column:
 #: keyword containing non-ASCII uppercase folded by ``str.lower()`` but
 #: never by the column-side translate would silently stop matching its
 #: own raw spelling.
-_PY_ASCII_FOLD = str.maketrans(
-    "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
-)
+_PY_ASCII_FOLD = str.maketrans(ASCII_UPPER, ASCII_LOWER)
 
 
 def keyword_include(col: Column, keywords: Sequence[str], **kw) -> Column:

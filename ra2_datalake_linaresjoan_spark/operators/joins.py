@@ -26,6 +26,15 @@ def at_most(df: DataFrame, n: int) -> bool:
     return df.limit(n + 1).count() <= n
 
 
+def plan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` in bytes, derived from what
+    its sources already record (parquet file sizes, inline VALUES): no job
+    runs.  A source Spark cannot size, such as an RDD, reports
+    ``spark.sql.defaultSizeInBytes`` (Long.MaxValue by default), so it
+    never reads as small."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
 def anti_orphans(fact: DataFrame, dim: DataFrame, on: str | Sequence[str]) -> DataFrame:
     """Rows of ``fact`` with no match in ``dim`` (J1-J3 orphan detection,
     reference validator_warehouse.py:108-162). A left-anti join never

@@ -4,7 +4,9 @@ Spark's defaults split by direction (asc → NULLS FIRST, desc → NULLS
 LAST) while DuckDB — the oracle engine — defaults to NULLS LAST in BOTH
 directions.  Every window-family operator and query that orders rows
 (dedup survivors, rank/percent_rank, first/last_value, top-k) routes
-its sort keys through ``order_nulls_last`` so the engine-side ordering
+its sort keys through ``order_nulls_last`` (``dedup_keep_newest``
+spells the same ``DESC NULLS LAST`` in its one parsed window
+expression) so the engine-side ordering
 matches the ANSI/DuckDB convention BY CONSTRUCTION, not by per-query
 complete-case guards alone (round-10 verdict ask #4: the guards keep
 NULLs out of today's windows, but the next dirty-generator

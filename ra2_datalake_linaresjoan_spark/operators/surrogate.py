@@ -5,9 +5,11 @@ column (``loader_NeonDB.py:431-455``) — the Spark translation is
 ``row_number() OVER (ORDER BY ...)``, which funnels every row through ONE
 partition. Fine for a 5 K-tag dimension, a stall for a 500 M-row one.
 
-``surrogate_key`` keeps the cheap global window for inputs of at most
-``SMALL_THRESHOLD`` rows (an ``at_most`` probe, which stops scanning at
-the threshold) and switches to a two-phase assignment past it:
+``surrogate_key`` keeps the cheap global window for inputs the optimizer
+estimates at no more than ``SMALL_BYTES`` (``joins.plan_bytes``: file
+sizes of an already-materialized input, so the route costs no job) and
+switches to a two-phase assignment past it, or when the input's size is
+unknown:
 
 1. range-partition by the ordering columns into ``NUM_PARTS`` ranges
    (deterministic for a given dataset), number rows within each
@@ -26,10 +28,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ra2_datalake_linaresjoan_spark.operators.joins import at_most
+from ra2_datalake_linaresjoan_spark.operators.joins import plan_bytes
 
-#: Inputs of at most this many rows take the single global window.
-SMALL_THRESHOLD = 1_000_000
+#: Inputs estimated at no more than this many bytes take the single
+#: global window (about a million short keys).
+SMALL_BYTES = 64 * 1024 * 1024
 #: Range partitions of the two-phase assignment.
 NUM_PARTS = 64
 
@@ -39,7 +42,7 @@ def surrogate_key(
 ) -> DataFrame:
     """Assign dense 1-based surrogate keys ordered by ``order_cols``."""
     cols = list(order_cols)
-    if at_most(df, SMALL_THRESHOLD):
+    if plan_bytes(df) <= SMALL_BYTES:
         w = Window.orderBy(*cols)
         return df.select(F.row_number().over(w).alias(key_col), *df.columns)
 

@@ -11,16 +11,17 @@ DataFrame plans:
 - ``gaming_summary`` — reference ``transformer_data.py:596-618``.
 
 Every recipe is filter → window-dedup → normalize → fill/coalesce →
-truncate, all Column expressions: one shuffle (the dedup window) per
-entity regardless of data size. Each stage is one projection
-(``select``/``withColumns``), not a ``withColumn`` per column: every
-``withColumn`` re-analyzes the whole plan on the driver, and on a
-43-string-column bronze that chain cost seconds before Spark ran.
+truncate: one shuffle (the dedup window) per entity regardless of data
+size. Each stage is one projection parsed from SQL text
+(``functions.sql.with_sql_columns``), not a ``withColumn`` per column nor
+a Column tree per column: every ``withColumn`` re-analyzes the whole plan
+on the driver, and every Column node is a py4j round-trip — on a
+43-string-column bronze either one cost seconds before Spark ran.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark.functions.classify import (
@@ -28,11 +29,18 @@ from ra2_datalake_linaresjoan_spark.functions.classify import (
     extract_gaming_type,
 )
 from ra2_datalake_linaresjoan_spark.functions.normalize import (
+    coalesce_chain,
     normalize_boolean,
     normalize_null_literals,
     normalize_numeric,
     normalize_outcomes,
+    safe_array_size,
     to_timestamp_coerce,
+)
+from ra2_datalake_linaresjoan_spark.functions.sql import (
+    col_ref,
+    sql_str,
+    with_sql_columns,
 )
 from ra2_datalake_linaresjoan_spark.operators.dedup import dedup_keep_newest
 from ra2_datalake_linaresjoan_spark.operators.filters import (
@@ -71,8 +79,9 @@ _DATE_COLS = ["startDate", "endDate", "creationDate", "createdAt", "updatedAt"]
 def _normalize_string_nulls(df: DataFrame) -> DataFrame:
     """F11 over every string column (spark_cleaner._normalize_nulls), as
     one projection."""
-    return df.withColumns(
-        {c: normalize_null_literals(F.col(c)) for c, t in df.dtypes if t == "string"}
+    return with_sql_columns(
+        df,
+        {c: normalize_null_literals(col_ref(c)) for c, t in df.dtypes if t == "string"},
     )
 
 
@@ -80,24 +89,24 @@ def _has(df: DataFrame, col: str) -> bool:
     return col in df.columns
 
 
-def _typed(df: DataFrame, numerics: list[str], booleans: list[str]) -> dict[str, Column]:
+def _typed(df: DataFrame, numerics: list[str], booleans: list[str]) -> dict[str, str]:
     """Typing expressions for the listed columns ``df`` has: numerics
     (0.0 default), booleans (False default), and every date column
     (timestamp, null on failure)."""
+    cols = df.columns
     out = {
-        c: F.coalesce(normalize_numeric(F.col(c)), F.lit(0.0))
-        for c in numerics
-        if _has(df, c)
+        c: f"coalesce({normalize_numeric(col_ref(c))}, 0.0D)" for c in numerics if c in cols
     }
     out.update(
-        {
-            c: F.coalesce(normalize_boolean(F.col(c)), F.lit(False))
-            for c in booleans
-            if _has(df, c)
-        }
+        {c: f"coalesce({normalize_boolean(col_ref(c))}, false)" for c in booleans if c in cols}
     )
-    out.update({c: to_timestamp_coerce(F.col(c)) for c in _DATE_COLS if _has(df, c)})
+    out.update({c: to_timestamp_coerce(col_ref(c)) for c in _DATE_COLS if c in cols})
     return out
+
+
+def _fill(col: str, default: str) -> str:
+    """``col`` with NULL replaced by the SQL expression ``default``."""
+    return f"coalesce({col_ref(col)}, {default})"
 
 
 def clean_markets(df: DataFrame) -> DataFrame:
@@ -116,24 +125,25 @@ def clean_markets(df: DataFrame) -> DataFrame:
     # the newer '...T08:30Z') and ragged fractional seconds, so coerce
     # to timestamp for the dedup ordering (unparseable → null → loses)
     if sort_col is not None:
-        df = df.withColumn("_sort_ts", to_timestamp_coerce(F.col(sort_col)))
+        df = with_sql_columns(df, {"_sort_ts": to_timestamp_coerce(col_ref(sort_col))})
         df = dedup_keep_newest(df, ["id"], "_sort_ts", tiebreak=()).drop(
             "_sort_ts"
         )
     else:
         df = dedup_keep_newest(df, ["id"], None, tiebreak=())
+    cols = df.columns
     out = _typed(df, _NUMERIC_COLS, ["active", "closed", "featured"])
     fills = {
-        "resolutionSource": F.lit("Sin fuente"),
-        "slug": F.col("id").cast("string"),
-        "outcomes": F.lit("[]"),
-        "description": F.lit("Sin descripción"),
+        "resolutionSource": sql_str("Sin fuente"),
+        "slug": f"CAST({col_ref('id')} AS STRING)",
+        "outcomes": sql_str("[]"),
+        "description": sql_str("Sin descripción"),
     }
-    out.update({c: F.coalesce(c, v) for c, v in fills.items() if _has(df, c)})
+    out.update({c: _fill(c, v) for c, v in fills.items() if c in cols})
     for c, n in {"question": 500, "slug": 500, "resolutionSource": 500}.items():
-        if _has(df, c):
-            out[c] = F.substring(out.get(c, F.col(c)).cast("string"), 1, n)
-    return df.withColumns(out)
+        if c in cols:
+            out[c] = f"substring(CAST({out.get(c, col_ref(c))} AS STRING), 1, {n})"
+    return with_sql_columns(df, out)
 
 
 def clean_events(df: DataFrame) -> DataFrame:
@@ -146,14 +156,15 @@ def clean_events(df: DataFrame) -> DataFrame:
         "createdAt" if _has(df, "createdAt") else None
     )
     df = dedup_keep_newest(df, ["id"], sort_col, tiebreak=())
+    cols = df.columns
     out = _typed(df, [], ["active", "closed", "featured", "resolved"])
-    title_chain = [c for c in ["title", "ticker", "slug"] if _has(df, c)]
+    title_chain = [col_ref(c) for c in ["title", "ticker", "slug"] if c in cols]
     if title_chain:
-        out["title"] = F.coalesce(*[F.col(c) for c in title_chain], F.lit("Sin título"))
+        out["title"] = coalesce_chain(*title_chain, default="Sin título")
     for c, v in {"category": "Gaming", "subcategory": "General"}.items():
-        if _has(df, c):
-            out[c] = F.coalesce(c, F.lit(v))
-    return df.withColumns(out)
+        if c in cols:
+            out[c] = _fill(c, sql_str(v))
+    return with_sql_columns(df, out)
 
 
 def clean_series(df: DataFrame) -> DataFrame:
@@ -162,12 +173,13 @@ def clean_series(df: DataFrame) -> DataFrame:
     df = _normalize_string_nulls(df)
     df = df.filter(non_null_non_blank("id"))
     df = dedup_keep_newest(df, ["id"], "updatedAt" if _has(df, "updatedAt") else None)
+    cols = df.columns
     out = {}
-    if _has(df, "slug"):
-        out["slug"] = F.coalesce("slug", F.col("id").cast("string"))
-    if _has(df, "title") and _has(df, "description"):
-        out["description"] = F.coalesce("description", "title")
-    return df.withColumns(out)
+    if "slug" in cols:
+        out["slug"] = _fill("slug", f"CAST({col_ref('id')} AS STRING)")
+    if "title" in cols and "description" in cols:
+        out["description"] = _fill("description", col_ref("title"))
+    return with_sql_columns(df, out)
 
 
 def gaming_market_filter(df: DataFrame, text_col: str = "question") -> DataFrame:
@@ -192,17 +204,15 @@ def enrich_gaming_markets(df: DataFrame) -> DataFrame:
     Two projections: ``outcome_count`` reads the parsed ``outcomes_list``
     instead of parsing the outcomes a second time."""
     out = {
-        "gaming_type": extract_gaming_type(F.col("question")),
-        "bet_type": extract_bet_type(F.col("question")),
+        "gaming_type": extract_gaming_type(col_ref("question")),
+        "bet_type": extract_bet_type(col_ref("question")),
     }
     derived = {}
     if _has(df, "outcomes"):
-        out["outcomes_list"] = normalize_outcomes(F.col("outcomes"))
-        derived["outcome_count"] = F.when(
-            F.col("outcomes_list").isNull(), F.lit(0)
-        ).otherwise(F.size("outcomes_list"))
-    derived["category_simplified"] = F.lit("Gaming")
-    return df.withColumns(out).withColumns(derived)
+        out["outcomes_list"] = normalize_outcomes(col_ref("outcomes"))
+        derived["outcome_count"] = safe_array_size(col_ref("outcomes_list"))
+    derived["category_simplified"] = sql_str("Gaming")
+    return with_sql_columns(with_sql_columns(df, out), derived)
 
 
 def gaming_summary(df: DataFrame) -> DataFrame:
@@ -210,30 +220,41 @@ def gaming_summary(df: DataFrame) -> DataFrame:
     volume/liquidity sums+avgs, outcome-count buckets — one aggregate job.
     Schema-tolerant: absent metric columns contribute nulls/zeros (the
     reference's defensive column checks, transformer_data.py:580-616)."""
-    for c, dtype, default in (
-        ("liquidity", "double", None),
-        ("volume", "double", None),
-        ("outcome_count", "int", 0),
-        # the aggregate references these unconditionally — a feed without
-        # them must contribute zero counts, not an UNRESOLVED_COLUMN
-        ("active", "boolean", False),
-        ("closed", "boolean", False),
-    ):
-        if c not in df.columns:
-            fill = F.lit(default).cast(dtype)
-            df = df.withColumn(c, fill)
+    cols = df.columns
+    missing = {
+        c: f"CAST({default} AS {dtype})"
+        for c, dtype, default in (
+            ("liquidity", "DOUBLE", "NULL"),
+            ("volume", "DOUBLE", "NULL"),
+            ("outcome_count", "INT", "0"),
+            # the aggregate references these unconditionally — a feed
+            # without them must contribute zero counts, not an
+            # UNRESOLVED_COLUMN
+            ("active", "BOOLEAN", "false"),
+            ("closed", "BOOLEAN", "false"),
+        )
+        if c not in cols
+    }
+    if missing:
+        df = with_sql_columns(df, missing)
+    counts = {
+        "n_active": "active",
+        "n_closed": "closed",
+        "n_binary": "outcome_count = 2",
+        "n_triple": "outcome_count = 3",
+        "n_multi": "outcome_count >= 4",
+    }
+    aggs = [
+        "count(1) AS n_markets",
+        "round(coalesce(sum(volume), 0.0D), 4) AS total_volume",
+        "round(coalesce(avg(volume), 0.0D), 4) AS avg_volume",
+        "round(coalesce(sum(liquidity), 0.0D), 4) AS total_liquidity",
+    ] + [
+        f"CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT) AS {name}"
+        for name, cond in counts.items()
+    ]
     return (
         df.groupBy("gaming_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_markets"),
-            F.round(F.coalesce(F.sum("volume"), F.lit(0.0)), 4).alias("total_volume"),
-            F.round(F.coalesce(F.avg("volume"), F.lit(0.0)), 4).alias("avg_volume"),
-            F.round(F.coalesce(F.sum("liquidity"), F.lit(0.0)), 4).alias("total_liquidity"),
-            F.sum(F.when(F.col("active"), 1).otherwise(0)).cast("long").alias("n_active"),
-            F.sum(F.when(F.col("closed"), 1).otherwise(0)).cast("long").alias("n_closed"),
-            F.sum(F.when(F.col("outcome_count") == 2, 1).otherwise(0)).cast("long").alias("n_binary"),
-            F.sum(F.when(F.col("outcome_count") == 3, 1).otherwise(0)).cast("long").alias("n_triple"),
-            F.sum(F.when(F.col("outcome_count") >= 4, 1).otherwise(0)).cast("long").alias("n_multi"),
-        )
+        .agg(*[F.expr(a) for a in aggs])
         .orderBy(F.col("n_markets").desc(), F.col("gaming_type"))
     )

@@ -24,7 +24,7 @@ seed → NULL; the engine falls back to 'Esports General' as documented.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark.functions.calendar import build_date_dim
@@ -33,6 +33,11 @@ from ra2_datalake_linaresjoan_spark.functions.json_utils import (
     parse_struct_labels,
 )
 from ra2_datalake_linaresjoan_spark.functions.normalize import clean_string
+from ra2_datalake_linaresjoan_spark.functions.sql import (
+    col_ref,
+    sql_str,
+    with_sql_columns,
+)
 from ra2_datalake_linaresjoan_spark.operators.bridges import explode_bridge
 
 #: Seed game catalog (loader_NeonDB.py:118-132) + engine fallback row.
@@ -53,12 +58,22 @@ GAME_CATALOG: list[tuple[str, str, bool]] = [
 ]
 
 
-def _c(df: DataFrame, name: str, dtype: str = "string"):
-    """Schema-tolerant column access: absent columns become typed nulls —
-    the Spark analog of the reference's defensive ``r.get(col)`` pattern
-    (loader_NeonDB.py passim; bronze schemas are whatever the API returned
-    that day, SURVEY §1.3)."""
-    return F.col(name) if name in df.columns else F.lit(None).cast(dtype)
+def _c(df: DataFrame, name: str, dtype: str = "string") -> str:
+    """Schema-tolerant column access as SQL text: absent columns become
+    typed nulls — the Spark analog of the reference's defensive
+    ``r.get(col)`` pattern (loader_NeonDB.py passim; bronze schemas are
+    whatever the API returned that day, SURVEY §1.3)."""
+    return col_ref(name) if name in df.columns else f"CAST(NULL AS {dtype})"
+
+
+def _flag(df: DataFrame, name: str) -> str:
+    """A boolean column, False when absent or NULL."""
+    return f"coalesce({_c(df, name, 'boolean')}, false)"
+
+
+def _with_default(expr: str, default: str) -> str:
+    """``expr`` with NULL replaced by the string ``default``."""
+    return f"coalesce({expr}, {sql_str(default)})"
 
 
 def dim_videojuego(spark: SparkSession) -> DataFrame:
@@ -77,49 +92,45 @@ def dim_videojuego(spark: SparkSession) -> DataFrame:
 
 
 def dim_serie(series: DataFrame) -> DataFrame:
-    return series.filter(F.col("id").isNotNull()).select(
-        F.col("id").cast("string").alias("serie_id"),
-        clean_string(_c(series, "slug"), 500).alias("serie_slug"),
-        clean_string(_c(series, "title"), 2048).alias("titulo"),
-        clean_string(_c(series, "description"), 5000).alias("descripcion"),
+    return series.filter("id IS NOT NULL").selectExpr(
+        "CAST(id AS STRING) AS serie_id",
+        f"{clean_string(_c(series, 'slug'), 500)} AS serie_slug",
+        f"{clean_string(_c(series, 'title'), 2048)} AS titulo",
+        f"{clean_string(_c(series, 'description'), 5000)} AS descripcion",
     )
 
 
 def _serie_id_of_event(events: DataFrame) -> DataFrame:
     """seriesId wins over the first id inside the embedded series JSON
     (loader_NeonDB.py:327-343)."""
-    from_json_id = extract_ids(F.col("series"))[0] if "series" in events.columns else F.lit(None)
-    explicit = (
-        F.col("seriesId").cast("string") if "seriesId" in events.columns else F.lit(None)
-    )
-    return events.withColumn("_serie_id", F.coalesce(explicit, from_json_id))
+    cols = events.columns
+    from_json_id = f"{extract_ids(col_ref('series'))}[0]" if "series" in cols else "NULL"
+    explicit = "CAST(seriesId AS STRING)" if "seriesId" in cols else "NULL"
+    return with_sql_columns(events, {"_serie_id": f"coalesce({explicit}, {from_json_id})"})
 
 
 def dim_evento(events: DataFrame, dim_serie_df: DataFrame) -> DataFrame:
     """Event dim with serie FK nulled when the serie doesn't exist
     (loader_NeonDB.py:344-345) — left join instead of a driver-side set."""
-    ev = _serie_id_of_event(events).filter(F.col("id").isNotNull())
-    valid = dim_serie_df.select(F.col("serie_id").alias("_valid_sid")).distinct()
-    ev = ev.join(
-        F.broadcast(valid), ev["_serie_id"] == F.col("_valid_sid"), "left"
-    )
-    return ev.select(
-        F.col("id").cast("string").alias("evento_id"),
-        clean_string(_c(ev, "title"), 2048).alias("titulo"),
-        clean_string(_c(ev, "category"), 200).alias("categoria"),
-        clean_string(_c(ev, "subcategory"), 200).alias("subcategoria"),
-        clean_string(_c(ev, "ticker"), 500).alias("ticker"),
-        clean_string(_c(ev, "slug"), 500).alias("slug"),
-        F.coalesce(_c(ev, "active", "boolean"), F.lit(False)).alias("es_activo"),
-        F.coalesce(_c(ev, "closed", "boolean"), F.lit(False)).alias("es_cerrado"),
-        F.coalesce(_c(ev, "featured", "boolean"), F.lit(False)).alias("es_destacado"),
-        _c(ev, "creationDate", "timestamp").alias("fecha_creacion"),
-        _c(ev, "startDate", "timestamp").alias("fecha_inicio"),
-        _c(ev, "endDate", "timestamp").alias("fecha_fin"),
-        F.coalesce(clean_string(_c(ev, "resolutionSource"), 500), F.lit("Sin fuente")).alias(
-            "fuente_resolucion"
-        ),
-        F.when(F.col("_valid_sid").isNotNull(), F.col("_serie_id")).alias("serie_id"),
+    ev = _serie_id_of_event(events).filter("id IS NOT NULL")
+    valid = dim_serie_df.selectExpr("serie_id AS _valid_sid").distinct()
+    ev = ev.join(F.broadcast(valid), F.expr("_serie_id = _valid_sid"), "left")
+    return ev.selectExpr(
+        "CAST(id AS STRING) AS evento_id",
+        f"{clean_string(_c(ev, 'title'), 2048)} AS titulo",
+        f"{clean_string(_c(ev, 'category'), 200)} AS categoria",
+        f"{clean_string(_c(ev, 'subcategory'), 200)} AS subcategoria",
+        f"{clean_string(_c(ev, 'ticker'), 500)} AS ticker",
+        f"{clean_string(_c(ev, 'slug'), 500)} AS slug",
+        f"{_flag(ev, 'active')} AS es_activo",
+        f"{_flag(ev, 'closed')} AS es_cerrado",
+        f"{_flag(ev, 'featured')} AS es_destacado",
+        f"{_c(ev, 'creationDate', 'timestamp')} AS fecha_creacion",
+        f"{_c(ev, 'startDate', 'timestamp')} AS fecha_inicio",
+        f"{_c(ev, 'endDate', 'timestamp')} AS fecha_fin",
+        f"{_with_default(clean_string(_c(ev, 'resolutionSource'), 500), 'Sin fuente')} "
+        "AS fuente_resolucion",
+        "CASE WHEN _valid_sid IS NOT NULL THEN _serie_id END AS serie_id",
     )
 
 
@@ -132,11 +143,9 @@ def dim_tag(events: DataFrame) -> DataFrame:
     from ra2_datalake_linaresjoan_spark.operators.surrogate import surrogate_key
 
     labels = (
-        events.select(
-            F.explode(parse_struct_labels(_c(events, "tags"))).alias("tag_nombre")
-        )
-        .where(F.trim("tag_nombre") != "")
-        .select(F.trim("tag_nombre").alias("tag_nombre"))
+        events.selectExpr(f"explode({parse_struct_labels(_c(events, 'tags'))}) AS tag_nombre")
+        .where("trim(tag_nombre) != ''")
+        .selectExpr("trim(tag_nombre) AS tag_nombre")
         .distinct()
     )
     return surrogate_key(labels, ["tag_nombre"], key_col="tag_id")
@@ -146,37 +155,32 @@ def dim_mercado(markets: DataFrame, dim_videojuego_df: DataFrame) -> DataFrame:
     """Market dim with videojuego FK via broadcast lookup; unknown →
     'Esports General' (documented divergence from the reference's
     'Other Gaming' bug)."""
-    vj = F.broadcast(
-        dim_videojuego_df.select(
-            F.col("nombre_juego").alias("_vj_name"), F.col("videojuego_id")
-        )
+    vj = F.broadcast(dim_videojuego_df.selectExpr("nombre_juego AS _vj_name", "videojuego_id"))
+    m = with_sql_columns(
+        markets.filter("id IS NOT NULL"),
+        {"_game": _with_default(_c(markets, "gaming_type"), "Esports General")},
     )
-    m = markets.filter(F.col("id").isNotNull()).withColumn(
-        "_game",
-        F.coalesce(_c(markets, "gaming_type"), F.lit("Esports General")),
+    m = m.join(vj, F.expr("_game = _vj_name"), "left")
+    fallback = dim_videojuego_df.filter("nombre_juego = 'Esports General'").selectExpr(
+        "videojuego_id AS _fallback_id"
     )
-    m = m.join(vj, m["_game"] == F.col("_vj_name"), "left")
-    fallback = dim_videojuego_df.filter(
-        F.col("nombre_juego") == "Esports General"
-    ).select(F.col("videojuego_id").alias("_fallback_id"))
     m = m.crossJoin(F.broadcast(fallback))
-    return m.select(
-        F.col("id").cast("string").alias("mercado_id"),
-        clean_string(_c(m, "question"), 2000).alias("pregunta"),
-        clean_string(_c(m, "bet_type"), 100).alias("tipo_apuesta"),
-        F.coalesce(F.col("videojuego_id"), F.col("_fallback_id")).alias("videojuego_id"),
-        clean_string(_c(m, "slug"), 500).alias("slug"),
-        F.coalesce(_c(m, "active", "boolean"), F.lit(False)).alias("esta_activo"),
-        F.coalesce(_c(m, "closed", "boolean"), F.lit(False)).alias("esta_cerrado"),
-        _c(m, "endDate", "timestamp").alias("fecha_fin"),
-        F.substring(F.to_json(_c(m, "outcomes_list", "array<string>")), 1, 2000).alias("outcomes"),
+    return m.selectExpr(
+        "CAST(id AS STRING) AS mercado_id",
+        f"{clean_string(_c(m, 'question'), 2000)} AS pregunta",
+        f"{clean_string(_c(m, 'bet_type'), 100)} AS tipo_apuesta",
+        "coalesce(videojuego_id, _fallback_id) AS videojuego_id",
+        f"{clean_string(_c(m, 'slug'), 500)} AS slug",
+        f"{_flag(m, 'active')} AS esta_activo",
+        f"{_flag(m, 'closed')} AS esta_cerrado",
+        f"{_c(m, 'endDate', 'timestamp')} AS fecha_fin",
+        f"substring(to_json({_c(m, 'outcomes_list', 'array<string>')}), 1, 2000) AS outcomes",
         # clean_string (not raw substring, matching dim_serie/dim_evento):
         # '' normalizes to null so the 'Sin fuente' coalesce actually fires
-        F.coalesce(clean_string(_c(m, "resolutionSource"), 500), F.lit("Sin fuente")).alias(
-            "fuente_resolucion"
-        ),
-        _c(m, "createdAt", "timestamp").alias("creado_en"),
-        _c(m, "updatedAt", "timestamp").alias("actualizado_en"),
+        f"{_with_default(clean_string(_c(m, 'resolutionSource'), 500), 'Sin fuente')} "
+        "AS fuente_resolucion",
+        f"{_c(m, 'createdAt', 'timestamp')} AS creado_en",
+        f"{_c(m, 'updatedAt', 'timestamp')} AS actualizado_en",
     )
 
 
@@ -184,12 +188,11 @@ def fact_mercado_evento(markets: DataFrame, dim_evento_df: DataFrame, dim_mercad
     """Market↔event bridge from markets' embedded events JSON, kept only
     when both FK sides exist (loader_NeonDB.py:457-514)."""
     pairs = explode_bridge(
-        markets.select(
-            F.col("id").cast("string").alias("mercado_id"),
-            _c(markets, "events").alias("events"),
+        markets.selectExpr(
+            "CAST(id AS STRING) AS mercado_id", f"{_c(markets, 'events')} AS events"
         ),
         "mercado_id",
-        extract_ids(F.col("events")),
+        F.expr(extract_ids("events")),
         "evento_id",
     )
     pairs = pairs.join(dim_mercado_df.select("mercado_id"), "mercado_id", "left_semi")
@@ -200,12 +203,12 @@ def fact_evento_tag(events: DataFrame, dim_evento_df: DataFrame, dim_tag_df: Dat
     """Event↔tag bridge: explode parsed tag labels, resolve tag_id via
     broadcast join (loader_NeonDB.py:516-551)."""
     pairs = (
-        events.select(
-            F.col("id").cast("string").alias("evento_id"),
-            F.explode(parse_struct_labels(_c(events, "tags"))).alias("tag_nombre"),
+        events.selectExpr(
+            "CAST(id AS STRING) AS evento_id",
+            f"explode({parse_struct_labels(_c(events, 'tags'))}) AS tag_nombre",
         )
-        .where(F.trim("tag_nombre") != "")
-        .select("evento_id", F.trim("tag_nombre").alias("tag_nombre"))
+        .where("trim(tag_nombre) != ''")
+        .selectExpr("evento_id", "trim(tag_nombre) AS tag_nombre")
         .distinct()
     )
     pairs = pairs.join(dim_evento_df.select("evento_id"), "evento_id", "left_semi")
@@ -221,23 +224,24 @@ def fact_metricas(markets: DataFrame, dim_fecha_df: DataFrame) -> DataFrame:
     null/unparseable has no date FK and the reference's NOT NULL fecha_id
     insert skips it — the inner join reproduces that; the validator's
     row-count check surfaces the delta when it matters."""
-    m = markets.filter(F.col("id").isNotNull()).withColumn(
-        "_fecha", F.to_date(_c(markets, "updatedAt", "timestamp"))
+    m = with_sql_columns(
+        markets.filter("id IS NOT NULL"),
+        {"_fecha": f"to_date({_c(markets, 'updatedAt', 'timestamp')})"},
     )
-    fd = F.broadcast(dim_fecha_df.select("fecha_id", F.col("fecha").alias("_fecha")))
-    return (
-        m.join(fd, "_fecha")
-        .select(
-            F.col("id").cast("string").alias("mercado_id"),
-            F.col("fecha_id"),
-            _c(m, "volume", "double").alias("volumen_total"),
-            _c(m, "liquidity", "double").alias("liquidez_total"),
-            _c(m, "lastTradePrice", "double").alias("precio_ultimo"),
-            _c(m, "bestBid", "double").alias("mejor_compra"),
-            _c(m, "bestAsk", "double").alias("mejor_venta"),
-            _c(m, "spread", "double").alias("spread"),
-            _c(m, "openInterest", "double").alias("interes_abierto"),
-        )
+    fd = F.broadcast(dim_fecha_df.selectExpr("fecha_id", "fecha AS _fecha"))
+    metrics = {
+        "volume": "volumen_total",
+        "liquidity": "liquidez_total",
+        "lastTradePrice": "precio_ultimo",
+        "bestBid": "mejor_compra",
+        "bestAsk": "mejor_venta",
+        "spread": "spread",
+        "openInterest": "interes_abierto",
+    }
+    return m.join(fd, "_fecha").selectExpr(
+        "CAST(id AS STRING) AS mercado_id",
+        "fecha_id",
+        *[f"{_c(m, c, 'double')} AS {alias}" for c, alias in metrics.items()],
     )
 
 

@@ -484,9 +484,13 @@ def q_join_reorder_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct(key).alias("ndv"),
         )
 
-    def est(pair_name, left, right, truth):
+    def est(pair_name, left, right, semi):
+        # the truth is the semi-joined child's row count, aggregated
+        # inside the returned plan (no eager count at build time)
+        truth = semi.agg(F.count(F.lit(1)).alias("actual_rows"))
         return (
             left.crossJoin(right)
+            .crossJoin(truth)
             .select(
                 F.lit(pair_name).alias("join_pair"),
                 # DECIMAL(38,0) product (overflow-safe past 2^63) and an
@@ -497,7 +501,7 @@ def q_join_reorder_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "CAST(CAST(l_rows AS DECIMAL(38,0)) * r_rows"
                     " div greatest(l_ndv, r_ndv, 1) AS BIGINT)"
                 ).alias("est_rows"),
-                truth.alias("actual_rows"),
+                F.col("actual_rows"),
             )
         )
 
@@ -513,34 +517,34 @@ def q_join_reorder_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unhinted; nation is a fixed 25-row dimension and stays an
     # unconditional broadcast.
     cust_keys = cust.select(F.col("c_custkey").alias("o_custkey"))
-    o_in_c = orders.join(cust_keys, "o_custkey", "left_semi").count()
+    o_in_c = orders.join(cust_keys, "o_custkey", "left_semi")
     l_in_o = li.join(
         orders.select(F.col("o_orderkey").alias("l_orderkey")),
         "l_orderkey",
         "left_semi",
-    ).count()
+    )
     c_in_n = cust.join(
         F.broadcast(
             nation.select(F.col("n_nationkey").alias("c_nationkey"))
         ),
         "c_nationkey",
         "left_semi",
-    ).count()
-    r1 = est("customer*orders", cs, os_, F.lit(o_in_c))
+    )
+    r1 = est("customer*orders", cs, os_, o_in_c)
     ls = stats(li, "l_orderkey").select(
         F.col("rows").alias("l_rows"), F.col("ndv").alias("l_ndv")
     )
     os2 = stats(orders, "o_orderkey").select(
         F.col("rows").alias("r_rows"), F.col("ndv").alias("r_ndv")
     )
-    r2 = est("lineitem*orders", ls, os2, F.lit(l_in_o))
+    r2 = est("lineitem*orders", ls, os2, l_in_o)
     ns = stats(nation, "n_nationkey").select(
         F.col("rows").alias("l_rows"), F.col("ndv").alias("l_ndv")
     )
     cs2 = stats(cust, "c_nationkey").select(
         F.col("rows").alias("r_rows"), F.col("ndv").alias("r_ndv")
     )
-    r3 = est("nation*customer", ns, cs2, F.lit(c_in_n))
+    r3 = est("nation*customer", ns, cs2, c_in_n)
     out = r1.unionByName(r2).unionByName(r3)
     return out.select(
         "join_pair",

@@ -39,9 +39,14 @@ def stream_merge_sink(
     makes their application idempotent."""
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_upsert(batch_df.sparkSession, path, batch_df, keys, mode="upsert")
+        # the emptiness check and the merge are two actions over the
+        # batch: persisted, its stateful aggregation runs once
+        batch_df.persist()
+        try:
+            if not batch_df.isEmpty():
+                merge_upsert(batch_df.sparkSession, path, batch_df, keys, mode="upsert")
+        finally:
+            batch_df.unpersist()
 
     writer = (
         stream_df.writeStream.foreachBatch(_apply)

@@ -194,17 +194,23 @@ def scd2_stream_sink(
     marker = checkpoint_dir.rstrip("/") + "/__scd2_epoch_marker__"
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        scd2_apply_epoch(
-            batch_df.sparkSession,
-            path,
-            batch_df,
-            key,
-            state,
-            ts,
-            tiebreak,
-            epoch_id=epoch_id,
-            marker_path=marker,
-        )
+        # the epoch checks emptiness and then folds the batch: persisted,
+        # the source files are read once per micro-batch
+        batch_df.persist()
+        try:
+            scd2_apply_epoch(
+                batch_df.sparkSession,
+                path,
+                batch_df,
+                key,
+                state,
+                ts,
+                tiebreak,
+                epoch_id=epoch_id,
+                marker_path=marker,
+            )
+        finally:
+            batch_df.unpersist()
 
     return (
         stream_df.writeStream.foreachBatch(_apply)

@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from ra2_datalake_linaresjoan_spark.functions import (
     calendar_parts,
@@ -27,8 +26,9 @@ from ra2_datalake_linaresjoan_spark.functions.json_utils import (
 
 
 def _apply(spark, fn, values):
+    """Apply a SQL-text builder to a one-string-column frame of ``values``."""
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    return [r["out"] for r in df.select(fn(F.col("v")).alias("out")).collect()]
+    return [r["out"] for r in df.selectExpr(f"{fn('v')} AS out").collect()]
 
 
 def test_normalize_boolean_zoo(spark):
@@ -109,7 +109,7 @@ def test_calendar_parts_monday_zero(spark):
     df = spark.createDataFrame(
         [(datetime.date(2026, 8, 10),), (datetime.date(2026, 8, 15),)], "d date"
     )
-    rows = df.select(*calendar_parts(F.col("d"))).collect()
+    rows = df.selectExpr(*calendar_parts("d")).collect()
     mon, sat = rows
     assert mon["dia_semana"] == 0 and mon["es_finde"] is False
     assert sat["dia_semana"] == 5 and sat["es_finde"] is True
@@ -118,7 +118,7 @@ def test_calendar_parts_monday_zero(spark):
 
 def test_safe_array_size(spark):
     df = spark.createDataFrame([([1, 2],), (None,)], "v array<int>")
-    out = [r["n"] for r in df.select(safe_array_size(F.col("v")).alias("n")).collect()]
+    out = [r["n"] for r in df.selectExpr(f"{safe_array_size('v')} AS n").collect()]
     assert out == [2, 0]
 
 
@@ -170,3 +170,70 @@ def test_parse_struct_labels_reference_per_element_semantics(spark):
          "not json"],
     )
     assert out == [[], ["A", "plain"], ["padded"], None]
+
+
+def _code_points(spark):
+    """One row per Unicode scalar value (every code point but the
+    surrogates) as the one-character string ``c``. Each is decoded from
+    UTF-32 behind a byte-order mark, so U+FEFF is kept as a character."""
+    return (
+        spark.range(0x110000)
+        .where("id < 55296 OR id > 57343")
+        .selectExpr("decode(unhex(concat('0000FEFF', lpad(hex(id), 8, '0'))), 'UTF-32') AS c")
+    )
+
+
+def _assert_same(df, expr: str, reference: str) -> None:
+    """``expr`` and ``reference`` agree (NULL-safe) on every ``s`` of ``df``.
+    Counted in an aggregate: as a filter, the two expressions fuse into
+    one generated method too large for the JIT to compile."""
+    pair = df.selectExpr("s", f"{expr} AS a", f"{reference} AS b")
+    if pair.selectExpr("count_if(NOT (a <=> b)) AS n").first()["n"]:
+        raise AssertionError(pair.where("NOT (a <=> b)").limit(5).collect())
+
+
+def test_normalize_boolean_fold_equals_lower_on_every_code_point(spark, monkeypatch):
+    """The word fold decides exactly what ``lower()`` decided: over every
+    code point alone, and spliced into every true/false word (inserted at
+    each position and substituted for each letter), the builder equals
+    its ``lower()`` form."""
+    from ra2_datalake_linaresjoan_spark.functions import normalize
+    from ra2_datalake_linaresjoan_spark.functions.sql import sql_str
+
+    folded = normalize.normalize_boolean("s")
+    monkeypatch.setattr(normalize, "_word_fold", lambda e: f"lower({e})")
+    lowered = normalize.normalize_boolean("s")
+    words = normalize._TRUE_WORDS + normalize._FALSE_WORDS
+    splices = {("", "")}
+    splices |= {(w[:i], w[i:]) for w in words for i in range(len(w) + 1)}
+    splices |= {(w[:i], w[i + 1 :]) for w in words for i in range(len(w))}
+    spliced = _code_points(spark).selectExpr(
+        "explode(array({})) AS s".format(
+            ", ".join(f"concat({sql_str(a)}, c, {sql_str(b)})" for a, b in sorted(splices))
+        )
+    )
+    _assert_same(spliced, folded, lowered)
+
+
+def test_normalize_outcomes_translate_equals_upper(spark):
+    """ASCII elements take the translate, the rest ``upper()``; together
+    they equal ``upper()`` on every element: named non-ASCII cases whose
+    upper case changes length or script, and every code point alone and
+    inside ASCII text."""
+    from ra2_datalake_linaresjoan_spark.functions.normalize import (
+        _jsonish_array,
+        _non_empty,
+        normalize_outcomes,
+    )
+
+    upper_form = _non_empty(
+        f"filter(transform({_jsonish_array('s')}, x -> upper(trim(x))), x -> x != '')",
+        "ARRAY<STRING>",
+    )
+    named = spark.createDataFrame(
+        [("['sí', 'ß', 'İ', ' straße ', 'ﬁ', 'ǅ', ' Yes', 'no ']",)], "s string"
+    )
+    row = named.selectExpr(f"{normalize_outcomes('s')} AS a", f"{upper_form} AS b").first()
+    assert row["a"] == row["b"] == ["SÍ", "SS", "İ", "STRASSE", "FI", "Ǆ", "YES", "NO"]
+    every = _code_points(spark).selectExpr("concat('[\\'', c, '\\', \\' a', c, 'z \\']') AS s")
+    _assert_same(every, normalize_outcomes("s"), upper_form)

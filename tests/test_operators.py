@@ -299,7 +299,7 @@ def test_surrogate_key_modes_agree(spark, monkeypatch):
         )
     ).distinct()
     small = {(r["sk"], r["name"]) for r in surrogate_key(df, ["name"]).collect()}
-    monkeypatch.setattr(surrogate, "SMALL_THRESHOLD", 10)
+    monkeypatch.setattr(surrogate, "SMALL_BYTES", 10)
     monkeypatch.setattr(surrogate, "NUM_PARTS", 8)
     big_df = surrogate_key(df, ["name"])
     big = {(r["sk"], r["name"]) for r in big_df.collect()}

@@ -207,38 +207,77 @@ def test_dim_videojuego_is_a_local_relation(spark):
     ]
 
 
-def test_build_gold_fires_only_the_tag_key_probe(spark, silver, monkeypatch):
-    """Building gold runs no Spark job except the dim_tag surrogate-key
-    size probe: the bridges join their dimension keys lazily, with no
-    probe of their own."""
+@pytest.fixture(scope="module")
+def silver_read_back(spark, silver, tmp_path_factory):
+    """The silver frames written to parquet and read back with their
+    schema, as run_pipeline hands them to build_gold."""
+    base = tmp_path_factory.mktemp("silver")
+    out = []
+    for i, df in enumerate(silver):
+        path = str(base / f"silver{i}")
+        df.write.parquet(path)
+        out.append(spark.read.schema(df.schema).parquet(path))
+    return tuple(out)
+
+
+def test_build_gold_fires_no_job(spark, silver_read_back):
+    """Building gold over silver read back from parquet, as run_pipeline
+    does, runs no Spark job: the bridges join their dimension keys
+    lazily, and dim_tag's surrogate-key route comes from the plan's size
+    estimate instead of a probe."""
     import uuid
 
-    import ra2_datalake_linaresjoan_spark.operators.surrogate as surrogate
-
     sc = spark.sparkContext
-    build, probe = f"gold_build_{uuid.uuid4().hex}", f"gold_probe_{uuid.uuid4().hex}"
-    calls = []
-    surrogate_at_most = surrogate.at_most
-
-    def grouped_probe(df, n):
-        calls.append(n)
-        sc.setJobGroup(probe, "dim_tag surrogate probe")
-        try:
-            return surrogate_at_most(df, n)
-        finally:
-            sc.setJobGroup(build, "build_gold")
-
-    monkeypatch.setattr(surrogate, "at_most", grouped_probe)
+    build = f"gold_build_{uuid.uuid4().hex}"
     sc.setJobGroup(build, "build_gold")
     try:
-        build_gold(spark, *silver)
+        build_gold(spark, *silver_read_back)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    assert calls == [surrogate.SMALL_THRESHOLD]
-    assert tracker.getJobIdsForGroup(probe)
-    assert tracker.getJobIdsForGroup(build) == []
+    assert sc.statusTracker().getJobIdsForGroup(build) == []
+
+
+def test_medallion_plans_map_no_ascii_case(spark, silver, silver_read_back):
+    """No silver or gold plan calls lower(), and upper() only on the
+    outcome elements that are not pure ASCII: Spark 4 maps case through
+    ICU, whose first call in a JVM loads its case tables (about 1.5 s)."""
+    plans = [df._jdf.queryExecution().optimizedPlan().toString() for df in silver]
+    gold = build_gold(spark, *silver_read_back)
+    plans += [df._jdf.queryExecution().optimizedPlan().toString() for df in gold.values()]
+    text = "\n".join(plans)
+    assert "lower(" not in text
+    assert text.count("upper(") == text.count("ELSE upper(") > 0
+    assert "WHEN (octet_length(lambda x" in text
+
+
+def test_medallion_builders_py4j_budget(spark, raw, silver_read_back, monkeypatch):
+    """Building the silver recipes and the gold star schema parses SQL
+    text per stage instead of building a Column tree per column, each
+    node of which is one py4j round-trip to the JVM."""
+    import gc
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    gc.collect()  # release earlier tests' proxies outside the count
+    monkeypatch.setattr(client, "send_command", counting)
+    markets, events, series = raw
+    enrich_gaming_markets(gaming_market_filter(clean_markets(markets)))
+    clean_events(events)
+    clean_series(series)
+    silver_calls = len(calls)
+    build_gold(spark, *silver_read_back)
+    gold_calls = len(calls) - silver_calls
+    monkeypatch.undo()
+    # about 400 and 600 calls; a Column tree per column took 9,400 and 5,000
+    assert silver_calls <= 1000, silver_calls
+    assert gold_calls <= 1000, gold_calls
 
 
 def test_clean_markets_is_a_few_projections(raw):

@@ -7,8 +7,10 @@ warehouse load throughput. This harness replays the engine's whole
 medallion flow (`cli.run_pipeline` — the same function the CLI runs,
 writing silver and gold into a temporary lake) on the messy pipeline
 fixtures replicated to a comparable row count, and prints ONE JSON line
-with wall seconds, rows/s and the Spark jobs the ``run_pipeline`` call
-fired (its job group in the status tracker).
+with wall seconds, rows/s, the Spark jobs the ``run_pipeline`` call
+fired (its job group in the status tracker) and the py4j commands it sent
+to the JVM (driver-side plan construction; each Column node built in
+Python is one).
 
 Run: python tools/pipeline_bench.py [n_copies]   (default 50000 ≈ 450 K rows)
 """
@@ -67,7 +69,17 @@ def main() -> None:
 
     lake = tempfile.mkdtemp(prefix="pipeline_bench_")
     sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    py4j_calls = 0
+
+    def counting(*args, **kwargs):
+        nonlocal py4j_calls
+        py4j_calls += 1
+        return send(*args, **kwargs)
+
     sc.setJobGroup("run_pipeline", "cli.run_pipeline")
+    client.send_command = counting
     try:
         t0 = time.perf_counter()
         out = run_pipeline(
@@ -76,6 +88,7 @@ def main() -> None:
         )
         wall = time.perf_counter() - t0
     finally:
+        client.send_command = send
         sc.setLocalProperty("spark.jobGroup.id", None)
         shutil.rmtree(lake, ignore_errors=True)
     # the status store fills from the listener bus; drain it before counting
@@ -93,6 +106,7 @@ def main() -> None:
                 "rows_in": n_in,
                 "rows_per_sec": int(n_in / wall),
                 "spark_jobs": jobs,
+                "py4j_calls": py4j_calls,
                 "validation_clean": ok,
                 "baseline_envelope_sec": "180-300 (reference 3-5 min end-to-end)",
             }
